@@ -950,7 +950,7 @@ ONL_STATE_PARTS = 8
 # average cell at sf0.01, so the cap provably binds on testdata too.
 ONL_CELL_CAP = 24
 
-_ONL_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> staged 6-file arrival dir
+_ONL_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> staged 2-file merged arrival dir
 _ONL_SINK_CACHE: list[str] = []  # previous invocation's memory-sink table
 _ONL_CKPT_CACHE: dict[str, str] = {}  # sf_dir -> completed UNCAPPED run's checkpoint
 
@@ -1910,10 +1910,14 @@ def _cov_kernel_partials(batches):
 def _cov_kernel_safe(e: DataFrame) -> bool:
     """The kernel's input contract: dense cells only (the JVM SUM skips
     NULL cells; np.vstack cannot) and every possible pair product under
-    the repr-divergence bound. One tiny aggregate over the cached rows."""
+    the repr-divergence bound. One tiny aggregate over the cached rows.
+    A whole-NULL ``emb`` needs its own term: ``exists`` over it is NULL,
+    which ``max`` would skip."""
     row = e.agg(
         F.max(F.expr("array_max(transform(emb, x -> abs(x)))")).alias("mx"),
-        F.max(F.exists("emb", lambda x: x.isNull()).cast("int")).alias("nulls"),
+        F.max(
+            (F.col("emb").isNull() | F.exists("emb", lambda x: x.isNull())).cast("int")
+        ).alias("nulls"),
     ).collect()[0]
     return (
         row["mx"] is not None

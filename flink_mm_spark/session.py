@@ -107,6 +107,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # PySpark's own worker daemon minus its per-task zip-archive
+        # re-read (~200 ms a Python task on CPython < 3.12; pydaemon.py)
+        .config("spark.python.daemon.module", "flink_mm_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

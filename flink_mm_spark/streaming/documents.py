@@ -843,16 +843,19 @@ def drain_with_timers(
         return bool(srcs) and all(s["startOffset"] == s["endOffset"] for s in srcs)
 
     t0 = time.monotonic()
+    # batchIds of the file-consuming batches seen so far, kept across polls:
+    # recentProgress holds only the last numRecentProgressUpdates entries
+    consumed: set[int] = set()
     while q.isActive:
         progress = q.recentProgress
         drained = len(progress) >= 2 and no_file(progress[-1]) and no_file(
             progress[-2]
         )
         if expected_batches is not None and not drained:
-            consumed = sum(
-                1 for p in progress if p.get("sources") and not no_file(p)
+            consumed.update(
+                p["batchId"] for p in progress if p.get("sources") and not no_file(p)
             )
-            drained = consumed >= expected_batches
+            drained = len(consumed) >= expected_batches
         if drained and time.monotonic() - t0 >= min_elapsed_s:
             q.stop()
             break

@@ -862,8 +862,8 @@ def test_cov_kernel_equals_jvm_fallback(spark):
 def test_cov_guard_routes_paths(spark):
     """r14: the kernel guard must reject corpora the cast replica is not
     proven on — any |x|² at or beyond the repr-divergence bound, and any
-    NULL cell (the JVM SUM skips null cells; np.vstack cannot) — and
-    accept the real corpus."""
+    NULL cell or whole-NULL array (the JVM SUM skips null cells;
+    np.vstack cannot) — and accept the real corpus."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -886,3 +886,10 @@ def test_cov_guard_routes_paths(spark):
         [([0.1] * 63 + [None],)], "emb array<double>"
     )
     assert not _cov_kernel_safe(nulled)
+
+    # a whole-NULL array beside dense rows: ``exists`` over it is NULL,
+    # which ``max`` alone would skip
+    whole_null = spark.createDataFrame(
+        [([0.1] * 64,), (None,)], "emb array<double>"
+    )
+    assert not _cov_kernel_safe(whole_null)

@@ -1565,3 +1565,36 @@ def test_drain_with_timers_expected_batches_skips_empty_wait(spark, tmp_path):
     assert sum(1 for p in fast_prog if no_file(p)) <= 1, len(fast_prog)
     key = lambda rows: sorted((r["doc_a"], r["doc_b"], r["est_jaccard"]) for r in rows)  # noqa: E731
     assert key(fast) == key(slow)
+
+
+def test_drain_with_timers_counts_batches_past_progress_window():
+    """The expected-batches fast path counts consumed batchIds across polls:
+    ``recentProgress`` keeps only the last numRecentProgressUpdates entries,
+    so a count over it alone never reaches a total larger than that window."""
+    from flink_mm_spark.streaming.documents import drain_with_timers
+
+    class WindowedQuery:
+        """One more file-consuming batch per poll; progress window of 2."""
+
+        def __init__(self):
+            self.isActive = True
+            self.batches = []
+
+        @property
+        def recentProgress(self):
+            bid = len(self.batches)
+            self.batches.append(
+                {"batchId": bid, "sources": [{"startOffset": bid, "endOffset": bid + 1}]}
+            )
+            return self.batches[-2:]
+
+        def stop(self):
+            self.isActive = False
+
+        def awaitTermination(self):
+            pass
+
+    q = WindowedQuery()
+    drain_with_timers(q, poll_s=0.0, max_wall_s=5.0, expected_batches=5)
+    assert not q.isActive
+    assert len(q.batches) == 5
