@@ -89,7 +89,11 @@ def _bytes_conf(v: str) -> int:
     return int(float(v))
 
 
-def spread_batches(stream: DataFrame, src: str | None = None) -> DataFrame:
+def spread_batches(
+    stream: DataFrame,
+    src: str | None = None,
+    max_files_per_trigger: int | None = 1,
+) -> DataFrame:
     """Fan each micro-batch out to the session's cores BEFORE the
     per-batch signature/quality stages (r13 optimization, guide §2.5
     input skew): with ``maxFilesPerTrigger=1`` a micro-batch arrives as
@@ -109,12 +113,17 @@ def spread_batches(stream: DataFrame, src: str | None = None) -> DataFrame:
     already arrives as ≥ cores scan splits and re-shuffling the wide raw
     rows is pure cost. A streaming DataFrame's per-batch partition count
     is not knowable at plan time, but the SOURCE layout is: with
-    ``src`` given, the guard estimates the SMALLEST single-file batch's
-    split count from the staged files and ``maxPartitionBytes`` and
-    skips the exchange when even that batch saturates the cores (every
-    batch at least as wide → rebalance buys nothing). Locally the
-    arrival files are ≪ one split each, so the plan is unchanged here;
-    the guard exists for the large-file deployment (SCALE.md)."""
+    ``src`` given, the guard estimates the NARROWEST batch's split count
+    from the staged files and ``maxPartitionBytes`` and skips the
+    exchange when even that batch saturates the cores (every batch at
+    least as wide → rebalance buys nothing). ``max_files_per_trigger``
+    must be the stream's own trigger granularity: with a cap (default 1,
+    the per-file arrival streams), a batch may hold a single file, so the
+    narrowest batch is the smallest file's split count; without one
+    (None), one batch takes every staged file, so it is the summed
+    size's. Locally the arrival files are ≪ one split each, so the plan
+    is unchanged here; the guard exists for the large-file deployment
+    (SCALE.md)."""
     import glob
     import math
     import os
@@ -129,9 +138,8 @@ def spread_batches(stream: DataFrame, src: str | None = None) -> DataFrame:
             mpb = _bytes_conf(
                 spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
             )
-            # one file per trigger (every caller here): the narrowest
-            # batch is the smallest file's split count
-            if max(1, math.ceil(min(sizes) / mpb)) >= par:
+            narrowest = sum(sizes) if max_files_per_trigger is None else min(sizes)
+            if max(1, math.ceil(narrowest / mpb)) >= par:
                 return stream
     return stream.repartition(par)
 
@@ -1311,7 +1319,7 @@ def _corpus_to_shards(spark: SparkSession, sf_dir: str, strict: bool) -> DataFra
     # on the few-file micro-batch (r13; pure per-document function, and
     # the writer re-keys on shard_id anyway so layout is unchanged)
     doc_stream = (
-        spread_batches(documents_stream(spark, src), src)
+        spread_batches(documents_stream(spark, src), src, max_files_per_trigger=None)
         .withColumn("n_tok", n_tok.cast("bigint"))
         .withColumn("shard_id", F.pmod("doc_id", F.lit(CTS_SHARDS)).cast("bigint"))
         .select("doc_id", "n_tok", "shard_id")

@@ -7,6 +7,9 @@ Structured Streaming correctness invariant.
 
 from __future__ import annotations
 
+import math
+import os
+
 import numpy as np
 import pytest
 
@@ -1598,3 +1601,41 @@ def test_drain_with_timers_counts_batches_past_progress_window():
     drain_with_timers(q, poll_s=0.0, max_wall_s=5.0, expected_batches=5)
     assert not q.isActive
     assert len(q.batches) == 5
+
+
+def test_spread_batches_guard_sizes_batch_by_trigger_granularity(spark, tmp_path):
+    """The many-split guard skips the round-robin exchange only when the
+    narrowest micro-batch already saturates the cores: one file per
+    trigger → the smallest file's splits; a whole-dir batch
+    (``max_files_per_trigger=None``) → the summed size's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_mm_spark.streaming.documents import documents_stream, spread_batches
+
+    par = spark.sparkContext.defaultParallelism
+    if par < 2:
+        pytest.skip("with one core every batch saturates it")
+    src = str(tmp_path / "arrivals")
+    os.makedirs(src)
+    for i in range(2):
+        pq.write_table(
+            pa.table({"doc_id": pa.array(range(i * 50, i * 50 + 50), pa.int64())}),
+            os.path.join(src, f"part{i}.parquet"),
+        )
+    sizes = [os.path.getsize(os.path.join(src, f)) for f in os.listdir(src)]
+    # the summed size spans at least `par` splits, the smallest file fewer
+    mpb = sum(sizes) // par
+    assert math.ceil(sum(sizes) / mpb) >= par > math.ceil(min(sizes) / mpb)
+
+    stream = documents_stream(spark, src)
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
+        assert spread_batches(stream, src, max_files_per_trigger=None) is stream
+        assert spread_batches(stream, src, max_files_per_trigger=1) is not stream
+        assert spread_batches(stream, src) is not stream  # default: one file
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 * sum(sizes)))
+        assert spread_batches(stream, src, max_files_per_trigger=None) is not stream
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
