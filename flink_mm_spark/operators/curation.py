@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from flink_mm_spark.operators.dedup import block_pair_cosine, tokens_expr
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import keep_latest
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 # SemDeDup seed centroids: the k lowest vec_ids (deterministic, no RNG).
@@ -224,9 +225,6 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BLP_CACHE: list[DataFrame] = []  # persisted bigram-count table (module cache)
-
-
 @register(
     "bigram_logprob",
     oracle=r"""
@@ -293,10 +291,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "p.x", "p.y")
     )
-    while _BLP_CACHE:
-        _BLP_CACHE.pop().unpersist()
-    c = b.groupBy("x", "y").agg(F.count(F.lit(1)).alias("c_xy")).persist()
-    _BLP_CACHE.append(c)
+    c = keep_latest("blp_pairs", b.groupBy("x", "y").agg(F.count(F.lit(1)).alias("c_xy")))
     cx = c.groupBy("x").agg(F.sum("c_xy").cast("bigint").alias("c_x"))
     vv = (
         toks.select(F.explode("t").alias("tok"))
@@ -551,7 +546,6 @@ def dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 SUBSTR_DEDUP_K = 10  # minimum duplicated-span width in tokens
-_SUBSTR_CACHE: list = []  # persisted tokenized table (module-cache pattern)
 
 
 @register(
@@ -678,10 +672,7 @@ def substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     K = SUBSTR_DEDUP_K
     d = parallelize_scan(table(spark, sf_dir, "documents").select("doc_id", "text"))
-    while _SUBSTR_CACHE:
-        _SUBSTR_CACHE.pop().unpersist()
-    t = d.select("doc_id", tokens_expr().alias("a")).persist()
-    _SUBSTR_CACHE.append(t)
+    t = keep_latest("substr_toks", d.select("doc_id", tokens_expr().alias("a")))
     n = F.size("a")
     spans = F.when(
         n >= K,
@@ -1012,9 +1003,6 @@ def _novelty_oracle() -> str:
     """
 
 
-_NOV_CACHE: list = []  # persisted (doc_id, gram-hash) table
-
-
 @register("ngram_novelty", oracle=_novelty_oracle())
 def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document novelty: the fraction of a document's distinct 5-word
@@ -1041,20 +1029,17 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache."""
     from flink_mm_spark.operators.dedup import shingles_from_tokens, tokens_expr
 
-    while _NOV_CACHE:
-        _NOV_CACHE.pop().unpersist()
     d = parallelize_scan(table(spark, sf_dir, "documents"))
-    g = (
+    g = keep_latest(
+        "novelty_grams",
         d.select("doc_id", tokens_expr().alias("_toks"))
         .select("doc_id", F.explode(shingles_from_tokens("_toks", NOVELTY_K)).alias("gram"))
         .select(
             "doc_id",
             F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long").alias("g"),
         )
-        .distinct()
-        .persist()
+        .distinct(),
     )
-    _NOV_CACHE.append(g)
     dfreq = g.groupBy("g").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     return (
         g.join(dfreq, "g")

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import keep_latest
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 # Rows per packed block in the embedding_near_dup block-pair GEMM: bounds a
@@ -177,7 +178,6 @@ def gram_hash_cte(key: str, k: int, name: str = "g") -> str:
     )"""
 
 
-
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -286,7 +286,6 @@ _JACCARD_ORACLE = (
     ORDER BY doc_a, doc_b
 """
 )
-
 
 
 def _posting_jaccard(posting: DataFrame, threshold: float) -> DataFrame:
@@ -437,9 +436,6 @@ _MH_A = _rng.randint(1, MINHASH_MOD, size=N_PERM).astype(np.int64)
 _MH_B = _rng.randint(0, MINHASH_MOD, size=N_PERM).astype(np.int64)
 
 _EMPTY_SIG = [int(MINHASH_MOD)] * N_PERM  # signature of a shingle-less doc
-
-_SIG_CACHE: list[DataFrame] = []  # last persisted signatures (bounds cache leak)
-_BPC_CACHE: list[DataFrame] = []  # last persisted block-pack (block_pair_cosine)
 
 
 def _slot_match_udf():
@@ -602,10 +598,7 @@ def _banded_pairs(
     - Scoring: the shared vectorized numpy slot-match kernel, one Arrow
       stage (never an interpreted per-pair zip_with fold).
     """
-    while _SIG_CACHE:
-        _SIG_CACHE.pop().unpersist()
-    sigs = sigs.persist()
-    _SIG_CACHE.append(sigs)
+    sigs = keep_latest("minhash_sigs", sigs)
     bands = sigs.select(
         "doc_id",
         "source",
@@ -920,25 +913,19 @@ def _keep_best_oracle() -> str:
     """
 
 
-_KB_CACHE: list = []  # persisted quality/pair tables (unpersisted next call)
-
-
 def _kb_tables(spark: SparkSession, sf_dir: str):
     """(q, pq, losers): the persisted (n_tok, micro-quality) table, the
     flag-attached candidate pairs, and the distinct loser ids of the
     keep-best decision — shared by ``dedup_keep_best`` and the keep-best
-    funnel variant (``corpus_prep_pipeline_keepbest``). Owns the
-    ``_KB_CACHE`` swap (q and pq each feed 2+ downstream consumers)."""
-    while _KB_CACHE:
-        _KB_CACHE.pop().unpersist()
+    funnel variant (``corpus_prep_pipeline_keepbest``). q and pq each
+    feed 2+ downstream consumers, so both are held by ``keep_latest``."""
     docs = parallelize_scan(table(spark, sf_dir, "documents"))
     n_tok, q_score = kb_quality_cols()
     q = docs.select(
         "doc_id",
         n_tok.alias("n_tok"),
         q_score.alias("q_score"),
-    ).persist()
-    _KB_CACHE.append(q)
+    )
     pq = (
         _mhx_pairs(spark, sf_dir, sort=False)
         .select("doc_a", "doc_b")
@@ -958,9 +945,8 @@ def _kb_tables(spark: SparkSession, sf_dir: str):
             ),
             "doc_b",
         )
-        .persist()
     )
-    _KB_CACHE.append(pq)
+    q, pq = keep_latest("kb_tables", q, pq)
     losers = pq.select(_kb_loser_expr().alias("doc_id")).distinct()
     return q, pq, losers
 
@@ -1419,14 +1405,13 @@ def block_pair_cosine(
     # scan→assign→window→pack subtree executes three times (r5, found
     # profiling semantic_dedup at 300k synthetic vectors). The packed form
     # is the corpus at ~1× size (ids + normalized doubles), safely
-    # cacheable; previous invocation's cache is released on next call, the
-    # _SIG_CACHE pattern.
-    while _BPC_CACHE:
-        _BPC_CACHE.pop().unpersist()
-    packed = blocked.groupBy(*knames, "blk").applyInPandas(
-        pack, f"{kddl}blk int, ids array<long>, mat array<double>"
-    ).persist()
-    _BPC_CACHE.append(packed)
+    # cacheable.
+    packed = keep_latest(
+        "bpc_packed",
+        blocked.groupBy(*knames, "blk").applyInPandas(
+            pack, f"{kddl}blk int, ids array<long>, mat array<double>"
+        ),
+    )
 
     # upper-triangular block-pair keys from the key columns alone (tiny), then
     # attach each side's payload by equi-join — the heavy arrays only ever
@@ -1488,7 +1473,6 @@ def block_pair_cosine(
 # higher thresholds) sit far up the recall curve.
 EMB_LSH_BANDS = 16
 EMB_LSH_PLANES = 6
-_EMB_LSH_CACHE: list[DataFrame] = []
 
 
 @register("embedding_near_dup_lsh", oracle=None)  # approximate → rows-only
@@ -1518,15 +1502,14 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pd.Series(list(keyed))
 
     e = embeddings64(spark, sf_dir)
-    while _EMB_LSH_CACHE:
-        _EMB_LSH_CACHE.pop().unpersist()
     # Candidate generation runs on (vec_id, bucket) ONLY — 16-byte shuffle
     # rows. Carrying the embedding arrays through the bucket join and the
     # pair dedup would multiply every shuffle by ~64× (1 KB/row); instead
     # the deduped id pairs re-attach vectors with two equi-joins on vec_id
     # (auto-broadcast locally; plain shuffle hash joins at corpus scale).
-    banded = e.select("vec_id", F.explode(band_keys("emb")).alias("bucket")).persist()
-    _EMB_LSH_CACHE.append(banded)
+    banded = keep_latest(
+        "emb_lsh_banded", e.select("vec_id", F.explode(band_keys("emb")).alias("bucket"))
+    )
 
     a = banded.select(F.col("vec_id").alias("vec_a"), "bucket")
     b = banded.select(F.col("vec_id").alias("vec_b"), "bucket")
@@ -1563,9 +1546,6 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.col("cos_sim").desc(), "vec_a", "vec_b")
 
 
-_JPF_CACHE: list[DataFrame] = []
-
-
 @register("jaccard_prefix_filtered", oracle=_JACCARD_ORACLE)
 def jaccard_prefix_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set Jaccard ≥ 0.7 with PPJoin-style prefix filtering —
@@ -1594,11 +1574,10 @@ def jaccard_prefix_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = 0.7
     d = parallelize_scan(table(spark, sf_dir, "documents"))
     # the token pipeline feeds freq, posting AND both verify sides: persist
-    # once (previous invocation's cache released, same pattern as minhash)
-    while _JPF_CACHE:
-        _JPF_CACHE.pop().unpersist()
-    sets = d.select("doc_id", "source", F.array_distinct(tokens_expr()).alias("sh")).persist()
-    _JPF_CACHE.append(sets)
+    # it once
+    sets = keep_latest(
+        "jpf_sets", d.select("doc_id", "source", F.array_distinct(tokens_expr()).alias("sh"))
+    )
 
     # global document frequency per token → rarity rank (ties by token)
     freq = (

@@ -37,7 +37,9 @@ from pyspark.sql import functions as F
 from flink_mm_spark.operators.dedup import norm_text, shingles_from_tokens, tokens_expr
 from flink_mm_spark.operators.text import STOPWORDS, _sql_list
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import keep_latest
 from flink_mm_spark.sources.tables import parallelize_scan, table
+from flink_mm_spark.streaming.runner import run_stream, staged
 
 # Redaction patterns — plain character classes + bounded repetition only,
 # so Java regex (Spark) and RE2 (DuckDB) agree on every match.
@@ -668,7 +670,6 @@ def weighted_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sequence packing: fixed token budget per training sequence (the
 # concatenate-then-chunk step of GPT-style pretraining ingestion).
 SEQ_TOKEN_BUDGET = 512
-_PACK_CACHE: list[DataFrame] = []
 
 
 @register(
@@ -747,8 +748,6 @@ def pack_by_counts(
         ).alias("shuffle_key"),
     )
     n_parts = spark.sparkContext.defaultParallelism
-    while _PACK_CACHE:
-        _PACK_CACHE.pop().unpersist()
     # INVARIANT (ADVICE r2): the offset map collected below is keyed by the
     # partition ids of THIS persisted layout. If cached partitions are
     # evicted between the totals collect() and the mapInPandas pass, the
@@ -757,13 +756,12 @@ def pack_by_counts(
     # pid assignment, so the map stays valid. Deterministic input is the
     # load-bearing assumption: a non-deterministic upstream (e.g. a sample)
     # would need a checkpoint here instead of a persist.
-    parts = (
+    parts = keep_latest(
+        "pack_parts",
         docs.repartitionByRange(n_parts, "shuffle_key", *key_cols)
         .sortWithinPartitions("shuffle_key", *key_cols)
-        .select(F.spark_partition_id().alias("pid"), *key_cols, "n_tok")
-        .persist()
+        .select(F.spark_partition_id().alias("pid"), *key_cols, "n_tok"),
     )
-    _PACK_CACHE.append(parts)
 
     totals = {
         r["pid"]: r["tot"]
@@ -1043,9 +1041,6 @@ def shard_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shard_rollup(back)
 
 
-_SAS_SRC_CACHE: dict[str, str] = {}  # sf_dir -> staged packed-slice stream dir
-
-
 def idempotent_shard_append(df: DataFrame, batch_id: int, dst: str) -> None:
     """EXACTLY-ONCE micro-batch shard append (VERDICT r10 #1).
 
@@ -1141,16 +1136,15 @@ def shard_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm/MatrixMultiply.java:88-103 (write-then-compare oracle pattern)."""
     from flink_mm_spark.session import scratch_dir
 
-    src = _SAS_SRC_CACHE.get(sf_dir)
-    if src is None:
-        # stage the packed slice stream as 4 arrival files, cached per
-        # (process, sf_dir): the rollup is order- and split-independent,
-        # so reuse changes cost, not semantics (the _arrival_split rule)
-        src = scratch_dir("sas_src_")
-        _with_shard_id(_mixture_packed(spark, sf_dir)).repartition(4).write.mode(
+    # the packed slice stream as 4 arrival files (the rollup is order- and
+    # split-independent)
+    src = staged(
+        sf_dir,
+        "sas_src_",
+        lambda d: _with_shard_id(_mixture_packed(spark, sf_dir)).repartition(4).write.mode(
             "overwrite"
-        ).parquet(src)
-        _SAS_SRC_CACHE[sf_dir] = src
+        ).parquet(d),
+    )
     slice_schema = spark.read.parquet(src).schema
     dst = scratch_dir("sas_dst_")  # fresh per invocation: appends accumulate
     stream = (
@@ -1159,15 +1153,12 @@ def shard_append_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "*.parquet")
         .parquet(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: idempotent_shard_append(df, bid, dst)
-        )
-        .option("checkpointLocation", scratch_dir("sas_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        stream,
+        "sas",
+        foreach=lambda df, bid: idempotent_shard_append(df, bid, dst),
+        state_parts=None,
     )
-    q.awaitTermination()
     return _shard_rollup(read_back_shards(spark, dst))
 
 
@@ -1204,9 +1195,6 @@ def _xso_oracle() -> str:
     """
 
 
-_XSO_CACHE: list = []  # persisted (source, gram-hash) table
-
-
 @register("cross_source_overlap", oracle=_xso_oracle())
 def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-source contamination matrix: for every OVERLAPPING pair of
@@ -1227,20 +1215,17 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-source totals re-attach by broadcast (|sources| rows). The gram
     table feeds the totals aggregate AND the self-join, so it persists via
     the module cache."""
-    while _XSO_CACHE:
-        _XSO_CACHE.pop().unpersist()
     d = parallelize_scan(table(spark, sf_dir, "documents"))
-    g = (
+    g = keep_latest(
+        "xso_grams",
         d.select("source", tokens_expr().alias("_toks"))
         .select("source", F.explode(shingles_from_tokens("_toks", _XSO_K)).alias("gram"))
         .select(
             "source",
             F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long").alias("g"),
         )
-        .distinct()
-        .persist()
+        .distinct(),
     )
-    _XSO_CACHE.append(g)
     tot = g.groupBy("source").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     a, b = g.alias("a"), g.alias("b")
     sh = (

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import keep_latest
 from flink_mm_spark.sources.tables import table
 
 
@@ -1331,10 +1332,6 @@ def user_funnel_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-# gapfill's persisted rollup (see builder note on release timing)
-_GAPFILL_CACHE: list = []
-
-
 @register(
     "events_minutely_gapfill",
     oracle="""
@@ -1371,19 +1368,13 @@ def events_minutely_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers (CLAUDE.md timestamp rule).
     """
     e = table(spark, sf_dir, "events")
-    # previous invocation's cache released here (the returned plan must
-    # stay executable, so the builder can't unpersist its own cache)
-    while _GAPFILL_CACHE:
-        _GAPFILL_CACHE.pop().unpersist()
-    m = (
-        e.groupBy(F.date_trunc("minute", "ts").alias("minute"))
-        .agg(
+    m = keep_latest(
+        "gapfill_minutes",
+        e.groupBy(F.date_trunc("minute", "ts").alias("minute")).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-        )
-        .persist()
+        ),
     )
-    _GAPFILL_CACHE.append(m)
     grid = (
         m.agg(F.min("minute").alias("lo"), F.max("minute").alias("hi"))
         .select(

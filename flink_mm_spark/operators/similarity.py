@@ -23,7 +23,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import keep_latest
 from flink_mm_spark.sources.tables import table
+from flink_mm_spark.streaming.runner import run_stream, staged
 
 EMB_DIM = 64
 
@@ -132,7 +134,6 @@ def knn_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("cell"),
     )
     return _cogroup_cell_topk(members, probers, k=3)
-
 
 
 def _cogroup_cell_topk(members: DataFrame, probers: DataFrame, k: int = 3) -> DataFrame:
@@ -582,10 +583,6 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PQS_NQ = 4  # streamed query vectors (vec_id 0..3), one arrival file each
 
-_PQS_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> staged query-arrival dir
-_PQS_CODES_CACHE: list[DataFrame] = []  # last persisted corpus code table
-
-
 def _pq_encode_block(cb: np.ndarray, pdf: pd.DataFrame) -> np.ndarray:
     """(n, PQ_S) int64 code matrix for one Arrow batch of (vec_id, emb)
     rows: per subspace, the argmin-distance codebook row (first min =
@@ -605,18 +602,15 @@ def _pqs_query_split(spark: SparkSession, sf_dir: str) -> str:
     strictly increasing mtimes, so the file source delivers them one per
     micro-batch in qid order — the same content-determined arrival
     staging as ``deterministic_arrival_split`` (streaming/documents.py).
-    Cached per (process, sf_dir); the result is arrival-order independent
-    (each query's top-k depends only on the static index), so reuse
-    changes cost, not semantics."""
+    Staged once per (process, sf_dir); the result is arrival-order
+    independent (each query's top-k depends only on the static index)."""
     import glob
     import os
     import shutil
 
     from flink_mm_spark.session import scratch_dir
 
-    src = _PQS_SPLIT_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir("pqs_q_")
+    def write(src: str) -> None:
         e = embeddings64(spark, sf_dir)
         t0 = int(os.path.getmtime(src)) - 3600
         # ONE pass for all PQS_NQ query files (VERDICT r12 nit): a
@@ -639,8 +633,8 @@ def _pqs_query_split(spark: SparkSession, sf_dir: str) -> str:
             shutil.move(parts[0], dst)
             os.utime(dst, (t0 + 10 * k, t0 + 10 * k))
         shutil.rmtree(tmp, ignore_errors=True)
-        _PQS_SPLIT_CACHE[sf_dir] = src
-    return src
+
+    return staged(sf_dir, "pqs_q_", write)
 
 
 def _pqs_oracle() -> str:
@@ -738,16 +732,11 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     # the static index: encode once, persist for every micro-batch's scan
-    # (module-cache swap bounds the leak, the _SIG_CACHE pattern)
-    while _PQS_CODES_CACHE:
-        _PQS_CODES_CACHE.pop().unpersist()
-    codes = (
-        e.select("vec_id", "emb")
-        .mapInPandas(encode, "vec_id long, codes array<long>")
-        .persist()
+    codes = keep_latest(
+        "pqs_codes",
+        e.select("vec_id", "emb").mapInPandas(encode, "vec_id long, codes array<long>"),
     )
     codes.count()
-    _PQS_CODES_CACHE.append(codes)
 
     spool = scratch_dir("pqs_out_")
 
@@ -808,22 +797,13 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(_pqs_query_split(spark, sf_dir))
     )
-    q = (
-        qstream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", scratch_dir("pqs_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(qstream, "pqs", foreach=score_batch, state_parts=None)
     return (
         spark.read.parquet(spool)
         .drop("ingest")
         .withColumn("rnk", F.col("rnk").cast("int"))
         .orderBy("qid", "rnk")
     )
-
-
-_PQE_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> 4-file embedding-arrival dir
 
 
 def _pqe_oracle() -> str:
@@ -884,13 +864,13 @@ def pq_encode_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = embeddings64(spark, sf_dir)
     cb = _pq_codebook(e)
-    src = _PQE_SPLIT_CACHE.get(sf_dir)
-    if src is None:
-        # stage the corpus as 4 arrival files (order-independent output,
-        # so a plain repartition split suffices — the _arrival_split rule)
-        src = scratch_dir("pqe_src_")
-        e.select("vec_id", "emb").repartition(4).write.mode("overwrite").parquet(src)
-        _PQE_SPLIT_CACHE[sf_dir] = src
+    # the corpus as 4 arrival files (order-independent output, so a plain
+    # repartition split suffices)
+    src = staged(
+        sf_dir,
+        "pqe_src_",
+        lambda d: e.select("vec_id", "emb").repartition(4).write.mode("overwrite").parquet(d),
+    )
 
     def encode(batches):
         for pdf in batches:
@@ -911,16 +891,14 @@ def pq_encode_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(f"{dst}/ingest={bid}")
 
-    q = (
+    run_stream(
         spark.readStream.schema("vec_id long, emb array<double>")
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(append_codes)
-        .option("checkpointLocation", scratch_dir("pqe_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+        .parquet(src),
+        "pqe",
+        foreach=append_codes,
+        state_parts=None,
     )
-    q.awaitTermination()
     return spark.read.parquet(dst).drop("ingest").orderBy("vec_id")
 
 
@@ -950,8 +928,6 @@ ONL_STATE_PARTS = 8
 # average cell at sf0.01, so the cap provably binds on testdata too.
 ONL_CELL_CAP = 24
 
-_ONL_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> staged 2-file merged arrival dir
-_ONL_SINK_CACHE: list[str] = []  # previous invocation's memory-sink table
 _ONL_CKPT_CACHE: dict[str, str] = {}  # sf_dir -> completed UNCAPPED run's checkpoint
 
 
@@ -1131,20 +1107,12 @@ def _onl_arrival_split(spark: SparkSession, sf_dir: str) -> str:
     batch-1 members). The CAPPED tier stages its own 6-file split
     (``_onl_arrival_split_sequential``) — its admission prefix depends on
     per-batch arrival order by contract."""
-    from flink_mm_spark.session import scratch_dir
 
-    src = _ONL_SPLIT_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir("onl_src_")
+    def write(src: str) -> None:
         waves = _onl_wave_dfs(embeddings64(spark, sf_dir))
-        _write_wave_files_onepass(
-            spark, _merge_waves(waves, [[0, 1, 2], [3, 4, 5]]), src
-        )
-        _ONL_SPLIT_CACHE[sf_dir] = src
-    return src
+        _write_wave_files_onepass(spark, _merge_waves(waves, [[0, 1, 2], [3, 4, 5]]), src)
 
-
-_ONL_SEQ_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> 6-file sequential dir
+    return staged(sf_dir, "onl_src_", write)
 
 
 def _onl_arrival_split_sequential(spark: SparkSession, sf_dir: str) -> str:
@@ -1152,14 +1120,14 @@ def _onl_arrival_split_sequential(spark: SparkSession, sf_dir: str) -> str:
     per-cell admission prefix is defined over this exact batch sequence
     (first cap members by (vec_id % ONL_CBATCHES, vec_id) per cell —
     pinned by the replay test)."""
-    from flink_mm_spark.session import scratch_dir
 
-    src = _ONL_SEQ_SPLIT_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir("onls_src_")
-        _write_wave_files_onepass(spark, _onl_wave_dfs(embeddings64(spark, sf_dir)), src)
-        _ONL_SEQ_SPLIT_CACHE[sf_dir] = src
-    return src
+    return staged(
+        sf_dir,
+        "onls_src_",
+        lambda d: _write_wave_files_onepass(
+            spark, _onl_wave_dfs(embeddings64(spark, sf_dir)), d
+        ),
+    )
 
 
 def onl_candidate_stream(
@@ -1392,8 +1360,6 @@ def _onl_run(
     partitions — the state-partition count is pinned into the checkpoint
     at creation, so it is a per-stream knob, not session state (conf
     restored after the run)."""
-    import uuid
-
     from flink_mm_spark.session import scratch_dir
 
     e = embeddings64(spark, sf_dir)
@@ -1405,24 +1371,10 @@ def _onl_run(
     if src is None:
         src = _onl_arrival_split(spark, sf_dir)
     candidates = onl_candidate_stream(spark, src, cb, cell_cap=cell_cap)
-
-    while _ONL_SINK_CACHE:
-        spark.catalog.dropTempView(_ONL_SINK_CACHE.pop())
-    name = f"ivf_pq_online_{uuid.uuid4().hex[:8]}"
-    _ONL_SINK_CACHE.append(name)
     ckpt = scratch_dir("onl_ckpt_")
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark, ONL_STATE_PARTS):
-        q = (
-            candidates.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    name = run_stream(
+        candidates, "ivf_pq_online", ckpt=ckpt, state_parts=ONL_STATE_PARTS
+    )
     if cache_ok:
         # the compaction entry drains exactly this (uncapped) index
         _ONL_CKPT_CACHE[sf_dir] = ckpt
@@ -1484,9 +1436,6 @@ def ivf_pq_topk_streamed_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 ONL_DEL_MOD = 16
 ONL_DEL_RES = 5
 
-_ONL_DEL_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> staged 7-file arrival dir
-
-
 def _onl_del_wave_dfs(e: DataFrame) -> list[DataFrame]:
     """The seven delete-tier waves: corpus 0, corpus 1, query wave A,
     DELETE wave (ids ≡ ONL_DEL_RES mod ONL_DEL_MOD, each carrying its
@@ -1508,17 +1457,12 @@ def _onl_del_arrival_split(spark: SparkSession, sf_dir: str) -> str:
     the delete still lands before corpus 2/3 and wave B still sees the
     post-delete full index — the oracle's candidate predicate is
     unchanged, 2 micro-batches instead of 7."""
-    from flink_mm_spark.session import scratch_dir
 
-    src = _ONL_DEL_SPLIT_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir("onld_src_")
+    def write(src: str) -> None:
         waves = _onl_del_wave_dfs(embeddings64(spark, sf_dir))
-        _write_wave_files_onepass(
-            spark, _merge_waves(waves, [[0, 1, 2], [3, 4, 5, 6]]), src
-        )
-        _ONL_DEL_SPLIT_CACHE[sf_dir] = src
-    return src
+        _write_wave_files_onepass(spark, _merge_waves(waves, [[0, 1, 2], [3, 4, 5, 6]]), src)
+
+    return staged(sf_dir, "onld_src_", write)
 
 
 def _onl_del_oracle() -> str:
@@ -1783,8 +1727,6 @@ def ann_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- embedding covariance / PCA (r10) ---------------------------------------
 
-_COV_CACHE: list[DataFrame] = []  # persisted double-cast embeddings
-
 # ONE oracle behind the batch exactness tier AND the streamed twin
 # (streaming/embeddings.py, r11): both accumulate the identical
 # decimal(28,14) per-row terms — decimal addition is exact and
@@ -2030,15 +1972,12 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce): ~d× less arithmetic but float-order nondeterministic, hence
     rows-only — the classic exact/throughput twin split
     (minhash_lsh_exact / minhash_lsh_pairs)."""
-    while _COV_CACHE:
-        _COV_CACHE.pop().unpersist()
-    e = (
+    e = keep_latest(  # feeds the product terms, the means, and the count
+        "cov_emb",
         table(spark, sf_dir, "embeddings")
         .filter(F.col("embedding").isNotNull())
-        .select(F.col("embedding").cast("array<double>").alias("emb"))
-        .persist()  # feeds the product terms, the means, and the count
+        .select(F.col("embedding").cast("array<double>").alias("emb")),
     )
-    _COV_CACHE.append(e)
     # UPPER-TRIANGLE terms, two interchangeable exact generators (r14,
     # VERDICT r13 #4): the guarded Arrow kernel sums every decimal term
     # as scaled int64/Python-int partials (one mapInPandas pass over the
@@ -2060,8 +1999,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # volume was still d(d+1); the module-cache rule for 2+-consumer
     # DataFrames applies). With it the generator runs once and the
     # mirror reads 2080 cached rows.
-    prods_ut = prods_ut.persist()
-    _COV_CACHE.append(prods_ut)
+    prods_ut = keep_latest("cov_triangle", prods_ut)
     prods = prods_ut.unionByName(
         prods_ut.filter("i < j").select(
             F.col("j").alias("i"), F.col("i").alias("j"), "sxy"

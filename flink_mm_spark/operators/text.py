@@ -21,6 +21,7 @@ from flink_mm_spark.operators.dedup import (  # noqa: F401 — STOPWORDS/_sql_li
     tokens_expr,
 )
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import keep_latest
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 # "BPE-ish" token regex (WORD_REGEX, imported from dedup — the import leaf):
@@ -216,7 +217,6 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- trained character-n-gram language ID (r10) -----------------------------
 
-_LID_CACHE: list[DataFrame] = []  # persisted gram-count table (module cache)
 
 _LANG_ID_ORACLE = """
 WITH t AS (
@@ -268,12 +268,8 @@ def lang_id_ngram_over(docs: DataFrame) -> DataFrame:
     g_tr = base.filter(F.col("doc_id") % 5 != 0).select(
         "lang", F.explode(grams).alias("g")
     )
-    while _LID_CACHE:
-        _LID_CACHE.pop().unpersist()
-    # the profile table feeds its own marginals AND the scoring join — the
-    # bigram_logprob module-cache persist rule
-    c = g_tr.groupBy("lang", "g").agg(F.count(F.lit(1)).alias("c")).persist()
-    _LID_CACHE.append(c)
+    # the profile table feeds its own marginals AND the scoring join
+    c = keep_latest("lid_grams", g_tr.groupBy("lang", "g").agg(F.count(F.lit(1)).alias("c")))
     tot = c.groupBy("lang").agg(F.sum("c").cast("bigint").alias("t"))
     vv = c.agg(F.countDistinct("g").cast("bigint").alias("v"))
     langs = c.select(F.col("lang").alias("cand")).distinct()
@@ -558,7 +554,6 @@ def quality_logit_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 BM25_TERMS = ["scan", "join", "window"]  # fixed query, present at every SF
-_BM25_CACHE: list = []  # persisted tokenized frame (see builder note)
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOPK = 20
@@ -625,12 +620,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (score DESC, doc_id) tie-broken top-k.
     """
     d = table(spark, sf_dir, "documents")
-    # previous invocation's cache released here (the returned plan must
-    # stay executable, so the builder can't unpersist its own cache)
-    while _BM25_CACHE:
-        _BM25_CACHE.pop().unpersist()
-    toks = d.select("doc_id", tokens_expr().alias("toks")).persist()
-    _BM25_CACHE.append(toks)
+    toks = keep_latest("bm25_toks", d.select("doc_id", tokens_expr().alias("toks")))
     dl = toks.select("doc_id", F.size("toks").alias("dl"))
     g = dl.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -684,7 +674,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Collocation mining: bigram PMI
 # ---------------------------------------------------------------------------
 
-_PMI_CACHE: list[DataFrame] = []  # last persisted bigram-count table
 
 # Bigrams are enumerated over the first BG_MAX_TOKENS+1 whitespace tokens per
 # document, bounding the oracle's range() enumeration (the rolling_fingerprints
@@ -753,12 +742,8 @@ def token_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("c_xy")
     )
     # the pair table feeds four consumers (m, cx, cy, final join): persist it
-    # once or Spark re-runs the corpus explode+shuffle per consumer (the
-    # dedup _SIG_CACHE pattern — module cache bounds the leak to one table)
-    while _PMI_CACHE:
-        _PMI_CACHE.pop().unpersist()
-    c = c.persist()
-    _PMI_CACHE.append(c)
+    # once or Spark re-runs the corpus explode+shuffle per consumer
+    c = keep_latest("pmi_pairs", c)
     m = c.agg(F.sum("c_xy").cast("bigint").alias("m_total"))
     cx = c.groupBy("x").agg(F.sum("c_xy").cast("bigint").alias("c_x"))
     cy = c.groupBy("y").agg(F.sum("c_xy").cast("bigint").alias("c_y"))

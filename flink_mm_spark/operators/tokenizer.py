@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from flink_mm_spark.operators.dedup import WORD_REGEX, tokens_expr
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import keep_latest
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 N_MERGES = 6
@@ -534,7 +535,6 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # F.broadcast would OOM the driver building the broadcast relation
 # (VERDICT r7 What's-wrong #2: documented in r7, implemented here).
 ENCODE_BROADCAST_MAX_WORDS = 4_000_000
-_ENC_CACHE: list = []  # persisted encoded-vocab tables (unpersisted next call)
 
 
 def _encoded_words_join(dw: DataFrame, enc: DataFrame) -> DataFrame:
@@ -548,10 +548,7 @@ def _encoded_words_join(dw: DataFrame, enc: DataFrame) -> DataFrame:
     shapes for both tiers are pinned in
     tests/test_plans.py::test_encoded_words_join_broadcast_guard.
     """
-    while _ENC_CACHE:
-        _ENC_CACHE.pop().unpersist()
-    enc = enc.persist()
-    _ENC_CACHE.append(enc)
+    enc = keep_latest("bpe_enc", enc)
     if enc.count() <= ENCODE_BROADCAST_MAX_WORDS:
         return dw.join(F.broadcast(enc), "w")
     return dw.join(enc, "w")
@@ -797,7 +794,6 @@ def bpe_bytes_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 WP_N_MERGES = 6
 WP_CONT = "##"  # continuation prefix for non-word-initial symbols
-_WPE_CACHE: list = []  # wordpiece_encode's persisted word table (module cache)
 
 # One unrolled oracle stage per merge round. WordPiece differs from BPE in
 # exactly two places, both replayed here: (1) the symbol space carries the
@@ -1366,16 +1362,13 @@ def _wp_trained_vocab(docs: DataFrame):
     the longest piece length, and the persisted word-frequency table
     (module-cached; the caller's returned DataFrame executes after the
     calling function returns)."""
-    while _WPE_CACHE:
-        _WPE_CACHE.pop().unpersist()
-    words = (
+    words = keep_latest(
+        "wp_words",
         docs.select(F.explode(F.regexp_extract_all("text", F.lit(WORD_REGEX), 0)).alias("w0"))
         .select(F.lower(F.trim(F.col("w0"))).alias("w"))
         .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .persist()
+        .agg(F.count(F.lit(1)).alias("freq")),
     )
-    _WPE_CACHE.append(words)
     merges = _train_wordpiece_from_words(words, WP_N_MERGES)
     bare = {
         r["c"]
@@ -1812,9 +1805,6 @@ def unigram_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, "piece string, count bigint, logprob double")
 
 
-_UNI_CACHE: list = []  # unigram_encode's persisted word table (module cache)
-
-
 @register("unigram_encode", oracle=None)  # depends on the EM table → rows-only
 def unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram ENCODE: per-document piece counts under the trained table —
@@ -1835,10 +1825,7 @@ def unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus word-count shuffle per consumer."""
     import pandas as pd
 
-    while _UNI_CACHE:
-        _UNI_CACHE.pop().unpersist()
-    words = _unigram_words(spark, sf_dir).persist()
-    _UNI_CACHE.append(words)
+    words = keep_latest("uni_words", _unigram_words(spark, sf_dir))
     rows, _losses = train_unigram(words)
     logp = {p: lp for p, _c, lp in rows}
 
@@ -1991,8 +1978,6 @@ ORDER BY dw.doc_id
 # an opaque value-hash mismatch if the piece length ever changes.
 assert UNI_MAX_PIECE_LEN == 4, "_UVE_ORACLE's DP window is hardcoded to 4 cells"
 
-_UVE_CACHE: list = []  # persisted word/substring tables (unpersisted next call)
-
 
 @register("unigram_viterbi_encode", oracle=_UVE_ORACLE)
 def unigram_viterbi_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2025,8 +2010,6 @@ def unigram_viterbi_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    while _UVE_CACHE:
-        _UVE_CACHE.pop().unpersist()
     docs = parallelize_scan(table(spark, sf_dir, "documents"))
     words = (
         docs.select(
@@ -2035,9 +2018,7 @@ def unigram_viterbi_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lower(F.trim(F.col("w0"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .persist()
     )
-    _UVE_CACHE.append(words)
     subs = (
         words.select(
             "freq",
@@ -2051,9 +2032,8 @@ def unigram_viterbi_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("piece")
         .agg(F.sum("freq").alias("cnt"))
-        .persist()
     )
-    _UVE_CACHE.append(subs)
+    words, subs = keep_latest("uve_words_subs", words, subs)
     seed = (
         subs.orderBy(F.col("cnt").desc(), F.col("piece").asc())
         .limit(UNI_SEED_SIZE)

@@ -30,6 +30,12 @@ the same code runs unchanged on a multi-executor cluster:
   (drops corruption detection) and the RocksDB state provider (its
   commits summed 336-923 ms a batch in the same stream, vs 73-198 ms for
   the default provider under this manager).
+
+Beside the factory sit two process-lifetime helpers: ``scratch_dir`` (temp
+dirs removed at interpreter exit) and ``keep_latest`` (the one live
+persisted generation of a builder's intermediate, released on the next
+call). Streams are started only through ``streaming/runner.py``, which
+owns sinks, checkpoints, state partitions and drains.
 """
 
 from __future__ import annotations
@@ -39,7 +45,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _TMP_ROOT: str | None = None
 
@@ -58,6 +64,28 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_TMP_ROOT)
 
 
+_KEPT: dict[str, tuple[DataFrame, ...]] = {}
+
+
+def keep_latest(key: str, *dfs: DataFrame):
+    """Persist ``dfs`` as the one live generation under ``key``, releasing
+    the previous generation first. For a DataFrame consumed by 2+
+    downstream branches of one builder (Spark re-executes the whole
+    subtree per consumer otherwise): the builder's returned plan executes
+    after it returns, so it cannot unpersist its own cache; the next call
+    does, which bounds the leak to one generation per key.
+
+    Release comes BEFORE persist: a repeat call with the same ``sf_dir``
+    builds a plan equal to the cached one, so Spark's CacheManager treats
+    the new ``persist()`` as a no-op ("already cached"), and unpersisting
+    the old handle afterwards would uncache the new one with it. Returns
+    the persisted DataFrame, or the tuple of them."""
+    for df in _KEPT.pop(key, ()):
+        df.unpersist()
+    _KEPT[key] = tuple(df.persist() for df in dfs)
+    return _KEPT[key][0] if len(dfs) == 1 else _KEPT[key]
+
+
 CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
@@ -66,55 +94,6 @@ CHECKPOINT_FILE_MANAGER = (
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-# State-store partitions for the engine's stateful streams. A stateful
-# streaming stage loads/commits a state store for EVERY shuffle partition
-# EVERY micro-batch — even empty ones — so partitions beyond what the
-# stream can use are pure constant overhead. Two r13 measurements set the
-# policy:
-# - partitions ≫ CORES is always waste: the plain local[8] grading
-#   session inherited 32-partition streams and paid 4-8× (band store
-#   62.8→8.0 s, ingest gate 31.8→9.9 s once cores-matched);
-# - partitions ≪ cores hurts streams with REAL per-key work: the band
-#   stores at sf0.1 on local[32] lost 1.5-2× when forced to 8 (thousands
-#   of live buckets want the parallelism), while small-key streams
-#   (16-cell ANN index, sketch cells, the ingest gates) measured FASTER
-#   at 8 even with 32 cores.
-# Default therefore: min(cores, 32) — cores-matched; streams with a
-# known-small key space pass an explicit ``n``. Per-STREAM (pinned into
-# the checkpoint at stream start), not session state; a cluster
-# deployment sizes it to keys × executors instead. The r13 per-partition
-# costs behind this policy were taken under the FileContext checkpoint
-# manager, whose `readlink` fork per rename inflated every store commit
-# (module docstring): re-measure before re-sizing.
-STREAM_STATE_PARTS_SMALL = 8  # explicit n for known-small key spaces
-
-
-def stream_state_parts(spark: SparkSession, n: int | None = None):
-    """Context manager: run a stream (start → awaitTermination) under
-    ``n`` shuffle partitions (default: cores-matched, capped at 32),
-    restoring the session conf afterwards. foreachBatch inner jobs
-    launched while the stream runs inherit the same setting — intended:
-    per-batch jobs in these streams are state-/batch-sized, not
-    corpus-sized. ``SPARK_GRAFT_STATE_PARTS`` overrides the default."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _ctx():
-        parts = (
-            n
-            or int(os.environ.get("SPARK_GRAFT_STATE_PARTS", "0"))
-            or min(spark.sparkContext.defaultParallelism, 32)
-        )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    return _ctx()
 
 
 def get_spark(

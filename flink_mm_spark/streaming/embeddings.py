@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from flink_mm_spark.operators.similarity import COV_ORACLE, cov_assemble
 from flink_mm_spark.registry import register
 from flink_mm_spark.sources.tables import table
+from flink_mm_spark.streaming.runner import run_stream, staged
 
 EMB_RAW_SCHEMA = T.StructType(
     [
@@ -34,27 +35,6 @@ EMB_RAW_SCHEMA = T.StructType(
         T.StructField("label", T.IntegerType()),
     ]
 )
-
-_EMB_SPLIT_CACHE: dict[str, str] = {}  # sf_dir -> 4-file arrival-split dir
-_COV_SINK_CACHE: list[str] = []  # previous invocation's memory-sink table
-
-
-def _emb_arrival_split(spark: SparkSession, sf_dir: str) -> str:
-    """4-file arrival split of the embeddings corpus, cached per
-    (process, sf_dir) — the documents ``_arrival_split`` pattern; every
-    consumer is batch-split independent (decimal sums), so reuse changes
-    cost, not semantics."""
-    from flink_mm_spark.session import scratch_dir
-
-    src = _EMB_SPLIT_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir("emb_src_")
-        table(spark, sf_dir, "embeddings").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(src)
-        _EMB_SPLIT_CACHE[sf_dir] = src
-    return src
-
 
 def covariance_terms(stream: DataFrame) -> DataFrame:
     """Per-row decimal term stream: each embedding row explodes into its
@@ -108,11 +88,15 @@ def embedding_covariance_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
     production path at 100 TB remains the partial-Gram PCA twin, certified
     against this entry on samples (the exact/throughput split of
     ``embedding_covariance``)."""
-    import uuid
-
-    from flink_mm_spark.session import scratch_dir
-
-    src = _emb_arrival_split(spark, sf_dir)
+    # 4-file arrival split; every consumer is batch-split independent
+    # (decimal sums)
+    src = staged(
+        sf_dir,
+        "emb_src_",
+        lambda d: table(spark, sf_dir, "embeddings").repartition(4).write.mode(
+            "overwrite"
+        ).parquet(d),
+    )
     stream = (
         spark.readStream.schema(EMB_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -130,22 +114,7 @@ def embedding_covariance_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("i", "j")
         .agg(F.sum("p").alias("sp"))
     )
-    while _COV_SINK_CACHE:
-        spark.catalog.dropTempView(_COV_SINK_CACHE.pop())
-    name = f"embedding_covariance_streamed_{uuid.uuid4().hex[:8]}"
-    _COV_SINK_CACHE.append(name)
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            acc.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("ecs_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    name = run_stream(acc, "embedding_covariance_streamed", mode="complete")
     # localCheckpoint: the assembly joins three branches of this table and
     # Spark cannot re-instance MemoryPlan attributes for self-joins
     # (INTERNAL_ERROR "conflicting references", observed r11); checkpointing

@@ -390,6 +390,11 @@ def followup_join_stream(
 
 from flink_mm_spark.operators.relational import _HLL_ORACLE  # noqa: E402
 from flink_mm_spark.registry import register  # noqa: E402
+from flink_mm_spark.streaming.runner import (  # noqa: E402
+    STREAM_STATE_PARTS_SMALL,
+    run_stream,
+    staged,
+)
 
 
 @register(
@@ -418,9 +423,6 @@ def events_hourly_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     graded complete-mode here because an unbounded memory sink only holds
     hours×types rows.)
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     stream = events_stream(spark, sf_dir, glob="events.parquet")
     agg = (
         stream.groupBy(
@@ -432,19 +434,7 @@ def events_hourly_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
         )
     )
-    name = f"events_hourly_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("ehs_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    name = run_stream(agg, "events_hourly_streamed", mode="complete")
     return spark.table(name).orderBy("window_start", "event_type")
 
 
@@ -496,9 +486,6 @@ def user_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a watermark — state per user is bounded by the gap horizon; the
     memory sink only holds the finished session rows here.)
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     stream = events_stream(spark, sf_dir, glob="events.parquet")
     agg = (
         stream.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -514,19 +501,7 @@ def user_sessions_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"user_sessions_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("uss_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    name = run_stream(agg, "user_sessions_streamed", mode="complete")
     return spark.table(name).orderBy("user_id", "start_us")
 
 
@@ -560,9 +535,6 @@ def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     TBs of events) and the only wide exchange is the final (nation, type)
     aggregate — the same plan AQE picks for the batch twin.
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     from flink_mm_spark.sources.tables import table as _table
 
     stream = events_stream(spark, sf_dir, glob="events.parquet")
@@ -577,19 +549,7 @@ def events_enriched_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
         )
     )
-    name = f"events_enriched_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("ees_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    name = run_stream(enriched, "events_enriched_streamed", mode="complete")
     return spark.table(name).orderBy("nation", "event_type")
 
 
@@ -630,9 +590,6 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon (a stream's span is unbounded); here the span IS the horizon
     because the second copy can trail by the whole corpus.
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     from flink_mm_spark.sources.tables import table
 
     span = (
@@ -654,19 +611,7 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
     )
-    name = f"events_dedup_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("eds_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    name = run_stream(agg, "events_dedup_streamed", mode="complete")
     return spark.table(name).orderBy("event_type")
 
 
@@ -702,9 +647,6 @@ def click_purchase_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id) is the shuffle key and skewed users split under AQE exactly
     as in the batch twin (``event_followups_range_join``).
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     clicks = events_stream(spark, sf_dir, glob="events.parquet").filter(
         F.col("event_type") == "click"
     )
@@ -717,19 +659,7 @@ def click_purchase_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         (F.unix_micros("c_ts") - F.unix_micros("p_ts")).cast("long").alias("gap_us"),
     )
-    name = f"click_purchase_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", scratch_dir("cps_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    name = run_stream(joined, "click_purchase_streamed")
     return spark.table(name).orderBy("user_id", "click_id", "purchase_id")
 
 
@@ -759,9 +689,6 @@ def events_sliding_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits and row order, and windows compare as epoch-microsecond
     integers.
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     stream = events_stream(spark, sf_dir, glob="events.parquet")
     agg = (
         stream.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
@@ -771,19 +698,7 @@ def events_sliding_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.unix_micros(F.col("w.start")).alias("start_us"), "n", "sum_value")
     )
-    name = f"events_sliding_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("esl_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    name = run_stream(agg, "events_sliding_streamed", mode="complete")
     return spark.table(name).orderBy("start_us")
 
 
@@ -813,9 +728,6 @@ def user_stats_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles. State is one fixed tuple per user — O(users) state store at
     any stream length.
     """
-    from flink_mm_spark.session import scratch_dir
-    import uuid
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -823,8 +735,11 @@ def user_stats_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from flink_mm_spark.sources.tables import table as _table
 
-    src_dir = scratch_dir("uss_src_")
-    _table(spark, sf_dir, "events").repartition(8).write.mode("overwrite").parquet(src_dir)
+    src_dir = staged(
+        sf_dir,
+        "uss_src_",
+        lambda d: _table(spark, sf_dir, "events").repartition(8).write.mode("overwrite").parquet(d),
+    )
 
     out_schema = T.StructType(
         [
@@ -859,19 +774,7 @@ def user_stats_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = stream.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"user_stats_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import stream_state_parts
-
-    with stream_state_parts(spark):
-        q = (
-            stats.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", scratch_dir("ust_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    name = run_stream(stats, "user_stats_streamed", mode="update")
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         spark.table(name)
@@ -924,8 +827,6 @@ def events_hll_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows); the estimator rollup and the exact-count comparison column are
     batch post-processing on the finished register table.
     """
-    import uuid
-
     from flink_mm_spark.operators.relational import (
         HLL_M,
         _HLL_ALPHA,
@@ -933,28 +834,14 @@ def events_hll_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         _HLL_LOW,
         _HLL_NUM,
     )
-    from flink_mm_spark.session import scratch_dir
     from flink_mm_spark.sources.tables import table
 
     stream = events_stream(spark, sf_dir, glob="events.parquet")
     regs = hll_register_stream(stream)
-    name = f"events_hll_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import (
-        STREAM_STATE_PARTS_SMALL,
-        stream_state_parts,
-    )
-
     # sketch state is O(registers/cells) — known-small key space
-    with stream_state_parts(spark, STREAM_STATE_PARTS_SMALL):
-        q = (
-            regs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("hll_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    name = run_stream(
+        regs, "events_hll_streamed", mode="complete", state_parts=STREAM_STATE_PARTS_SMALL
+    )
     agg = (
         spark.table(name)
         .groupBy("event_type")
@@ -1085,31 +972,15 @@ def events_cms_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     here holds ≤ CM_D·CM_W rows. Estimates upper-bound truth
     (est ≥ exact — collisions only ever add).
     """
-    import uuid
-
     from flink_mm_spark.operators.relational import CM_D, CM_W
-    from flink_mm_spark.session import scratch_dir
     from flink_mm_spark.sources.tables import table
 
     stream = events_stream(spark, sf_dir, glob="events.parquet")
     cells = cms_cell_stream(stream)
-    name = f"events_cms_streamed_{uuid.uuid4().hex[:8]}"
-    from flink_mm_spark.session import (
-        STREAM_STATE_PARTS_SMALL,
-        stream_state_parts,
-    )
-
     # sketch state is O(registers/cells) — known-small key space
-    with stream_state_parts(spark, STREAM_STATE_PARTS_SMALL):
-        q = (
-            cells.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", scratch_dir("cms_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    name = run_stream(
+        cells, "events_cms_streamed", mode="complete", state_parts=STREAM_STATE_PARTS_SMALL
+    )
     rows = spark.range(CM_D).select(F.col("id").cast("int").alias("r"))
     probes = spark.createDataFrame(
         [(u,) for u in CMS_PROBE_USERS], "user_id bigint"

@@ -1,0 +1,74 @@
+"""The engine's two lifecycle helpers: ``streaming/runner.py`` starts every
+stream, ``session.keep_latest`` holds every persisted intermediate.
+
+The guard is a stdlib-only source scan, so a hand-rolled stream start or
+module cache fails here before it can drift from the helpers.
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+import re
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "flink_mm_spark"
+
+# the one stream outside the runner: default trigger, polled by row count
+STREAM_SCAN_ENTRY = ("sources/datasource.py", "binmatrix_stream_scan")
+# _CC_CACHE frees local checkpoints (not persists); _ONL_CKPT_CACHE maps an
+# sf dir to a finished run's checkpoint for the compaction entry
+ALLOWED_CACHES = {"_CC_CACHE", "_ONL_CKPT_CACHE"}
+
+
+def _modules():
+    for path in sorted(PKG.rglob("*.py")):
+        yield path.relative_to(PKG).as_posix(), path.read_text()
+
+
+def test_streams_and_caches_only_through_the_helpers():
+    starts, caches = [], []
+    for rel, src in _modules():
+        tree = ast.parse(src)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                    starts.append((rel, fn.name))
+        for stmt in tree.body:
+            targets = (
+                [t for t in stmt.targets if isinstance(t, ast.Name)]
+                if isinstance(stmt, ast.Assign)
+                else [stmt.target] if isinstance(stmt, ast.AnnAssign) else []
+            )
+            for t in targets:
+                if re.fullmatch(r"_\w*_CACHE", t.id) and t.id not in ALLOWED_CACHES:
+                    caches.append((rel, t.id))
+        if ".pop().unpersist()" in src:
+            caches.append((rel, ".pop().unpersist() swap"))
+    assert {s for s in starts if s[0] != "streaming/runner.py"} == {STREAM_SCAN_ENTRY}, starts
+    assert caches == [], caches
+
+
+def test_keep_latest_releases_before_persist(spark):
+    """Identical plans: the second generation must stay cached (releasing
+    after persisting would uncache it, since Spark's CacheManager treats a
+    persist of an already-cached plan as a no-op). Different plans: the
+    replacement uncaches the first."""
+    from pyspark import StorageLevel
+
+    from flink_mm_spark.session import keep_latest
+
+    none = StorageLevel(False, False, False, False, 1)
+    a1 = keep_latest("test_same_plan", spark.range(10).selectExpr("id * 2 AS x"))
+    a2 = keep_latest("test_same_plan", spark.range(10).selectExpr("id * 2 AS x"))
+    assert a2.storageLevel != none
+    assert a2.count() == 10
+
+    b1 = keep_latest("test_new_plan", spark.range(7).selectExpr("id + 1 AS y"))
+    assert b1.storageLevel != none
+    b2 = keep_latest("test_new_plan", spark.range(5).selectExpr("id + 3 AS y"))
+    assert b1.storageLevel == none
+    assert b2.storageLevel != none
+    for df in (a1, b2):
+        df.unpersist()

@@ -897,10 +897,10 @@ def test_embedding_covariance_streamed_assembly_over_checkpoint(spark):
     assert "Exchange hashpartitioning" not in plan, plan[:3000]
     assert "Python" not in plan and "MapInPandas" not in plan
     assert "FileScan" not in plan  # assembly reads the drained state only
-    from flink_mm_spark.streaming.embeddings import _COV_SINK_CACHE
+    from flink_mm_spark.streaming.runner import _SINKS
 
-    assert _COV_SINK_CACHE, "sink table name not cached"
-    n_rows = spark.table(_COV_SINK_CACHE[-1]).count()
+    assert _SINKS.get("embedding_covariance_streamed"), "sink table name not cached"
+    n_rows = spark.table(_SINKS["embedding_covariance_streamed"]).count()
     # r13: the accumulator holds the UPPER TRIANGLE only (mirror cells
     # are bit-equal by decimal commutativity, re-expanded after drain)
     assert n_rows == EMB_DIM * (EMB_DIM + 1) // 2 + EMB_DIM + 1

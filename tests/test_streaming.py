@@ -630,37 +630,45 @@ def test_minhash_dedup_stream_restart_recovery(spark, tmp_path):
 
 
 def test_minhash_dedup_split_cache_reuses_files(spark):
-    """minhash_dedup_streamed caches its 4-file arrival split per
-    (process, sf_dir): the second invocation must stream the IDENTICAL
-    files (same source dir, no rewrite) — results are arrival-order
-    independent either way, so the cache changes cost, not semantics;
-    this pins that it actually engages (bench medians re-run the entry
-    3x per sample)."""
+    """Streamed entries stage their arrival split once per (process,
+    sf_dir): the second invocation must stream the IDENTICAL files (same
+    source dir, no rewrite) — results are arrival-order independent
+    either way, so the cache changes cost, not semantics; this pins that
+    it actually engages (bench medians re-run the entry 3x per sample).
+    ``events_cms_streamed`` reads the sf dir directly, so it has no split
+    and pins the sink rotation only."""
     import os
 
     from flink_mm_spark import registry
-    from flink_mm_spark.streaming import documents as docmod
+    from flink_mm_spark.streaming import runner
     from tests.conftest import SF_DIR
 
     registry.load_all()
-    fn = registry.QUERIES["minhash_dedup_streamed"].fn
-    r1 = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-    src = docmod._SRC_SPLIT_CACHE[SF_DIR]
-    mtimes = {f: os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src)}
-    r2 = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-    assert docmod._SRC_SPLIT_CACHE[SF_DIR] == src
-    assert {
-        f: os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src)
-    } == mtimes  # not rewritten
-    assert r1 == r2  # identical files -> identical batches -> identical pairs
-    # sink swap: the previous invocation's memory-sink table is dropped, so
-    # repeated calls hold exactly ONE pair list in driver memory (review r9)
-    sinks = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith("minhash_dedup_streamed_")
-    ]
-    assert len(sinks) == 1, sinks
+    for entry, prefix in (
+        ("minhash_dedup_streamed", "mds_src_"),
+        ("user_stats_streamed", "uss_src_"),
+        ("events_cms_streamed", None),
+    ):
+        fn = registry.QUERIES[entry].fn
+        r1 = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
+        if prefix is not None:
+            src = runner._STAGED[(prefix, SF_DIR)]
+            mtimes = {f: os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src)}
+        r2 = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
+        if prefix is not None:
+            assert runner._STAGED[(prefix, SF_DIR)] == src
+            assert {
+                f: os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src)
+            } == mtimes  # not rewritten
+        assert r1 == r2  # identical files -> identical batches -> identical pairs
+        # sink swap: the previous invocation's memory-sink table is dropped, so
+        # repeated calls hold exactly ONE result in driver memory (review r9)
+        sinks = [
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith(f"{entry}_")
+        ]
+        assert len(sinks) == 1, sinks
 
 
 def test_corpus_ingest_stream_restart_recovery(spark, tmp_path):
@@ -816,11 +824,11 @@ def _run_band_store(
 ):
     from flink_mm_spark.streaming.documents import (
         documents_stream,
-        drain_with_timers,
         keep_best_band_rows,
         minhash_band_rows,
         minhash_band_store,
     )
+    from flink_mm_spark.streaming.runner import drain_with_timers
 
     rows_fn = keep_best_band_rows if decide else minhash_band_rows
     got: list = []
@@ -1526,10 +1534,10 @@ def test_drain_with_timers_expected_batches_skips_empty_wait(spark, tmp_path):
     from flink_mm_spark.streaming.documents import (
         STREAM_HOT_CAP,
         documents_stream,
-        drain_with_timers,
         minhash_band_rows,
         minhash_band_store,
     )
+    from flink_mm_spark.streaming.runner import drain_with_timers
 
     pdfs = _synthetic_arrival_corpus()
     src = str(tmp_path / "arrivals")
@@ -1574,7 +1582,7 @@ def test_drain_with_timers_counts_batches_past_progress_window():
     """The expected-batches fast path counts consumed batchIds across polls:
     ``recentProgress`` keeps only the last numRecentProgressUpdates entries,
     so a count over it alone never reaches a total larger than that window."""
-    from flink_mm_spark.streaming.documents import drain_with_timers
+    from flink_mm_spark.streaming.runner import drain_with_timers
 
     class WindowedQuery:
         """One more file-consuming batch per poll; progress window of 2."""
