@@ -23,6 +23,7 @@ collect-to-driver cost in the measurement).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -164,6 +165,24 @@ HEADLINE = [
 
 def force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Untimed warm-up before any measured call."""
+    # warm the JVM/session on a cheap query so the first timing isn't JIT,
+    # and touch the big fact table so footer/stat reads are out of the way
+    force(registry.QUERIES["top_orders_by_price"].fn(spark, sf_dir))
+    table(spark, sf_dir, "lineitem").count()
+
+    # warm the Python UDF workers (one per core): the first pandas-UDF stage
+    # otherwise pays ~32 interpreter+numpy spawns inside whichever query it
+    # lands in. Steady-state throughput is what BASELINE's numbers measure.
+    def _noop(it):
+        for b in it:
+            yield b
+
+    ncpu = spark.sparkContext.defaultParallelism
+    force(spark.range(0, ncpu, 1, ncpu).mapInPandas(_noop, "id long"))
 
 
 def bench_kmeans(spark, sf_dir: str) -> None:
@@ -347,6 +366,25 @@ def bench_allreduce(spark, vecs, n_iters: int = 10, n_part: int = 32) -> list[fl
     return times
 
 
+@contextlib.contextmanager
+def shuffle_fact_join(spark, sf_dir: str):
+    """With broadcast joins off, yield orders and lineitem cut to the fact
+    join's columns and their plain-parquet join (sum of l_quantity per
+    order): the fact-fact exchange a bucketed layout removes."""
+    prev_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+        lineitem = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+        yield orders, lineitem, (
+            orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
+            .groupBy("o_orderkey")
+            .agg(F.sum("l_quantity"))
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_threshold)
+
+
 def bench_bucketed_join(spark, sf_dir: str, timings: dict) -> None:
     """Co-located (bucketed) fact join vs the same join over plain parquet.
 
@@ -357,34 +395,24 @@ def bench_bucketed_join(spark, sf_dir: str, timings: dict) -> None:
     """
     from flink_mm_spark.sources.bucketing import colocated_join, write_bucketed
 
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    lineitem = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    prev_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(orders, "bench_b_orders", "o_orderkey", n_buckets=32)
-        write_bucketed(lineitem, "bench_b_lineitem", "l_orderkey", n_buckets=32)
+    with shuffle_fact_join(spark, sf_dir) as (orders, lineitem, plain_join):
+        try:
+            write_bucketed(orders, "bench_b_orders", "o_orderkey", n_buckets=32)
+            write_bucketed(lineitem, "bench_b_lineitem", "l_orderkey", n_buckets=32)
 
-        timings["bucketed_fact_join"] = timed_median(
-            lambda: force(
-                colocated_join(
-                    spark, "bench_b_orders", "bench_b_lineitem", "o_orderkey", "l_orderkey"
+            timings["bucketed_fact_join"] = timed_median(
+                lambda: force(
+                    colocated_join(
+                        spark, "bench_b_orders", "bench_b_lineitem", "o_orderkey", "l_orderkey"
+                    )
+                    .groupBy("o_orderkey")
+                    .agg(F.sum("l_quantity"))
                 )
-                .groupBy("o_orderkey")
-                .agg(F.sum("l_quantity"))
             )
-        )
-        timings["shuffle_fact_join"] = timed_median(
-            lambda: force(
-                orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
-                .groupBy("o_orderkey")
-                .agg(F.sum("l_quantity"))
-            )
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_threshold)
-        spark.sql("DROP TABLE IF EXISTS bench_b_orders")
-        spark.sql("DROP TABLE IF EXISTS bench_b_lineitem")
+            timings["shuffle_fact_join"] = timed_median(lambda: force(plain_join))
+        finally:
+            spark.sql("DROP TABLE IF EXISTS bench_b_orders")
+            spark.sql("DROP TABLE IF EXISTS bench_b_lineitem")
 
 
 def main() -> None:
@@ -399,21 +427,7 @@ def main() -> None:
     load_start = os.getloadavg()
 
     timings: dict[str, float] = {}
-
-    # warm the JVM/session on a cheap query so the first timing isn't JIT,
-    # and touch the big fact table so footer/stat reads are out of the way
-    force(registry.QUERIES["top_orders_by_price"].fn(spark, SF_DIR))
-    table(spark, SF_DIR, "lineitem").count()
-
-    # warm the Python UDF workers (one per core): the first pandas-UDF stage
-    # otherwise pays ~32 interpreter+numpy spawns inside whichever query it
-    # lands in. Steady-state throughput is what BASELINE's numbers measure.
-    def _noop(it):
-        for b in it:
-            yield b
-
-    ncpu = spark.sparkContext.defaultParallelism
-    force(spark.range(0, ncpu, 1, ncpu).mapInPandas(_noop, "id long"))
+    warm_up(spark, SF_DIR)
 
     for name in HEADLINE:
         timings[name] = timed_median(

@@ -68,13 +68,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` queries run."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def parallelize_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def parallelize_scan(df: DataFrame) -> DataFrame:
     """Raise the partition count of a small-bytes scan feeding CPU-heavy work.
 
     Parquet split sizing is byte-based (maxPartitionBytes), so a 600 KB
@@ -83,8 +77,7 @@ def parallelize_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     cheap repartition spreads it across the cluster. No-ops whenever the
     scan already has enough splits (any real 100 TB table will).
     """
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -1,8 +1,9 @@
 """The engine's two lifecycle helpers: ``streaming/runner.py`` starts every
-stream, ``session.keep_latest`` holds every persisted intermediate.
+stream, ``session.keep_latest`` holds every persisted intermediate. Plus the
+one measurement path: Spark's event log, never the UI's status REST API.
 
-The guard is a stdlib-only source scan, so a hand-rolled stream start or
-module cache fails here before it can drift from the helpers.
+The guards are stdlib-only source scans, so a hand-rolled stream start,
+module cache or REST poll fails here before it can drift from the helpers.
 """
 
 from __future__ import annotations
@@ -11,7 +12,8 @@ import ast
 import pathlib
 import re
 
-PKG = pathlib.Path(__file__).resolve().parents[1] / "flink_mm_spark"
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+PKG = ROOT / "flink_mm_spark"
 
 # the one stream outside the runner: default trigger, polled by row count
 STREAM_SCAN_ENTRY = ("sources/datasource.py", "binmatrix_stream_scan")
@@ -48,6 +50,33 @@ def test_streams_and_caches_only_through_the_helpers():
             caches.append((rel, ".pop().unpersist() swap"))
     assert {s for s in starts if s[0] != "streaming/runner.py"} == {STREAM_SCAN_ENTRY}, starts
     assert caches == [], caches
+
+
+def test_no_ui_or_status_rest_api_outside_perfbench():
+    """Measurements read the event log (perfbench/eventlog.py); nothing
+    outside perfbench/ turns on the Spark UI or polls its REST API."""
+    this = pathlib.Path(__file__).resolve()
+    found = []
+    for path in sorted(ROOT.rglob("*.py")):
+        rel = path.relative_to(ROOT)
+        if rel.parts[0] == "perfbench" or rel.parts[0].startswith(".") or path == this:
+            continue
+        src = path.read_text()
+        if "/api/v1" in src:
+            found.append((rel.as_posix(), "/api/v1"))
+        for node in ast.walk(ast.parse(src)):
+            pairs = []
+            if isinstance(node, ast.Dict):
+                pairs = list(zip(node.keys, node.values))
+            elif isinstance(node, ast.Call) and len(node.args) >= 2:
+                pairs = [(node.args[0], node.args[1])]
+            for k, v in pairs:
+                if (
+                    isinstance(k, ast.Constant) and k.value == "spark.ui.enabled"
+                    and not (isinstance(v, ast.Constant) and str(v.value).lower() == "false")
+                ):
+                    found.append((rel.as_posix(), f"spark.ui.enabled line {node.lineno}"))
+    assert found == [], found
 
 
 def test_keep_latest_releases_before_persist(spark):
