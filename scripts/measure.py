@@ -9,11 +9,12 @@ starts, then runs bench.py's warm-up.
 
 - ``time``: bench.py's median of $SPARK_GRAFT_BENCH_REPS runs per entry,
   each forced with the noop sink, at $SPARK_GRAFT_SF_DIR (bench.py's
-  default) or at the sf dirs given. One sf dir prints ``{name: {median,
-  runs}}`` per entry and a closing summary line. Two sf dirs (the
-  sf0.01/sf0.1 growth ladder) print one line per entry with both medians
-  and ``growth_10x``, the second median over the first. The names
-  ``kmeans_d2_k100_i10`` and ``kmeans_d2_k1000_i10`` run bench.py's k-means.
+  default) or at the sf dirs given (the arguments holding a ``/``). One sf
+  dir prints ``{name: {median, runs}}`` per entry and a closing summary
+  line. Two sf dirs (the sf0.01/sf0.1 growth ladder) print one line per
+  entry with both medians and ``growth_10x``, the second median over the
+  first. The names ``kmeans_d2_k100_i10`` and ``kmeans_d2_k1000_i10`` run
+  bench.py's k-means.
 - ``plans``: ``explain("formatted")`` and the AQE-final executed plan (after
   one execution; AQE hides the final plan until then) at sf0.001, written to
   ``<out_dir>/<name>_<tag>.txt``.
