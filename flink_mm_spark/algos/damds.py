@@ -5,14 +5,16 @@ partitioned into row blocks, per-temperature SMACOF stress majorization
 with a conjugate-gradient inner solve (SURVEY §2.6 F2,F6–F10, §3.1).
 
 Spark shape:
-- The N×N distance (+ optional weight) matrix lives as a DataFrame of row
+- The N×N distance (+ optional weight) matrix arrives as a DataFrame of row
   blocks (block_id, start, block_rows, n_points, dist ARRAY<SHORT>,
-  weight ARRAY<SHORT>), persisted once for the whole anneal — the
-  loop-invariant caching the reference lacks (it re-reads files every
-  Flink job, SURVEY §4.1).
+  weight ARRAY<SHORT>). ``damds`` decodes it once into a loop-lifetime RDD
+  of (block_id, start, int16 dist, int16 weight | None) numpy blocks
+  (``decoded_blocks``) — the loop-invariant caching the reference lacks (it
+  re-reads files every Flink job, SURVEY §4.1).
 - The embedding X is (N, 3)-tiny and lives on the driver; each distributed
-  kernel broadcasts X and emits per-block partials (stress scalars or
-  block slices of B(Z)X / VX), gathered ordered by block_id (SURVEY A6).
+  kernel is one ``map_blocks`` job with X in its closure, emitting per-block
+  partials (stress scalars or block slices of B(Z)X / VX) that the driver
+  orders by block_id (SURVEY A6). No pass builds a DataFrame plan.
 - The CG loop (damds/CG.java:78-142) runs on the driver: the only
   distributed step per CG iteration is the V×p multiply.
 
@@ -24,16 +26,19 @@ negative shorts are missing pairs and are skipped everywhere
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from contextlib import AbstractContextManager, ExitStack
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-from flink_mm_spark.linalg.block_matrix import split_rows
+from flink_mm_spark.linalg.block_matrix import array_blocks, map_blocks, ship, split_rows
 from flink_mm_spark.sources.binary_matrix import INV_SHORT_MAX  # single source
 
 # Read-time weight transformation hook: (weights, dequantized distances) →
@@ -79,13 +84,40 @@ def damds_blocks(
     return df.repartition(min(n_blocks, 64), "block_id").persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def _block_arrays(pdf: pd.DataFrame) -> Iterator[tuple[int, int, np.ndarray, np.ndarray | None]]:
-    for _, row in pdf.iterrows():
-        nrows, npts = int(row["block_rows"]), int(row["n_points"])
-        d = np.asarray(row["dist"], dtype=np.int16).reshape(nrows, npts)
-        w = row["weight"]
-        wm = None if w is None else np.asarray(w, dtype=np.int16).reshape(nrows, npts)
-        yield int(row["block_id"]), int(row["start"]), d, wm
+def decoded_blocks(blocks: DataFrame) -> AbstractContextManager[RDD]:
+    """The kernels' input: ``blocks`` decoded once into a loop-lifetime RDD
+    of (block_id, start, int16 dist, int16 weight | None) numpy blocks, each
+    (block_rows, n_points); released on exit (``array_blocks``)."""
+
+    def encode(batches):
+        for b in batches:
+            ids, starts, nrows, npts = (
+                b.column(c).to_pylist() for c in ("block_id", "start", "block_rows", "n_points")
+            )
+            dist, weight = b.column("dist"), b.column("weight")
+            for i in range(b.num_rows):
+                shape = (nrows[i], npts[i])
+                w = weight[i]
+                yield (
+                    ids[i],
+                    starts[i],
+                    dist[i].values.to_numpy().reshape(shape),
+                    w.values.to_numpy().reshape(shape) if w.is_valid else None,
+                )
+
+    return array_blocks(blocks, encode)
+
+
+def _by_block(blocks: RDD, fn: Callable, *state) -> list:
+    """``fn(start, dist, weight, *state)`` on every block in one job, gathered
+    in block_id order (SURVEY A6)."""
+    out = map_blocks(blocks, lambda b, *s: (b[0], fn(*b[1:], *s)), *state)
+    return [v for _, v in sorted(out, key=lambda t: t[0])]
+
+
+def _diag_mask(start: int, d: np.ndarray) -> np.ndarray:
+    """True at the block's cells on the global diagonal."""
+    return np.arange(d.shape[1])[None, :] == (start + np.arange(d.shape[0]))[:, None]
 
 
 def _weights_of(
@@ -129,109 +161,84 @@ class MatrixStats:
     sum_sq: float
 
 
-def matrix_stats(blocks: DataFrame) -> MatrixStats:
+def _stats_block(start: int, d: np.ndarray, _w) -> tuple | None:
+    v = (d.astype(np.float64) * INV_SHORT_MAX)[d >= 0]
+    if v.size == 0:
+        return None
+    pos = v[v > 0]
+    return (
+        int(v.size),
+        float(v.min()),
+        float(v.max()),
+        float(pos.min()) if pos.size else np.inf,
+        float(v.sum()),
+        float((v * v).sum()),
+    )
+
+
+def matrix_stats(blocks: RDD) -> MatrixStats:
     """Distributed count/min/max/positiveMin/sum/sumSq of dequantized cells."""
+    parts = [p for p in _by_block(blocks, _stats_block) if p is not None]
+    if not parts:  # every cell missing
+        return MatrixStats(0, np.inf, -np.inf, np.inf, 0.0, 0.0)
+    cnt, mn, mx, pmin, sm, ssq = zip(*parts)
+    return MatrixStats(sum(cnt), min(mn), max(mx), min(pmin), sum(sm), sum(ssq))
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in batches:
-            for _bid, _start, d, _w in _block_arrays(pdf):
-                dq = d.astype(np.float64) * INV_SHORT_MAX
-                v = dq[d >= 0]
-                if v.size == 0:
-                    continue
-                pos = v[v > 0]
-                out.append(
-                    (
-                        int(v.size),
-                        float(v.min()),
-                        float(v.max()),
-                        float(pos.min()) if pos.size else np.inf,
-                        float(v.sum()),
-                        float((v * v).sum()),
-                    )
-                )
-        yield pd.DataFrame(out, columns=["cnt", "mn", "mx", "pmin", "sm", "ssq"])
 
-    rows = (
-        blocks.mapInPandas(
-            partials, "cnt bigint, mn double, mx double, pmin double, sm double, ssq double"
+def _smacof_block(
+    start: int,
+    d: np.ndarray,
+    wblk: np.ndarray | None,
+    xv: np.ndarray,
+    diff: float,
+    wt: WeightTransform | None,
+    want_stress: bool,
+    want_bz: bool,
+) -> tuple[float | None, np.ndarray | None]:
+    """One block's stress partial and/or its (block_rows, dim) slice of B(Z)·Z,
+    both from the same (block_rows × N) distance pass."""
+    dq = d.astype(np.float64) * INV_SHORT_MAX
+    w = _weights_of(d, wblk, wt)
+    xb = xv[start : start + d.shape[0]]
+    dist_x = np.sqrt(
+        np.maximum(
+            (xb * xb).sum(1)[:, None] - 2.0 * (xb @ xv.T) + (xv * xv).sum(1)[None, :],
+            0.0,
         )
-        .groupBy()
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("mn").alias("mn"),
-            F.max("mx").alias("mx"),
-            F.min("pmin").alias("pmin"),
-            F.sum("sm").alias("sm"),
-            F.sum("ssq").alias("ssq"),
-        )
-        .collect()[0]
     )
-    return MatrixStats(rows["cnt"], rows["mn"], rows["mx"], rows["pmin"], rows["sm"], rows["ssq"])
+    sp = bz = None
+    if want_stress:  # Stress.java:45-93 semantics
+        heated = np.where(dq >= diff, dq - diff, 0.0)
+        tmp = heated - dist_x
+        sp = float((w * tmp * tmp * (d >= 0)).sum())
+    if want_bz:  # BC.java:86-134 semantics
+        ok = (dist_x >= 1e-10) & (dq > diff) & (d >= 0)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            b = np.where(ok, -w * (dq - diff) / np.where(ok, dist_x, 1.0), 0.0)
+        b = np.where(_diag_mask(start, d), 0.0, b)
+        diag = -b.sum(axis=1)
+        bz = b @ xv + diag[:, None] * xb
+    return sp, bz
 
 
-def _gather_block_matrix(df: DataFrame, dim: int) -> np.ndarray:
-    """Ordered gather of per-block (block_rows, dim) partials → (N, dim).
-
-    Arrow collect (toPandas) + driver-side sort: the kernels run ~10× per
-    stress iteration, so per-gather latency is the anneal's critical path.
-    """
-    pdf = df.toPandas().sort_values("block_id")
-    return np.vstack(
-        [np.asarray(d, dtype=np.float64).reshape(-1, dim) for d in pdf["data"]]
-    )
+def _smacof(blocks: RDD, x: np.ndarray, t_cur: float, wt, want_stress: bool, want_bz: bool) -> list:
+    dim = x.shape[1]
+    diff = float(np.sqrt(2.0 * dim) * t_cur) if t_cur > 1e-10 else 0.0
+    kernel = partial(_smacof_block, diff=diff, wt=wt, want_stress=want_stress, want_bz=want_bz)
+    return _by_block(blocks, kernel, np.asarray(x, dtype=np.float64))
 
 
-_PART_SCHEMA = "block_id int, data array<double>"
-
-
-def stress(
-    blocks: DataFrame, x: np.ndarray, t_cur: float, inv_sum_dsq: float, wt=None
-) -> float:
+def stress(blocks: RDD, x: np.ndarray, t_cur: float, inv_sum_dsq: float, wt=None) -> float:
     """Stress σ(X) (damds/Stress.java:45-93, SURVEY F7).
 
     tmpD = (δ ≥ diff ? δ − diff : 0) − d_ij(X); σ = Σ w·tmpD² × invΣδ²;
     diff = √(2·dim)·tCur when tCur > 1e-10.
     """
-    spark = blocks.sparkSession
-    dim = x.shape[1]
-    diff = float(np.sqrt(2.0 * dim) * t_cur) if t_cur > 1e-10 else 0.0
-    x_bc = spark.sparkContext.broadcast(np.asarray(x, dtype=np.float64))
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        xv = x_bc.value
-        out = []
-        for pdf in batches:
-            for bid, start, d, wblk in _block_arrays(pdf):
-                dq = d.astype(np.float64) * INV_SHORT_MAX
-                w = _weights_of(d, wblk, wt)
-                xb = xv[start : start + d.shape[0]]
-                dist_x = np.sqrt(
-                    np.maximum(
-                        (xb * xb).sum(1)[:, None]
-                        - 2.0 * (xb @ xv.T)
-                        + (xv * xv).sum(1)[None, :],
-                        0.0,
-                    )
-                )
-                heated = np.where(dq >= diff, dq - diff, 0.0)
-                tmp = heated - dist_x
-                out.append((bid, [float((w * tmp * tmp * (d >= 0)).sum())]))
-        yield pd.DataFrame(out, columns=["block_id", "data"])
-
-    total = (
-        blocks.mapInPandas(partials, _PART_SCHEMA)
-        .select(F.explode("data").alias("v"))
-        .agg(F.sum("v"))
-        .collect()[0][0]
-    )
-    x_bc.destroy()  # per-call broadcast; the job completed with collect()
-    return float(total) * inv_sum_dsq
+    return float(sum(sp for sp, _ in _smacof(blocks, x, t_cur, wt, True, False))) * inv_sum_dsq
 
 
 def stress_bofz(
-    blocks: DataFrame, x: np.ndarray, t_cur: float, inv_sum_dsq: float, wt=None
+    blocks: RDD, x: np.ndarray, t_cur: float, inv_sum_dsq: float, wt=None
 ) -> tuple[float, np.ndarray]:
     """Fused σ(X) + B(Z)·Z in ONE distributed job (one barrier, one pass).
 
@@ -240,125 +247,41 @@ def stress_bofz(
     and both kernels are dominated by the identical (block_rows × N)
     distance computation. Fusing halves that work and removes one
     synchronization barrier per iteration (at 1000 executors, barriers are
-    the anneal's critical path). Float semantics are IDENTICAL to running
-    ``stress`` then ``bofz_bc``: the shared dist_x is the same value both
-    kernels computed independently, and each output applies the same op
-    sequence to it — so results are bitwise equal and the numpy test
-    oracles are unchanged. Each block emits [σ_partial, *bz_slice].
+    the anneal's critical path). Results are bitwise equal to running
+    ``stress`` then ``bofz_bc``: all three run ``_smacof_block`` and sum in
+    block_id order, so the numpy test oracles are unchanged.
     """
-    spark = blocks.sparkSession
-    dim = x.shape[1]
-    diff = float(np.sqrt(2.0 * dim) * t_cur) if t_cur > 1e-10 else 0.0
-    x_bc = spark.sparkContext.broadcast(np.asarray(x, dtype=np.float64))
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        xv = x_bc.value
-        out = []
-        for pdf in batches:
-            for bid, start, d, wblk in _block_arrays(pdf):
-                dq = d.astype(np.float64) * INV_SHORT_MAX
-                w = _weights_of(d, wblk, wt)
-                nrows = d.shape[0]
-                xb = xv[start : start + nrows]
-                dist_x = np.sqrt(
-                    np.maximum(
-                        (xb * xb).sum(1)[:, None]
-                        - 2.0 * (xb @ xv.T)
-                        + (xv * xv).sum(1)[None, :],
-                        0.0,
-                    )
-                )
-                # stress partial (Stress.java:45-93 semantics)
-                heated = np.where(dq >= diff, dq - diff, 0.0)
-                tmp = heated - dist_x
-                sp = float((w * tmp * tmp * (d >= 0)).sum())
-                # BofZ slice (BC.java:86-134 semantics)
-                ok = (dist_x >= 1e-10) & (dq > diff) & (d >= 0)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    b = np.where(ok, -w * (dq - diff) / np.where(ok, dist_x, 1.0), 0.0)
-                cols = np.arange(d.shape[1])
-                diag_mask = cols[None, :] == (start + np.arange(nrows))[:, None]
-                b = np.where(diag_mask, 0.0, b)
-                diag = -b.sum(axis=1)
-                bz = b @ xv + diag[:, None] * xb
-                out.append((bid, [sp] + bz.ravel().tolist()))
-        yield pd.DataFrame(out, columns=["block_id", "data"])
-
-    pdf = blocks.mapInPandas(partials, _PART_SCHEMA).toPandas().sort_values("block_id")
-    x_bc.destroy()
-    total = 0.0
-    slices = []
-    for d in pdf["data"]:
-        a = np.asarray(d, dtype=np.float64)
-        total += a[0]
-        slices.append(a[1:].reshape(-1, dim))
-    return float(total) * inv_sum_dsq, np.vstack(slices)
+    parts = _smacof(blocks, x, t_cur, wt, True, True)
+    return float(sum(sp for sp, _ in parts)) * inv_sum_dsq, np.vstack([bz for _, bz in parts])
 
 
-def v_array(blocks: DataFrame, wt=None) -> np.ndarray:
+def _v_block(start: int, d: np.ndarray, wblk, wt) -> np.ndarray:
+    w = _weights_of(d, wblk, wt)
+    return 1.0 + np.where(_diag_mask(start, d), 0.0, w).sum(axis=1)
+
+
+def v_array(blocks: RDD, wt=None) -> np.ndarray:
     """v_i = 1 + Σ_{j≠i, δ_ij≥0, w_ij≠0} w_ij (damds/VArray.java:49-67, F8)."""
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = []
-        for pdf in batches:
-            for bid, start, d, wblk in _block_arrays(pdf):
-                w = _weights_of(d, wblk, wt)
-                nrows = d.shape[0]
-                cols = np.arange(d.shape[1])
-                diag = cols[None, :] == (start + np.arange(nrows))[:, None]
-                v = 1.0 + np.where(diag, 0.0, w).sum(axis=1)
-                out.append((bid, v.tolist()))
-        yield pd.DataFrame(out, columns=["block_id", "data"])
-
-    return _gather_block_matrix(blocks.mapInPandas(partials, _PART_SCHEMA), 1).ravel()
+    return np.concatenate(_by_block(blocks, partial(_v_block, wt=wt)))
 
 
-def bofz_bc(blocks: DataFrame, x: np.ndarray, t_cur: float, wt=None) -> np.ndarray:
+def bofz_bc(blocks: RDD, x: np.ndarray, t_cur: float, wt=None) -> np.ndarray:
     """BC = B(Z)·Z for the SMACOF update (damds/BC.java:86-134, F6).
 
     Off-diag B_ij = −w_ij·(δ_ij − diff)/d_ij(Z) when d_ij ≥ 1e-10 and
     diff < δ_ij, else 0; diagonal B_ii = −Σ_{j≠i} B_ij. Each block emits
     its (block_rows, dim) slice of B·Z; gathered ordered by block.
     """
-    spark = blocks.sparkSession
-    dim = x.shape[1]
-    diff = float(np.sqrt(2.0 * dim) * t_cur) if t_cur > 1e-10 else 0.0
-    x_bc = spark.sparkContext.broadcast(np.asarray(x, dtype=np.float64))
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        xv = x_bc.value
-        out = []
-        for pdf in batches:
-            for bid, start, d, wblk in _block_arrays(pdf):
-                dq = d.astype(np.float64) * INV_SHORT_MAX
-                w = _weights_of(d, wblk, wt)
-                nrows = d.shape[0]
-                xb = xv[start : start + nrows]
-                dist_z = np.sqrt(
-                    np.maximum(
-                        (xb * xb).sum(1)[:, None]
-                        - 2.0 * (xb @ xv.T)
-                        + (xv * xv).sum(1)[None, :],
-                        0.0,
-                    )
-                )
-                ok = (dist_z >= 1e-10) & (dq > diff) & (d >= 0)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    b = np.where(ok, -w * (dq - diff) / np.where(ok, dist_z, 1.0), 0.0)
-                cols = np.arange(d.shape[1])
-                diag_mask = cols[None, :] == (start + np.arange(nrows))[:, None]
-                b = np.where(diag_mask, 0.0, b)
-                diag = -b.sum(axis=1)
-                bz = b @ xv + diag[:, None] * xb
-                out.append((bid, bz.ravel().tolist()))
-        yield pd.DataFrame(out, columns=["block_id", "data"])
-
-    out = _gather_block_matrix(blocks.mapInPandas(partials, _PART_SCHEMA), dim)
-    x_bc.destroy()
-    return out
+    return np.vstack([bz for _, bz in _smacof(blocks, x, t_cur, wt, False, True)])
 
 
-def v_multiply(blocks: DataFrame, v, p: np.ndarray, wt=None) -> np.ndarray:
+def _vp_block(start: int, d: np.ndarray, wblk, pv: np.ndarray, vv: np.ndarray, wt) -> np.ndarray:
+    w = np.where(_diag_mask(start, d), 0.0, _weights_of(d, wblk, wt))
+    nrows = d.shape[0]
+    return vv[start : start + nrows, None] * pv[start : start + nrows] - w @ pv
+
+
+def v_multiply(blocks: RDD, v, p: np.ndarray, wt=None) -> np.ndarray:
     """V·p where V = diag(v) with off-diag −w_ij (SURVEY F2).
 
     The reference computes this via MatrixUtils.matrixMultiplyWithThreadOffset
@@ -366,42 +289,14 @@ def v_multiply(blocks: DataFrame, v, p: np.ndarray, wt=None) -> np.ndarray:
     out = v_block·p_block − W_nodiag_block @ p in numpy and the slices are
     gathered ordered.
 
-    ``v`` may be a numpy array or an already-created Broadcast of one: v is
+    ``v`` may be a numpy array or a handle from ``block_matrix.ship``: v is
     invariant across the whole anneal (it depends only on the weights), so
-    ``damds`` broadcasts it ONCE and every CG iteration reuses it — only the
+    ``damds`` ships it ONCE and every CG iteration reuses it — only the
     O(N·dim) search direction ``p`` ships per iteration.
     """
-    from pyspark.broadcast import Broadcast
-
-    spark = blocks.sparkSession
-    dim = p.shape[1]
-    p_bc = spark.sparkContext.broadcast(np.asarray(p, dtype=np.float64))
-    own_v = not isinstance(v, Broadcast)
-    v_bc = (
-        spark.sparkContext.broadcast(np.asarray(v, dtype=np.float64)) if own_v else v
+    return np.vstack(
+        _by_block(blocks, partial(_vp_block, wt=wt), np.asarray(p, dtype=np.float64), v)
     )
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pv = p_bc.value
-        vv = v_bc.value
-        out = []
-        for pdf in batches:
-            for bid, start, d, wblk in _block_arrays(pdf):
-                w = _weights_of(d, wblk, wt)
-                nrows = d.shape[0]
-                cols = np.arange(d.shape[1])
-                diag_mask = cols[None, :] == (start + np.arange(nrows))[:, None]
-                w = np.where(diag_mask, 0.0, w)
-                pb = pv[start : start + nrows]
-                res = vv[start : start + nrows, None] * pb - w @ pv
-                out.append((bid, res.ravel()))
-        yield pd.DataFrame(out, columns=["block_id", "data"])
-
-    out = _gather_block_matrix(blocks.mapInPandas(partials, _PART_SCHEMA), dim)
-    p_bc.destroy()
-    if own_v:
-        v_bc.destroy()
-    return out
 
 
 def v_multiply_uniform(n_points: int, p: np.ndarray) -> np.ndarray:
@@ -423,8 +318,8 @@ def v_multiply_uniform(n_points: int, p: np.ndarray) -> np.ndarray:
 
 
 def cg_solve(
-    blocks: DataFrame,
-    v,  # np.ndarray or Broadcast[np.ndarray] (see v_multiply)
+    blocks: RDD,
+    v,  # np.ndarray or a block_matrix.ship handle (see v_multiply)
     bc_target: np.ndarray,
     x0: np.ndarray,
     cg_iters: int = 20,
@@ -494,68 +389,66 @@ def damds(
     per temp loop, floored to 0 below tMin = tMinFactor·positiveMin/√(2·dim)
     (damds/DAMDS.java:121-152, 234-238). Inner loop iterates SMACOF updates
     (BC then CG) until relative stress change < threshold.
+
+    ``blocks`` is decoded once into the anneal's RDD (``decoded_blocks``),
+    so the int16 bytes are held twice while it runs: in the caller's
+    DataFrame and in that RDD. ``matrix_stats`` is the pass that
+    materializes the RDD; it and any shipped v are released when the anneal
+    returns or raises.
     """
-    stats = matrix_stats(blocks)
-    if n_points < 2 or stats.sum_sq <= 0.0 or not np.isfinite(stats.positive_min):
-        # degenerate matrix (single point / all-identical vectors): nothing
-        # to embed — reachable from IncrementalMDS's first tiny micro-batch
+    with ExitStack() as release:
+        rb = release.enter_context(decoded_blocks(blocks))
+        stats = matrix_stats(rb)
         rng = np.random.RandomState(seed)
         x = rng.uniform(-0.5, 0.5, size=(n_points, dim))
         if x0 is not None:
+            # warm start (incremental/streaming refinement): carry over known
+            # rows, keep random init for rows beyond x0
             k = min(len(x0), n_points)
             x[:k] = np.asarray(x0, dtype=np.float64)[:k, :dim]
-        return DamdsResult(points=x, stress=0.0, temp_loops=0, stress_iters=0)
-    wt = (
-        sammon_transform(sammon_factor, stats.sum / stats.count)
-        if sammon_factor is not None
-        else None
-    )
-    inv_sum_dsq = 1.0 / stats.sum_sq
-    sqrt2d = float(np.sqrt(2.0 * dim))
-    t_max = stats.max / sqrt2d
-    t_min = t_min_factor * stats.positive_min / sqrt2d
-    t_cur = alpha * t_max
+        if n_points < 2 or stats.sum_sq <= 0.0 or not np.isfinite(stats.positive_min):
+            # degenerate matrix (single point / all-identical vectors): nothing
+            # to embed — reachable from IncrementalMDS's first tiny micro-batch
+            return DamdsResult(points=x, stress=0.0, temp_loops=0, stress_iters=0)
+        wt = (
+            sammon_transform(sammon_factor, stats.sum / stats.count)
+            if sammon_factor is not None
+            else None
+        )
+        inv_sum_dsq = 1.0 / stats.sum_sq
+        sqrt2d = float(np.sqrt(2.0 * dim))
+        t_max = stats.max / sqrt2d
+        t_min = t_min_factor * stats.positive_min / sqrt2d
+        t_cur = alpha * t_max
 
-    rng = np.random.RandomState(seed)
-    x = rng.uniform(-0.5, 0.5, size=(n_points, dim))
-    if x0 is not None:
-        # warm start (incremental/streaming refinement): carry over known
-        # rows, keep random init for rows beyond x0
-        k = min(len(x0), n_points)
-        x[:k] = np.asarray(x0, dtype=np.float64)[:k, :dim]
-    # Uniform-weight blocks (from_points / streaming): V is fully
-    # structured, so the CG multiply collapses to v_multiply_uniform —
-    # skip building AND broadcasting v entirely (zero CG barriers).
-    if uniform_weights and sammon_factor is None:
-        uniform_n: int | None = n_points
-        v_bc = None
-    else:
-        uniform_n = None
-        v = v_array(blocks, wt)
-        # v never changes across the anneal — one broadcast serves every CG
-        # iteration of every stress loop (was: one broadcast per V×p multiply).
-        v_bc = blocks.sparkSession.sparkContext.broadcast(v)
+        # Uniform-weight blocks (from_points / streaming): V is fully
+        # structured, so the CG multiply collapses to v_multiply_uniform —
+        # skip building AND shipping v entirely (zero CG barriers).
+        if uniform_weights and sammon_factor is None:
+            uniform_n: int | None = n_points
+            v_h = None
+        else:
+            uniform_n = None
+            # v never changes across the anneal — shipped once for every CG
+            # iteration of every stress loop
+            v_h = ship(rb.context, v_array(rb, wt))
+            release.callback(v_h.destroy)
 
-    total_stress_iters = 0
-    temp_loops = 0
-    # Fused kernel: the initial stress evaluation shares its distance pass
-    # with the first iteration's BofZ (same X, same t); within a temp loop
-    # each end-of-iteration stress is fused with the NEXT iteration's BofZ.
-    # One barrier per SMACOF iteration instead of two, and the dominant
-    # O(rows·N) distance computation runs once instead of twice — float
-    # semantics identical to the unfused kernels (see stress_bofz).
-    # try/finally: an exception inside any kernel must not leak the
-    # anneal-lifetime v broadcast (and its executor blocks) — ADVICE r2
-    try:
-        sig, pending_bc = stress_bofz(blocks, x, t_cur, inv_sum_dsq, wt)
+        total_stress_iters = 0
+        temp_loops = 0
+        # Fused kernel: the initial stress evaluation shares its distance pass
+        # with the first iteration's BofZ (same X, same t); within a temp loop
+        # each end-of-iteration stress is fused with the NEXT iteration's BofZ.
+        # One barrier per SMACOF iteration instead of two, and the dominant
+        # O(rows·N) distance computation runs once instead of twice — float
+        # semantics identical to the unfused kernels (see stress_bofz).
+        sig, pending_bc = stress_bofz(rb, x, t_cur, inv_sum_dsq, wt)
         while True:
             for _ in range(max_stress_loops):
-                bc = pending_bc if pending_bc is not None else bofz_bc(blocks, x, t_cur, wt)
+                bc = pending_bc if pending_bc is not None else bofz_bc(rb, x, t_cur, wt)
                 pending_bc = None
-                x, _ = cg_solve(
-                    blocks, v_bc, bc, x, cg_iters, cg_threshold, wt, uniform_n=uniform_n
-                )
-                new_sig, pending_bc = stress_bofz(blocks, x, t_cur, inv_sum_dsq, wt)
+                x, _ = cg_solve(rb, v_h, bc, x, cg_iters, cg_threshold, wt, uniform_n=uniform_n)
+                new_sig, pending_bc = stress_bofz(rb, x, t_cur, inv_sum_dsq, wt)
                 total_stress_iters += 1
                 if sig > 0 and abs(sig - new_sig) / max(new_sig, 1e-30) < stress_threshold:
                     sig = new_sig
@@ -568,9 +461,6 @@ def damds(
             if t_cur < t_min:
                 t_cur = 0.0
             pending_bc = None  # t changed → the speculative BofZ is stale
-    finally:
-        if v_bc is not None:
-            v_bc.destroy()
     return DamdsResult(points=x, stress=sig, temp_loops=temp_loops, stress_iters=total_stress_iters)
 
 
@@ -672,7 +562,7 @@ def damds_blocks_from_points(
 
     Shape: points pack into row-aligned blocks (same ``split_rows`` ranges as
     every other constructor) with ONE O(N·d) shuffle; the packed points
-    matrix — O(N·d), the same order of data the anneal broadcasts every
+    matrix — O(N·d), the same order of data the anneal ships every
     iteration as X — is gathered ordered and broadcast once; each row block
     then computes its full (block_rows × N) distance stripe IN PLACE with
     one numpy GEMM, so the O(N²) data is born in its final row-block home
@@ -710,7 +600,7 @@ def damds_blocks_from_points(
     )
 
     # O(N·d) ordered gather + broadcast (NOT O(N²)): the same data volume the
-    # anneal ships every iteration as the X broadcast / gathers.
+    # anneal ships every iteration as X.
     prows = sorted(packed.collect(), key=lambda r: r["blk"])
     pmat = np.vstack(
         [

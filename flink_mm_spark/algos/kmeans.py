@@ -6,38 +6,37 @@ current centroids are broadcast, each block flatMaps per-centroid partial
 reduceGroup divides (SURVEY I1/A2/F3). Empty clusters are re-emitted as
 zero centroids (kmeans/KMeansOriginal.java:119-142, I4).
 
-Spark shape: centroids live on the driver as a (k, d) ndarray broadcast
-each pass; assignment + per-partition partial sums happen in one Arrow
-batch kernel (mapInPandas — the analogue of the reference's block-local
-accumulation at kmeans/KMeansBlock.java:163-202); the only shuffle per pass
-is k×d tiny partial rows into a hash aggregate. The feature array is
-projected to d scalar float64 columns ONCE before the loop and persisted —
-Arrow then hands each batch over as contiguous columns (`to_numpy` per
-column is zero-copy), instead of 600k tiny per-row arrays that would cost
-a python-object vstack every pass. Each of the 100 passes re-reads cached
-columns — the loop-invariant caching the reference lacks across jobs
-(SURVEY §4.1).
+Spark shape: the loop is planned once. One Arrow pass decodes the feature
+arrays into one (rows, d) float64 block per partition, held as a
+loop-lifetime RDD (``linalg.block_matrix.array_blocks``) — the
+loop-invariant caching the reference lacks across jobs (SURVEY §4.1). Each
+pass is then one ``map_blocks`` job: the (k, d) centroids ride in the
+kernel's closure, each block returns its dense (k, d) sums and k counts
+(the analogue of the reference's block-local accumulation at
+kmeans/KMeansBlock.java:163-202), and the driver adds them up. No pass
+builds a DataFrame plan, a broadcast or an Arrow gather.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from contextlib import AbstractContextManager
+from functools import reduce
 
 import numpy as np
 import pandas as pd
+from pyspark import RDD
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-PARTIAL_SCHEMA = "cluster int, dim int, s double, cnt bigint"
+from flink_mm_spark.linalg.block_matrix import array_blocks, map_blocks
 
 # Assignment distances are computed in float32, chunked so the (chunk, k)
 # distance matrix stays cache-resident: the argmin pass is memory-bandwidth
 # bound, and float32 + chunking measured 3.3x faster than one full float64
 # (n, k) materialization (207→63 ms per 19k-row partition at k=1000, d=2).
 # Centroid SUMS still accumulate in float64 — only the argmin is float32.
-# kmeans_numpy_oracle uses the IDENTICAL kernel (same op order → bit-equal
-# assignments), so tests pin the distributed loop exactly.
+# kmeans_numpy_oracle and assign_clusters use the IDENTICAL kernel (same op
+# order → bit-equal assignments), so tests pin the distributed loop exactly.
 ASSIGN_CHUNK = 2048
 
 
@@ -53,100 +52,59 @@ def _argmin_f32(m: np.ndarray, cents32: np.ndarray, c_sq32: np.ndarray) -> np.nd
     return out
 
 
-def _columnar(points: DataFrame, features_col: str, d: int) -> DataFrame:
-    """Project array<double> features into d scalar columns f0..f{d-1}."""
-    return points.select(
-        *[F.col(features_col)[i].cast("double").alias(f"f{i}") for i in range(d)]
-    )
-
-
-def _batch_matrix(pdf: pd.DataFrame, d: int) -> np.ndarray:
-    return np.column_stack([pdf[f"f{i}"].to_numpy(dtype=np.float64) for i in range(d)])
+def _f32(centroids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    cents32 = np.asarray(centroids, dtype=np.float64).astype(np.float32)
+    return cents32, (cents32 * cents32).sum(1)[None, :]
 
 
 def assign_clusters(points: DataFrame, centroids: np.ndarray, features_col: str = "features") -> DataFrame:
-    """Nearest-centroid id per point (SURVEY F3 argmin-Euclidean)."""
-    c = np.asarray(centroids, dtype=np.float64)
-    bc = points.sparkSession.sparkContext.broadcast(c)
+    """Nearest-centroid id per point (SURVEY F3 argmin-Euclidean), through
+    the loop's own ``_argmin_f32``; the centroids ride in the UDF's closure."""
+    cents32, c_sq32 = _f32(centroids)
 
     @F.pandas_udf("int")
     def assign_udf(feats: pd.Series) -> pd.Series:
-        cents = bc.value
-        m = np.vstack(feats.to_numpy())
-        # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2 ; argmin over centroids
-        d2 = (m * m).sum(1)[:, None] - 2.0 * (m @ cents.T) + (cents * cents).sum(1)[None, :]
-        return pd.Series(np.argmin(d2, axis=1).astype(np.int32))
+        return pd.Series(_argmin_f32(np.vstack(feats.to_numpy()), cents32, c_sq32).astype(np.int32))
 
     return points.withColumn("cluster", assign_udf(features_col))
 
 
-def _lloyd_step_columnar(
-    cols_df: DataFrame,
-    centroids: np.ndarray,
-    n_parts: int | None = None,
-    return_counts: bool = False,
-) -> np.ndarray | tuple[np.ndarray, np.ndarray]:
-    """One Lloyd pass over the f0..f{d-1} columnar layout.
+def _point_blocks(points: DataFrame, features_col: str, d: int) -> AbstractContextManager[RDD]:
+    """The loop-lifetime RDD: one (rows, d) float64 block per partition.
 
-    With ``return_counts`` also returns the per-cluster assignment counts of
-    this pass — the exact integers the oracle-graded ``kmeans_full`` compares
-    on (sums reconstruct as mean×count)."""
-    k, d = centroids.shape
-    if n_parts is None:
-        n_parts = cols_df.rdd.getNumPartitions()
-    bc = cols_df.sparkSession.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
+    The features are projected to d scalar columns first, so Arrow hands
+    each batch over as contiguous columns instead of per-row arrays.
+    """
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value
-        cents32 = cents.astype(np.float32)
-        c_sq32 = (cents32 * cents32).sum(1)[None, :]
-        sums = np.zeros((k, d))
-        cnts = np.zeros(k, dtype=np.int64)
-        for pdf in batches:
-            m = _batch_matrix(pdf, d)
-            a = _argmin_f32(m, cents32, c_sq32)
-            for j in range(d):  # bincount beats np.add.at's buffered scatter
-                sums[:, j] += np.bincount(a, weights=m[:, j], minlength=k)
-            cnts += np.bincount(a, minlength=k)
-        live = np.nonzero(cnts)[0]
-        n = len(live)
-        yield pd.DataFrame(
-            {
-                "cluster": np.repeat(live, d).astype(np.int32),
-                "dim": np.tile(np.arange(d, dtype=np.int32), n),
-                "s": sums[live].ravel(),
-                "cnt": np.repeat(cnts[live], d),
-            }
-        )
+    def encode(batches):
+        parts = [np.column_stack([c.to_numpy(zero_copy_only=False) for c in b.columns]) for b in batches]
+        yield np.concatenate(parts) if parts else np.empty((0, d))
 
-    partials_df = cols_df.mapInPandas(partials, PARTIAL_SCHEMA)
-    if k * d * n_parts > 2_000_000:
-        # Large fan-in: pre-combine with one shuffle before the gather, the
-        # treeAggregate shape (bounds driver inflow to k·d rows).
-        partials_df = partials_df.groupBy("cluster", "dim").agg(
-            F.sum("s").alias("s"), F.sum("cnt").alias("cnt")
-        )
-    # Final combine on the driver — one Spark stage per pass; the partial
-    # rows are tiny (≤ k·d per partition) so the collect is the reference's
-    # A6 ordered gather, Arrow-accelerated.
-    pdf = partials_df.toPandas()
-    bc.destroy()  # per-pass broadcast; job is done once toPandas returns
-    g = pdf.groupby(["cluster", "dim"], sort=False).agg(s=("s", "sum"), cnt=("cnt", "sum")).reset_index()
-    new = np.zeros((k, d))  # vanished clusters stay zero (reference I4)
-    counts = np.zeros(k, dtype=np.int64)
-    new[g["cluster"], g["dim"]] = g["s"]
-    counts[g["cluster"]] = g["cnt"]
-    nz = counts > 0
-    new[nz] /= counts[nz, None]
-    if return_counts:
-        return new, counts
-    return new
+    cols = points.select(
+        *[F.col(features_col)[i].cast("double").alias(f"f{i}") for i in range(d)]
+    )
+    # Parallelism floor: a handful of fat parquet splits would serialize the
+    # per-pass kernel (3 partitions on a 32-core box = 10% utilization).
+    # One partition per core keeps the compute-bound regime (large k·d) at
+    # full utilization; the overhead-bound small-k case loses only a few
+    # percent vs fewer partitions. On a real cluster the input partitioning
+    # already exceeds this and is kept.
+    floor = max(1, points.sparkSession.sparkContext.defaultParallelism)
+    if cols.rdd.getNumPartitions() < floor:
+        cols = cols.repartition(floor)
+    return array_blocks(cols, encode)
 
 
-def lloyd_step(points: DataFrame, centroids: np.ndarray, features_col: str = "features") -> np.ndarray:
-    """One Lloyd pass: returns the new (k, d) centroid array."""
-    centroids = np.asarray(centroids, dtype=np.float64)
-    return _lloyd_step_columnar(_columnar(points, features_col, centroids.shape[1]), centroids)
+def _partials(m: np.ndarray, cents: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    k, d = cents.shape
+    a = _argmin_f32(m, *_f32(cents))
+    # bincount beats np.add.at's buffered scatter
+    sums = np.column_stack([np.bincount(a, weights=m[:, j], minlength=k) for j in range(d)])
+    return sums, np.bincount(a, minlength=k)
+
+
+def _add(a: tuple, b: tuple) -> tuple:
+    return a[0] + b[0], a[1] + b[1]
 
 
 def kmeans(
@@ -163,41 +121,28 @@ def kmeans(
     pass aggregated so the full loop is oracle-gradeable (``kmeans_full``).
     """
     centroids = np.asarray(init_centroids, dtype=np.float64).copy()
-    d = centroids.shape[1]
-    cols_df = _columnar(points, features_col, d)
-    # Parallelism floor: a handful of fat parquet splits would serialize the
-    # per-pass kernel (3 partitions on a 32-core box = 10% utilization).
-    # One partition per core keeps the compute-bound regime (large k·d) at
-    # full utilization; the overhead-bound small-k case loses only a few
-    # percent vs fewer partitions. On a real cluster the input partitioning
-    # already exceeds this and is kept.
-    floor = max(1, points.sparkSession.sparkContext.defaultParallelism)
-    if cols_df.rdd.getNumPartitions() < floor:
-        cols_df = cols_df.repartition(floor)
-    cols_df = cols_df.persist(StorageLevel.MEMORY_AND_DISK)
-    spark = points.sparkSession
-    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev_batch = spark.conf.get(batch_conf, None)
-    try:
-        # one Arrow batch per partition: each pass hands the kernel whole
-        # cached columns instead of several 10k-row slices
-        spark.conf.set(batch_conf, "1048576")
-        cols_df.count()  # materialize the cache before timing-sensitive loop
-        n_parts = cols_df.rdd.getNumPartitions()  # loop-invariant
-        traj: list[tuple[np.ndarray, np.ndarray]] = []
+    k, d = centroids.shape
+    traj: list[tuple[np.ndarray, np.ndarray]] = []
+    with _point_blocks(points, features_col, d) as blocks:
+        # Large fan-in: combine in a tree, bounding driver inflow to k·d
+        # per level; otherwise the driver adds the per-partition partials.
+        large = k * d * blocks.getNumPartitions() > 2_000_000
         for _ in range(n_iters):
-            centroids, counts = _lloyd_step_columnar(
-                cols_df, centroids, n_parts, return_counts=True
-            )
+            out = map_blocks(blocks, _partials, centroids, reduce=_add if large else None)
+            if not large:
+                out = reduce(_add, out, (np.zeros((k, d)), np.zeros(k, dtype=np.int64)))
+            sums, counts = out
+            centroids = np.zeros((k, d))  # vanished clusters stay zero (reference I4)
+            nz = counts > 0
+            centroids[nz] = sums[nz] / counts[nz, None]
             if trajectory:
                 traj.append((centroids.copy(), counts.copy()))
-        return traj if trajectory else centroids
-    finally:
-        cols_df.unpersist()
-        if prev_batch is None:
-            spark.conf.unset(batch_conf)
-        else:
-            spark.conf.set(batch_conf, prev_batch)
+    return traj if trajectory else centroids
+
+
+def lloyd_step(points: DataFrame, centroids: np.ndarray, features_col: str = "features") -> np.ndarray:
+    """One Lloyd pass: returns the new (k, d) centroid array."""
+    return kmeans(points, centroids, 1, features_col)
 
 
 def kmeans_numpy_oracle(data: np.ndarray, init: np.ndarray, n_iters: int) -> np.ndarray:
@@ -208,9 +153,7 @@ def kmeans_numpy_oracle(data: np.ndarray, init: np.ndarray, n_iters: int) -> np.
     k = cents.shape[0]
     data = np.asarray(data, dtype=np.float64)
     for _ in range(n_iters):
-        cents32 = cents.astype(np.float32)
-        c_sq32 = (cents32 * cents32).sum(1)[None, :]
-        a = _argmin_f32(data, cents32, c_sq32)
+        a = _argmin_f32(data, *_f32(cents))
         new = np.zeros_like(cents)
         for c in range(k):
             mask = a == c

@@ -8,7 +8,11 @@ against numpy oracles in tests/.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 import numpy as np
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -314,8 +318,8 @@ def mds_stress(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pins the anneal to a finite, SQL-replayable op sequence: distributed
 # stats → t schedule → B(Z)·Z at the integer start layout → two CG
 # iterations of V·X = BC → final stress σ(X₁). Every stage runs through the
-# REAL distributed kernels (stress_bofz fusion, the anneal-lifetime v
-# broadcast, cg_solve) — the same code path the long anneal takes, with the
+# REAL distributed kernels (stress_bofz fusion, the anneal-lifetime v,
+# cg_solve) — the same code path the long anneal takes, with the
 # loop depth chosen so the oracle can unroll it. Weights use a second,
 # all-POSITIVE side file ((k·13 % 30000)+1) so V is diagonally dominant →
 # CG is well-conditioned; the start layout x₀_i = (i%16, i%3−1, i%7−3) has
@@ -467,8 +471,8 @@ def _ensure_anneal_fixture() -> tuple[str, str]:
 def damds_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE DA-MDS anneal (SURVEY §3.1 lifecycle / I3,
     damds/DAMDS.java:27-253) through the real driver loop — distributed
-    stats, temperature schedule, fused stress+BofZ, anneal-lifetime v
-    broadcast, CG inner solve — graded EXACTLY against an oracle that
+    stats, temperature schedule, fused stress+BofZ, anneal-lifetime v,
+    CG inner solve — graded EXACTLY against an oracle that
     unrolls the same op sequence (see ``_AN_ORACLE`` comment for the
     determinism argument). The embeddings-space long anneal is
     ``damds_embed_demo``."""
@@ -651,15 +655,23 @@ _CELLS_CTE = f"""
 """
 
 
-def _fixture_blocks(spark: SparkSession, with_weights: bool = True) -> DataFrame:
+@contextmanager
+def _fixture_blocks(spark: SparkSession, with_weights: bool = True) -> Iterator[RDD]:
+    """The side-file fixture as the kernels' decoded block RDD; both it and
+    the block DataFrame it decodes are released on exit."""
     dist_path, weight_path = _ensure_sidefile_fixture()
-    return damds_mod.damds_blocks_from_files(
+    df = damds_mod.damds_blocks_from_files(
         spark,
         dist_path,
         _SF_N,
         weight_path=weight_path if with_weights else None,
         n_blocks=_SF_BLOCKS,
     )
+    try:
+        with damds_mod.decoded_blocks(df) as blocks:
+            yield blocks
+    finally:
+        df.unpersist()
 
 
 def _p_vectors() -> np.ndarray:
@@ -708,14 +720,11 @@ def damds_varray_vp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor = 0.25) divides per cell — identical IEEE ops per cell in both
     engines, summed order-insensitively to 6 decimals.
     """
-    blocks = _fixture_blocks(spark)
-    try:
+    with _fixture_blocks(spark) as blocks:
         p = _p_vectors()
         v = damds_mod.v_array(blocks)
         v_sam = damds_mod.v_array(blocks, wt=damds_mod.sammon_transform(1.0, 0.25))
         vp = damds_mod.v_multiply(blocks, v, p)
-    finally:
-        blocks.unpersist()
     vq = np.rint(v * 32767.0).astype(np.int64)
     vpq = np.rint(vp * 32767.0).astype(np.int64)
     rows = [
@@ -762,12 +771,9 @@ def damds_bofz_bc(spark: SparkSession, sf_dir: str) -> DataFrame:
     order); only the row-sum order differs, absorbed by rounding to 4
     decimals (~6 orders of margin). Exercises the full off-diag + diagonal
     (−Σ B_ij) assembly path."""
-    blocks = _fixture_blocks(spark)
-    try:
+    with _fixture_blocks(spark) as blocks:
         x = np.arange(_SF_N, dtype=np.float64).reshape(-1, 1)
         bz = damds_mod.bofz_bc(blocks, x, t_cur=0.0).ravel()
-    finally:
-        blocks.unpersist()
     rows = [(int(i), float(np.round(bz[i], 4))) for i in range(_SF_N)]
     return spark.createDataFrame(rows, "point_id int, bz double")
 
@@ -803,11 +809,8 @@ def damds_temp_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's recursive CTE replays the same multiply chain — so the doubles
     hash-match bit for bit. Also exercises the I2 termination shape (the
     loop's floor-and-stop criterion)."""
-    blocks = _fixture_blocks(spark, with_weights=False)
-    try:
+    with _fixture_blocks(spark, with_weights=False) as blocks:
         stats = damds_mod.matrix_stats(blocks)
-    finally:
-        blocks.unpersist()
     sqrt2d = float(np.sqrt(2.0 * 3))
     t_max = stats.max / sqrt2d
     t_min = 0.5 * stats.positive_min / sqrt2d
@@ -899,9 +902,8 @@ def damds_cg_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     criterion at thresholds 0.9 / 0.01 — chosen 40× either side of the
     measured ratio ≈ 0.49 so float wobble can never flip them.
     """
-    blocks = _fixture_blocks(spark)
     wt = lambda w, d: np.abs(w)  # noqa: E731 — the reference's wt hook seam
-    try:
+    with _fixture_blocks(spark) as blocks:
         v = damds_mod.v_array(blocks, wt=wt)
         i = np.arange(_SF_N)
         dvals = np.arange(3)
@@ -914,8 +916,6 @@ def damds_cg_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         # incremental r, which the oracle replays): one more distributed
         # V×p — the same quantity cg_solve's while-condition tests.
         r_true = bc - damds_mod.v_multiply(blocks, v, x, wt=wt)
-    finally:
-        blocks.unpersist()
     rtr0_q = int(np.rint((bc * bc).sum()))
     rtr2 = float((r_true * r_true).sum())
     stop_loose = bool(rtr2 <= rtr0_q * 0.9)

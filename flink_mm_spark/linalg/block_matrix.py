@@ -15,14 +15,27 @@ serves relational checks and SQL interop.
 Row-aligned splitting (the reference's createInputSplits,
 mm/MatrixInputFormat.java:32-57: q = rows/splits with the remainder spread
 one row each to the first r blocks) is reproduced in ``split_rows``.
+
+Iterative drivers (k-means, the DA-MDS anneal) plan their step once, the way
+the reference's bulk iterations do: ``array_blocks`` turns a DataFrame into a
+loop-lifetime RDD of decoded numpy blocks in one Arrow pass, and every pass
+is one ``map_blocks`` job over it, with the per-pass driver state (centroids,
+X, p) in the kernel's closure. No pass builds a DataFrame plan or an Arrow
+gather.
 """
 
 from __future__ import annotations
 
+import pickle
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
 import numpy as np
+from pyspark import RDD, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.storagelevel import StorageLevel
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -109,3 +122,72 @@ def blocks_to_cells(blocks: DataFrame) -> DataFrame:
         (F.col("pos") % F.col("matrix_cols")).cast("long").alias("col_id"),
         F.col("value"),
     )
+
+
+@contextmanager
+def array_blocks(df: DataFrame, encode: Callable[[Iterator], Iterator]) -> Iterator[RDD]:
+    """A loop-lifetime RDD of decoded numpy blocks, released on exit.
+
+    One Arrow pass (``mapInArrow``) runs ``encode`` over each partition's
+    record batches; every record it yields (a tuple of ints and ndarrays)
+    travels as one pickled binary cell and comes back decoded through
+    ``.rdd.map``, persisted MEMORY_AND_DISK. Nothing runs here: the loop's
+    first ``map_blocks`` pass materializes the cache (no separate count job).
+    """
+    import pyarrow as pa
+
+    def cells(batches):
+        for rec in encode(batches):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([pickle.dumps(rec, protocol=5)], pa.binary())], ["rec"]
+            )
+
+    blocks = (
+        df.mapInArrow(cells, "rec binary")
+        .rdd.map(lambda row: pickle.loads(row[0]))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    try:
+        yield blocks
+    finally:
+        blocks.unpersist()
+
+
+class _Inline:
+    """Driver state small enough to ride in a kernel's pickled closure."""
+
+    def __init__(self, value):
+        self.value = value
+
+    def destroy(self) -> None:
+        pass
+
+
+def ship(sc: SparkContext, arr: np.ndarray):
+    """Driver state for block kernels, read as ``.value``, freed by ``.destroy()``.
+
+    Below PySpark's own command-broadcast threshold
+    (``spark.broadcast.UDFCompressionThreshold``, 1 MiB) the array rides in
+    the kernel's closure; above it, one explicit broadcast.
+    """
+    if arr.nbytes < sc._jvm.PythonUtils.getBroadcastThreshold(sc._jsc):
+        return _Inline(arr)
+    return sc.broadcast(arr)
+
+
+def map_blocks(blocks: RDD, fn: Callable, *state, reduce: Callable | None = None):
+    """One pass: ``fn(block, *state values)`` over every cached block, one job.
+
+    ndarray ``state`` is shipped for this pass (``ship``) and freed when the
+    job ends; already-shipped handles pass through untouched. Returns the
+    per-block results in partition order, or their ``treeReduce(reduce)``.
+    """
+    sc = blocks.context
+    shipped = [ship(sc, s) if isinstance(s, np.ndarray) else s for s in state]
+    try:
+        out = blocks.map(lambda b: fn(b, *(s.value for s in shipped)))
+        return out.treeReduce(reduce) if reduce is not None else out.collect()
+    finally:
+        for s, orig in zip(shipped, state):
+            if s is not orig:
+                s.destroy()

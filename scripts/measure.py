@@ -14,7 +14,7 @@ starts, then runs bench.py's warm-up.
   line. Two sf dirs (the sf0.01/sf0.1 growth ladder) print one line per
   entry with both medians and ``growth_10x``, the second median over the
   first. The names ``kmeans_d2_k100_i10`` and ``kmeans_d2_k1000_i10`` run
-  bench.py's k-means.
+  bench.py's k-means, and ``damds_n500_d3`` its DA-MDS anneal.
 - ``plans``: ``explain("formatted")`` and the AQE-final executed plan (after
   one execution; AQE hides the final plan until then) at sf0.001, written to
   ``<out_dir>/<name>_<tag>.txt``.
@@ -44,9 +44,11 @@ from flink_mm_spark import registry
 from flink_mm_spark.session import get_spark
 from perfbench.eventlog import Span, attribute, read_events
 
-KMEANS = {
+# bench.py's iterative workloads, timed by the names bench.py gives them
+BENCH_LOOPS = {
     "kmeans_d2_k100_i10": bench.bench_kmeans,
     "kmeans_d2_k1000_i10": bench.bench_kmeans_k1000,
+    "damds_n500_d3": bench.bench_damds,
 }
 PLAN_SF_DIR = str(Path(bench.SF_DIR).with_name("sf0.001"))
 
@@ -130,7 +132,7 @@ def start(mode, names, sf_dir, extra_conf=None):
     """The one set-up path: registry, name check, session, warm-up."""
     registry.load_all()
     known = {
-        "time": set(registry.QUERIES) | set(KMEANS),
+        "time": set(registry.QUERIES) | set(BENCH_LOOPS),
         "plans": set(registry.QUERIES),
         "shuffle": set(AUDITED) & set(registry.QUERIES),
     }[mode]
@@ -144,8 +146,8 @@ def start(mode, names, sf_dir, extra_conf=None):
 
 
 def entry_call(spark, name, sf_dir):
-    if name in KMEANS:
-        return lambda: KMEANS[name](spark, sf_dir)
+    if name in BENCH_LOOPS:
+        return lambda: BENCH_LOOPS[name](spark, sf_dir)
     return lambda: bench.force(registry.QUERIES[name].fn(spark, sf_dir))
 
 

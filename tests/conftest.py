@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -70,3 +71,35 @@ def assert_matches_oracle(spark_df, oracle: str, sf_dir: str, rtol: float | None
                     assert gvf == pytest.approx(wvf, rel=rtol, abs=1e-12), ctx
             else:
                 assert gv == wv, ctx
+
+
+def spark_work(spark, fn) -> tuple[int, int]:
+    """(Spark jobs, SQL executions) that ``fn()`` starts.
+
+    Jobs are counted in a job group of their own, SQL executions by the
+    growth of the latest execution id in the SQL status store (which keeps
+    only the last ``spark.sql.ui.retainedExecutions``). Both stores are fed
+    by listeners, so each read waits for the listener bus to drain. Works
+    with the UI off; RDD jobs start no SQL execution.
+    """
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    group = f"spark-work-{uuid.uuid4().hex}"
+    before = last_execution()
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    executions = last_execution() - before
+    return len(sc.statusTracker().getJobIdsForGroup(group)), executions
+
+
+def persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()

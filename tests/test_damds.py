@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from flink_mm_spark.algos import damds as D
+from tests.conftest import persisted_rdds, spark_work
 
 N = 60
 DIM = 3
@@ -36,11 +37,18 @@ def problem():
 
 
 @pytest.fixture(scope="module")
-def blocks(spark, problem):
+def blocks_df(spark, problem):
     q, w, _ = problem
     df = D.damds_blocks(spark, q, w, n_blocks=5)
     yield df
     df.unpersist()
+
+
+@pytest.fixture(scope="module")
+def blocks(blocks_df):
+    """The kernels' input: the block DataFrame decoded into numpy blocks."""
+    with D.decoded_blocks(blocks_df) as rdd:
+        yield rdd
 
 
 def _dq(q):
@@ -116,10 +124,8 @@ def test_stress_bofz_fusion_bitwise_equals_unfused(blocks, problem, t_cur):
     sumsq = (_dq(q)[q >= 0] ** 2).sum()
     sig, bc = D.stress_bofz(blocks, x, t_cur, 1.0 / sumsq)
     np.testing.assert_array_equal(bc, D.bofz_bc(blocks, x, t_cur))
-    # stress totals sum per-block partials in block order (driver) vs the
-    # unfused kernel's Spark-side sum — identical partials, so agreement is
-    # to the last couple of ulps even when the reduction order differs
-    np.testing.assert_allclose(sig, D.stress(blocks, x, t_cur, 1.0 / sumsq), rtol=1e-12)
+    # both sum the identical per-block partials in block_id order
+    assert sig == D.stress(blocks, x, t_cur, 1.0 / sumsq)
 
 
 def _numpy_v(q, w):
@@ -159,15 +165,16 @@ def test_damds_full_deterministic_and_converges(spark, problem):
         r2 = D.damds(blocks, N, max_temp_loops=2, max_stress_loops=3, cg_iters=6)
         np.testing.assert_array_equal(r1.points, r2.points)  # deterministic
         # stress at the solution is far below the random-layout stress
-        stats = D.matrix_stats(blocks)
-        rng_stress = D.stress(blocks, np.random.RandomState(0).uniform(-0.5, 0.5, (N, DIM)),
-                              0.0, 1.0 / stats.sum_sq)
+        with D.decoded_blocks(blocks) as rb:
+            stats = D.matrix_stats(rb)
+            rng_stress = D.stress(rb, np.random.RandomState(0).uniform(-0.5, 0.5, (N, DIM)),
+                                  0.0, 1.0 / stats.sum_sq)
         assert r1.stress < rng_stress * 0.8
     finally:
         blocks.unpersist()
 
 
-def test_sammon_weight_transform(spark, problem, blocks):
+def test_sammon_weight_transform(spark, problem, blocks, blocks_df):
     """Sammon weighting (F11, io/RowBlock.java:139-142) applied as the
     read-time weight transform changes v_array exactly like the dense
     numpy mirror w / max(d, factor*avg)."""
@@ -185,7 +192,7 @@ def test_sammon_weight_transform(spark, problem, blocks):
     want = 1.0 + w_sam.sum(axis=1)
     np.testing.assert_allclose(got, want, rtol=1e-10)
     # and the full anneal accepts the hook end-to-end
-    res = D.damds(blocks, len(q), dim=DIM, max_temp_loops=1, max_stress_loops=1, sammon_factor=factor)
+    res = D.damds(blocks_df, len(q), dim=DIM, max_temp_loops=1, max_stress_loops=1, sammon_factor=factor)
     assert np.isfinite(res.stress)
 
 
@@ -200,8 +207,9 @@ def test_blocks_from_files_match_driver_blocks(spark, problem, blocks, tmp_path)
     write_matrix_file(wp, w, "int16", "big")
     fb = D.damds_blocks_from_files(spark, dp, len(q), wp, n_blocks=7)
     try:
-        np.testing.assert_allclose(D.v_array(fb), D.v_array(blocks), rtol=1e-12)
-        s1 = D.stress(fb, x, 0.05, 1.0)
+        with D.decoded_blocks(fb) as fbr:
+            np.testing.assert_allclose(D.v_array(fbr), D.v_array(blocks), rtol=1e-12)
+            s1 = D.stress(fbr, x, 0.05, 1.0)
         s2 = D.stress(blocks, x, 0.05, 1.0)
         assert s1 == pytest.approx(s2, rel=1e-12)
     finally:
@@ -253,7 +261,7 @@ def test_degenerate_single_point(spark):
         blocks.unpersist()
 
 
-def test_config_properties_parity(spark, problem, blocks, tmp_path):
+def test_config_properties_parity(spark, problem, blocks_df, tmp_path):
     """A reference-format config.properties drives the anneal unchanged
     (damds/configuration/section/DAMDSSection.java key set)."""
     from flink_mm_spark.algos.damds_config import (
@@ -291,7 +299,7 @@ def test_config_properties_parity(spark, problem, blocks, tmp_path):
         "cg_iters": 8,
         "cg_threshold": 0.0001,
     }
-    res = damds_from_config(blocks, cfg)
+    res = damds_from_config(blocks_df, cfg)
     assert res.points.shape == (len(q), 3)
     assert np.isfinite(res.stress)
 
@@ -406,11 +414,12 @@ def test_v_multiply_uniform_matches_distributed(spark):
     pts_df = spark.createDataFrame(pdf, "point_id long, vec array<double>")
     fb = D.damds_blocks_from_points(spark, pts_df, n_points=n, n_blocks=3)
     try:
-        v = D.v_array(fb)
-        np.testing.assert_allclose(v, np.full(n, float(n)), rtol=0, atol=0)
-        p = rng.standard_normal((n, 2))
-        got = D.v_multiply_uniform(n, p)
-        want = D.v_multiply(fb, v, p)
+        with D.decoded_blocks(fb) as fbr:
+            v = D.v_array(fbr)
+            np.testing.assert_allclose(v, np.full(n, float(n)), rtol=0, atol=0)
+            p = rng.standard_normal((n, 2))
+            got = D.v_multiply_uniform(n, p)
+            want = D.v_multiply(fbr, v, p)
         np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-12)
         # the full anneal on the uniform fast path agrees with the
         # distributed-multiply anneal to float-reordering precision
@@ -421,3 +430,37 @@ def test_v_multiply_uniform_matches_distributed(spark):
         np.testing.assert_allclose(r_fast.points, r_dist.points, atol=1e-6)
     finally:
         fb.unpersist()
+
+
+def test_temperature_loop_plans_once(spark):
+    """One more temperature loop of the uniform anneal is one BofZ pass and
+    one fused stress pass over the loop-lifetime blocks: two jobs, no SQL
+    execution."""
+    import pandas as pd
+
+    rng = np.random.RandomState(4)
+    n = 30
+    pdf = pd.DataFrame({"point_id": np.arange(n, dtype=np.int64), "vec": list(rng.standard_normal((n, 5)))})
+    fb = D.damds_blocks_from_points(spark, spark.createDataFrame(pdf, "point_id long, vec array<double>"), n_points=n, n_blocks=3)
+    res = {}
+
+    def run(loops):
+        res[loops] = D.damds(fb, n, max_temp_loops=loops, max_stress_loops=1, uniform_weights=True)
+
+    try:
+        jobs2, sql2 = spark_work(spark, lambda: run(2))
+        jobs3, sql3 = spark_work(spark, lambda: run(3))
+    finally:
+        fb.unpersist()
+    assert (res[2].temp_loops, res[3].temp_loops) == (2, 3)
+    assert (jobs3 - jobs2, sql3 - sql2) == (2, 0)
+
+
+def test_anneal_blocks_released_on_return_and_raise(spark, blocks_df):
+    blocks_df.count()  # the caller's own cache is not the anneal's to release
+    start = persisted_rdds(spark)
+    D.damds(blocks_df, N, dim=DIM, max_temp_loops=1, max_stress_loops=1)
+    assert persisted_rdds(spark) == start
+    with pytest.raises(ValueError):  # an x0 of the wrong dimension
+        D.damds(blocks_df, N, dim=DIM, max_temp_loops=1, x0=np.zeros((N, DIM - 1)))
+    assert persisted_rdds(spark) == start

@@ -5,8 +5,14 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from flink_mm_spark.algos.kmeans import assign_clusters, kmeans, kmeans_numpy_oracle
-from tests.conftest import SF_DIR
+from flink_mm_spark.algos.kmeans import (
+    _argmin_f32,
+    assign_clusters,
+    kmeans,
+    kmeans_numpy_oracle,
+    lloyd_step,
+)
+from tests.conftest import SF_DIR, persisted_rdds, spark_work
 
 
 def _points_df(spark, data):
@@ -35,6 +41,34 @@ def test_assign_clusters(spark):
     want = np.argmin(d2, axis=1)
     got = np.array([r["cluster"] for r in rows])
     np.testing.assert_array_equal(got, want)
+    # the loop's own assignment kernel: no second argmin to disagree at ties
+    cents32 = cents.astype(np.float32)
+    np.testing.assert_array_equal(got, _argmin_f32(data, cents32, (cents32 * cents32).sum(1)[None, :]))
+
+
+def test_passes_plan_once(spark):
+    """Each Lloyd pass is one RDD job over the loop-lifetime blocks: three
+    more passes add exactly three jobs and no SQL execution."""
+    rng = np.random.RandomState(8)
+    data = rng.standard_normal((200, 2))
+    df = _points_df(spark, data)
+    jobs2, sql2 = spark_work(spark, lambda: kmeans(df, data[:4], n_iters=2))
+    jobs5, sql5 = spark_work(spark, lambda: kmeans(df, data[:4], n_iters=5))
+    assert (jobs5 - jobs2, sql5 - sql2) == (3, 0)
+
+
+def test_loop_blocks_released_on_return_and_raise(spark):
+    rng = np.random.RandomState(9)
+    data = rng.standard_normal((100, 2))
+    df = _points_df(spark, data)
+    start = persisted_rdds(spark)
+    kmeans(df, data[:3], n_iters=2)
+    lloyd_step(df, data[:3])
+    assert persisted_rdds(spark) == start
+    for call in (lambda c: kmeans(df, c, n_iters=2), lambda c: lloyd_step(df, c)):
+        with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
+            call(np.zeros((3, 3)))  # 3-d centroids for 2-d points fail the first pass
+        assert persisted_rdds(spark) == start
 
 
 def test_empty_cluster_stays_zero(spark):

@@ -79,6 +79,24 @@ def test_no_ui_or_status_rest_api_outside_perfbench():
     assert found == [], found
 
 
+def test_no_session_conf_writes_under_algos():
+    """The iterative drivers share the caller's session: none of them may
+    set or unset a session conf, which every other query on that session
+    would run under meanwhile."""
+    found = []
+    for path in sorted((PKG / "algos").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("set", "unset")
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"
+            ):
+                found.append((path.relative_to(PKG).as_posix(), node.lineno))
+    assert found == [], found
+
+
 def test_keep_latest_releases_before_persist(spark):
     """Identical plans: the second generation must stay cached (releasing
     after persisting would uncache it, since Spark's CacheManager treats a

@@ -27,6 +27,7 @@ _spec.loader.exec_module(measure)
         ["plans", "unused_dir", "before", "kmeans_d2_k100_i10"],
         ["shuffle", "no_such_entry"],
         ["shuffle", "top_orders_by_price"],  # registered, but not AUDITED
+        ["time", "damds_n500_d3", "no_such_entry"],
     ],
 )
 def test_unknown_name_raises_before_session(monkeypatch, argv):
@@ -36,6 +37,26 @@ def test_unknown_name_raises_before_session(monkeypatch, argv):
     monkeypatch.setattr(measure, "get_spark", no_session)
     with pytest.raises(KeyError):
         measure.main(argv)
+
+
+def test_bench_loop_names_resolve(monkeypatch):
+    """bench.py's k-means and DA-MDS names pass the name check and run
+    bench.py's own functions."""
+
+    class SessionStart(Exception):
+        pass
+
+    def no_session(*a, **k):
+        raise SessionStart
+
+    monkeypatch.setattr(measure, "get_spark", no_session)
+    with pytest.raises(SessionStart):
+        measure.main(["time", "kmeans_d2_k100_i10", "kmeans_d2_k1000_i10", "damds_n500_d3"])
+    assert measure.BENCH_LOOPS["damds_n500_d3"] is measure.bench.bench_damds
+    calls = []
+    monkeypatch.setitem(measure.BENCH_LOOPS, "damds_n500_d3", lambda *a: calls.append(a))
+    measure.entry_call("session", "damds_n500_d3", SF_DIR)()
+    assert calls == [("session", SF_DIR)]
 
 
 def test_time_one_dir_and_ladder(spark, monkeypatch, capsys):
