@@ -237,9 +237,9 @@ def bench_damds(spark, sf_dir: str, n: int = 500) -> None:
         )
     )
     # block sizing: ~31 rows/block at N=500. The anneal pays one barrier of
-    # n_blocks tasks per kernel pass (22 jobs per run, construction
-    # included): 32 one-row-heavy tasks measured 14.4-16.8 s vs 12.7 s at
-    # 16 — schedule cost, not compute.
+    # min(n_blocks, cores) tasks per kernel pass (place_blocks; 22 jobs per
+    # run, construction included): 32 one-row-heavy tasks measured
+    # 14.4-16.8 s vs 12.7 s at 16 — schedule cost, not compute.
     # At cluster N the same rule (rows/block >> 1, blocks ≈ a few per core)
     # holds; block count is a constructor knob, not a semantic change.
     blocks = damds_blocks_from_points(spark, pts, n_points=n, n_blocks=16)

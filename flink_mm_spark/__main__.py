@@ -59,7 +59,7 @@ def cmd_run(args: argparse.Namespace) -> int:
 def cmd_damds(args: argparse.Namespace) -> int:
     from flink_mm_spark.session import scratch_dir
 
-    from flink_mm_spark.algos.damds import damds_blocks_from_files
+    from flink_mm_spark.algos.damds import damds_blocks_from_files, quantize_distances
     from flink_mm_spark.algos.damds_config import damds_from_config, load_properties
     from flink_mm_spark.sources.binary_matrix import write_matrix_file
 
@@ -74,8 +74,7 @@ def cmd_damds(args: argparse.Namespace) -> int:
         rng = np.random.RandomState(7)
         pts = rng.standard_normal((n, 3))
         d2 = ((pts[:, None, :] - pts[None, :, :]) ** 2).sum(-1)
-        dist = np.sqrt(d2)
-        q = np.round(dist / dist.max() * 32767.0).astype(np.int16)
+        q, _ = quantize_distances(np.sqrt(d2))
         dist_path = os.path.join(scratch_dir("damds_gen_"), "dist.bin")
         write_matrix_file(dist_path, q, "int16", "big")
         blocks = damds_blocks_from_files(spark, dist_path, n, n_blocks=args.blocks)
@@ -87,7 +86,6 @@ def cmd_damds(args: argparse.Namespace) -> int:
             weight_path=cfg.get("WeightMatrixFile") or None,
             n_blocks=args.blocks,
         )
-    blocks = blocks.persist()
     try:
         res = damds_from_config(blocks, cfg)
     finally:

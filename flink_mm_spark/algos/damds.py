@@ -7,10 +7,14 @@ with a conjugate-gradient inner solve (SURVEY §2.6 F2,F6–F10, §3.1).
 Spark shape:
 - The N×N distance (+ optional weight) matrix arrives as a DataFrame of row
   blocks (block_id, start, block_rows, n_points, dist ARRAY<SHORT>,
-  weight ARRAY<SHORT>). ``damds`` decodes it once into a loop-lifetime RDD
-  of (block_id, start, int16 dist, int16 weight | None) numpy blocks
-  (``decoded_blocks``) — the loop-invariant caching the reference lacks (it
-  re-reads files every Flink job, SURVEY §4.1).
+  weight ARRAY<SHORT>), built from driver arrays (``damds_blocks``), int16
+  side files (``damds_blocks_from_files``) or points (one builder: whole
+  corpora through ``damds_blocks_from_points``, growing ones through
+  ``IncrementalDistanceBlocks``) and placed by ``place_blocks``.
+- ``damds`` decodes the table once into a loop-lifetime RDD of (block_id,
+  start, int16 dist, int16 weight | None) numpy blocks (``decoded_blocks``)
+  — the loop-invariant caching the reference lacks (it re-reads files
+  every Flink job, SURVEY §4.1).
 - The embedding X is (N, 3)-tiny and lives on the driver; each distributed
   kernel is one ``map_blocks`` job with X in its closure, emitting per-block
   partials (stress scalars or block slices of B(Z)X / VX) that the driver
@@ -38,7 +42,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-from flink_mm_spark.linalg.block_matrix import array_blocks, map_blocks, ship, split_rows
+from flink_mm_spark.linalg.block_matrix import (
+    array_blocks,
+    map_blocks,
+    place_blocks,
+    ship,
+    split_rows,
+)
 from flink_mm_spark.sources.binary_matrix import INV_SHORT_MAX  # single source
 
 # Read-time weight transformation hook: (weights, dequantized distances) →
@@ -81,7 +91,7 @@ def damds_blocks(
         w = None if weights is None else weights[start : start + nrows].ravel().tolist()
         rows.append((b, start, nrows, n, dist[start : start + nrows].ravel().tolist(), w))
     df = spark.createDataFrame(rows, DAMDS_BLOCK_SCHEMA)
-    return df.repartition(min(n_blocks, 64), "block_id").persist(StorageLevel.MEMORY_AND_DISK)
+    return place_blocks(df, len(rows)).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def decoded_blocks(blocks: DataFrame) -> AbstractContextManager[RDD]:
@@ -480,14 +490,33 @@ def free_local_checkpoint(df: DataFrame) -> None:
         pass  # not a checkpoint scan (plan shape changed): nothing to free
 
 
+def _quantize(d: np.ndarray, scale: float) -> np.ndarray:
+    """d/scale·32767 rounded to int16 (damds/DAMDSUtils.java:8-9); a zero
+    scale (every distance 0) keeps the zeros."""
+    return np.round(d / scale * 32767.0).astype(np.int16) if scale > 0 else d.astype(np.int16)
+
+
 def quantize_distances(dist: np.ndarray) -> tuple[np.ndarray, float]:
     """Normalize to [0,1] by max and quantize to int16 (F12 encode).
 
     Returns (int16 matrix, scale) with scale = original max.
     """
     mx = float(dist.max())
-    q = np.round(dist / mx * 32767.0).astype(np.int16) if mx > 0 else dist.astype(np.int16)
-    return q, mx
+    return _quantize(dist, mx), mx
+
+
+def _block_row(block_id, start, nrows, n_points, dist, weight=None) -> pd.DataFrame:
+    """One DAMDS_BLOCK_SCHEMA row."""
+    return pd.DataFrame(
+        {
+            "block_id": [block_id],
+            "start": [start],
+            "block_rows": [nrows],
+            "n_points": [n_points],
+            "dist": [dist.ravel()],
+            "weight": [weight],
+        }
+    )
 
 
 def damds_blocks_from_files(
@@ -520,7 +549,7 @@ def damds_blocks_from_files(
     specs = pd.DataFrame(
         split_rows(n_points, n_blocks), columns=["block_id", "start", "block_rows"]
     )
-    spec_df = spark.createDataFrame(specs).repartition(len(specs), "block_id")
+    spec_df = place_blocks(spark.createDataFrame(specs), len(specs))
 
     def load(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -534,18 +563,101 @@ def damds_blocks_from_files(
                     if weight_path is not None
                     else None
                 )
-                yield pd.DataFrame(
-                    {
-                        "block_id": [int(r["block_id"])],
-                        "start": [start],
-                        "block_rows": [nrows],
-                        "n_points": [n_points],
-                        "dist": [d],
-                        "weight": [w],
-                    }
-                )
+                yield _block_row(int(r["block_id"]), start, nrows, n_points, d, w)
 
     return spec_df.mapInPandas(load, DAMDS_BLOCK_SCHEMA).persist(StorageLevel.MEMORY_AND_DISK)
+
+
+# --- the points → distance-block builder ------------------------------------
+# One set of kernels serves both ``damds_blocks_from_points`` (a whole corpus)
+# and ``IncrementalDistanceBlocks`` (a corpus growing by micro-batches):
+# pack the points into row blocks (one O(N·d) exchange), gather and broadcast
+# the O(N·d) packed matrix, then per row block one GEMM stripe (block_rows × N)
+# born in its final home — a max pass for the quantization scale and a second
+# pass that re-runs the GEMM and quantizes. Recomputing the GEMM is deliberate:
+# at d ≤ a few hundred it is far cheaper than persisting N²×8 float bytes.
+
+PACKED_POINTS_SCHEMA = "blk int, start long, nrows int, mat array<double>"
+
+
+def _pack_points(
+    points: DataFrame, start: int, n_rows: int, n_blocks: int, first_blk: int = 0
+) -> DataFrame:
+    """(point_id, vec) rows with ids start..start+n_rows-1 → row blocks
+    (blk, start, nrows, mat) over the ``split_rows`` ranges of those rows,
+    numbered from ``first_blk`` in row order. ``place_blocks`` moves the
+    points (the build's one exchange); each block packs inside its task."""
+    specs = split_rows(n_rows, n_blocks)
+    q, r = divmod(n_rows, n_blocks)
+    boundary = r * (q + 1)
+    rel = F.col("point_id").cast("long") - F.lit(start)
+    sub = (
+        F.when(rel < boundary, (rel / (q + 1)).cast("int"))
+        .otherwise((F.lit(r) + (rel - boundary) / max(q, 1)).cast("int"))
+        if q > 0
+        else rel.cast("int")
+    )
+    pts = points.select(rel.alias("rel"), F.col("vec"), sub.alias("sub"))
+
+    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        frames = list(batches)
+        if not frames:
+            return
+        for b, g in pd.concat(frames).groupby("sub"):
+            g = g.sort_values("rel")  # block rows ordered by global row index
+            _, s, nr = specs[b]
+            if not np.array_equal(g["rel"].to_numpy(), np.arange(s, s + nr)):
+                raise ValueError(
+                    f"point ids of block {first_blk + b} are not {start + s}..{start + s + nr - 1}"
+                )
+            m = np.vstack(g["vec"].to_numpy()).astype(np.float64)
+            yield pd.DataFrame(
+                {"blk": [first_blk + b], "start": [start + s], "nrows": [nr], "mat": [m.ravel()]}
+            )
+
+    return place_blocks(pts, len(specs), key="sub").mapInPandas(pack, PACKED_POINTS_SCHEMA)
+
+
+def _gather_points(packed: DataFrame) -> np.ndarray:
+    """The packed points as one (N, d) matrix in row order: an O(N·d)
+    gather, the same order of data the anneal ships every pass as X."""
+    rows = sorted(packed.select("start", "nrows", "mat").collect(), key=lambda r: r["start"])
+    return np.vstack(
+        [np.asarray(r["mat"], dtype=np.float64).reshape(r["nrows"], -1) for r in rows]
+    )
+
+
+def _stripes(batches: Iterator[pd.DataFrame], pv: np.ndarray):
+    """(blk, start, nrows, float distance stripe) per packed block: the
+    block's rows against all of ``pv`` in one GEMM."""
+    sq = (pv * pv).sum(1)
+    for pdf in batches:
+        for row in pdf.itertuples(index=False):
+            start, nrows = int(row.start), int(row.nrows)
+            ra = np.asarray(row.mat, dtype=np.float64).reshape(nrows, -1)
+            d2 = sq[start : start + nrows][:, None] - 2.0 * (ra @ pv.T) + sq[None, :]
+            yield int(row.blk), start, nrows, np.sqrt(np.maximum(d2, 0.0))
+
+
+def _stripe_max(packed: DataFrame, bc) -> float:
+    """The largest distance in ``packed``'s stripes (one job)."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for *_, d in _stripes(batches, bc.value):
+            yield pd.DataFrame({"cmax": [float(d.max()) if d.size else 0.0]})
+
+    return packed.mapInPandas(kernel, "cmax double").agg(F.max("cmax")).collect()[0][0] or 0.0
+
+
+def _quantized_blocks(packed: DataFrame, bc, scale: float, n_points: int) -> DataFrame:
+    """``packed``'s stripes quantized at ``scale`` into DAMDS_BLOCK_SCHEMA
+    rows, one per packed block, in place (narrow)."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for blk, start, nrows, d in _stripes(batches, bc.value):
+            yield _block_row(blk, start, nrows, n_points, _quantize(d, scale))
+
+    return packed.mapInPandas(kernel, DAMDS_BLOCK_SCHEMA)
 
 
 def damds_blocks_from_points(
@@ -558,100 +670,20 @@ def damds_blocks_from_points(
 ) -> DataFrame:
     """Build the quantized distance-block table from a points DataFrame via a
     DISTRIBUTED pairwise kernel — the O(N²) matrix never exists on the driver
-    (VERDICT r1 "What's wrong" #3; contrast ``damds_blocks``).
+    (contrast ``damds_blocks``).
 
-    Shape: points pack into row-aligned blocks (same ``split_rows`` ranges as
-    every other constructor) with ONE O(N·d) shuffle; the packed points
-    matrix — O(N·d), the same order of data the anneal ships every
-    iteration as X — is gathered ordered and broadcast once; each row block
-    then computes its full (block_rows × N) distance stripe IN PLACE with
-    one numpy GEMM, so the O(N²) data is born in its final row-block home
-    and never shuffles, spills, or persists in float form. Two narrow
-    passes over the persisted pack: pass 1 reduces per-stripe maxima to the
-    reference's quantization scale (damds/DAMDSUtils.java:8-9 semantics via
-    ``quantize_distances``), pass 2 re-runs the identical GEMM and emits the
-    int16 blocks. Recomputing the GEMM is deliberate: at d ≤ a few hundred
-    it is far cheaper than persisting N²×8 bytes between passes. Driver
-    memory: the N×d matrix and one scalar. ``points[id_col]`` must be
-    exactly 0..n_points-1 (row index).
+    The builder's kernels above with the scale set to the global max
+    (damds/DAMDSUtils.java:8-9 semantics, ``quantize_distances``): ONE
+    O(N·d) exchange (the pack), then narrow passes over the persisted pack.
+    Driver memory: the N×d matrix and one scalar. ``points[id_col]`` must be
+    exactly 0..n_points-1 (row index). Returns the persisted blocks, which
+    ``unpersist()`` releases.
     """
-    specs = split_rows(n_points, n_blocks)
-    manifest = {b: (start, nrows) for b, start, nrows in specs}
-    q, r = divmod(n_points, n_blocks)
-    boundary = r * (q + 1)
-    pid = F.col(id_col).cast("long")
-    blk = (
-        F.when(pid < boundary, (pid / (q + 1)).cast("int"))
-        .otherwise((F.lit(r) + (pid - boundary) / max(q, 1)).cast("int"))
-        if q > 0
-        else pid.cast("int")
-    )
-    pts = points.select(pid.alias("pid"), F.col(vec_col).alias("vec"), blk.alias("blk"))
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pid")  # block rows ordered by global row index
-        m = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-        return pd.DataFrame({"blk": [int(pdf["blk"].iloc[0])], "mat": [m.ravel()]})
-
-    packed = (
-        pts.groupBy("blk")
-        .applyInPandas(pack, "blk int, mat array<double>")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    # O(N·d) ordered gather + broadcast (NOT O(N²)): the same data volume the
-    # anneal ships every iteration as X.
-    prows = sorted(packed.collect(), key=lambda r: r["blk"])
-    pmat = np.vstack(
-        [
-            np.asarray(r["mat"], dtype=np.float64).reshape(manifest[r["blk"]][1], -1)
-            for r in prows
-        ]
-    )
-    bc = spark.sparkContext.broadcast(pmat)
-
-    def stripes(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[tuple[int, int, int, np.ndarray]]:
-        pv = bc.value
-        sq = (pv * pv).sum(1)
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                b = int(row.blk)
-                start, nrows = manifest[b]
-                ra = np.asarray(row.mat, dtype=np.float64).reshape(nrows, -1)
-                d2 = sq[start : start + nrows][:, None] - 2.0 * (ra @ pv.T) + sq[None, :]
-                yield b, start, nrows, np.sqrt(np.maximum(d2, 0.0))
-
-    def stripe_max(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for _b, _s, _n, d in stripes(batches):
-            yield pd.DataFrame({"cmax": [float(d.max()) if d.size else 0.0]})
-
-    gmax = (
-        packed.mapInPandas(stripe_max, "cmax double").agg(F.max("cmax")).collect()[0][0]
-        or 0.0
-    )
-
-    def stripe_quant(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b, start, nrows, d in stripes(batches):
-            # identical arithmetic to quantize_distances (d / max * 32767)
-            q = (
-                np.round(d / gmax * 32767.0).astype(np.int16)
-                if gmax > 0
-                else d.astype(np.int16)
-            )
-            yield pd.DataFrame(
-                {
-                    "block_id": [b],
-                    "start": [start],
-                    "block_rows": [nrows],
-                    "n_points": [n_points],
-                    "dist": [q.ravel()],
-                    "weight": [None],
-                }
-            )
-
-    blocks = packed.mapInPandas(stripe_quant, DAMDS_BLOCK_SCHEMA).persist(
+    pts = points.select(F.col(id_col).alias("point_id"), F.col(vec_col).alias("vec"))
+    packed = _pack_points(pts, 0, n_points, n_blocks).persist(StorageLevel.MEMORY_AND_DISK)
+    # the gather is packed's first action: it materializes the persist
+    bc = spark.sparkContext.broadcast(_gather_points(packed))
+    blocks = _quantized_blocks(packed, bc, _stripe_max(packed, bc), n_points).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     blocks.count()  # materialize before releasing the packed points
@@ -660,18 +692,13 @@ def damds_blocks_from_points(
     return blocks
 
 
-# --- incremental distance-block state (streaming MDS) ----------------------
-
-PACKED_POINTS_SCHEMA = "blk int, start long, nrows int, mat array<double>"
-
-
 class IncrementalDistanceBlocks:
-    """Distributed incremental N×N quantized distance matrix.
+    """Distributed incremental N×N quantized distance matrix (streaming MDS).
 
-    The streaming counterpart of ``damds_blocks_from_points`` (VERDICT r2
-    ask #4): instead of rebuilding all O(N²) cells per micro-batch,
-    ``append`` extends the existing state with the b new points' stripes
-    only — steady-state distance work is O(N·b):
+    Built from the same kernels as ``damds_blocks_from_points``, but
+    instead of rebuilding all O(N²) cells per micro-batch, ``append``
+    extends the existing state with the b new points' stripes only —
+    steady-state distance work is O(N·b):
 
     - every EXISTING row block gains b new columns via a narrow
       ``mapInPandas`` over the checkpointed blocks (the block's own row
@@ -679,24 +706,23 @@ class IncrementalDistanceBlocks:
       anyway, so no join and no shuffle ever touches the O(N²) arrays);
     - the new rows become fresh row blocks (ids append after all previous
       rows, so block_id order stays start order — the invariant every
-      ordered gather relies on), computed against the same broadcast.
+      ordered gather relies on), quantized by the shared kernel.
 
-    Quantization-scale changes (damds/DAMDSUtils.java:8-9 semantics: cells
-    store d/max·32767): the new cells' max is measured first; if it exceeds
-    the current scale every stored cell is stale, so the state REBUILDS
-    from the packed vectors — bitwise identical to a from-scratch
-    construction because scale = global max either way. On real corpora
-    the max stabilizes after the first batches, so steady state takes the
-    O(N·b) append path (``last_mode`` exposes which path ran; the
-    equality-vs-from-scratch property is pinned in tests/test_damds.py).
+    Quantization-scale changes (cells store d/max·32767): the new cells'
+    max is measured first; if it exceeds the current scale every stored
+    cell is stale, so the state REBUILDS from the packed vectors — bitwise
+    identical to a from-scratch construction because scale = global max
+    either way. On real corpora the max stabilizes after the first batches,
+    so steady state takes the O(N·b) append path (``last_mode`` exposes
+    which path ran; the equality-vs-from-scratch property is pinned in
+    tests/test_damds.py).
 
     State (``packed`` vectors + ``blocks``) lives distributed and is
     localCheckpoint'ed per batch to truncate lineage; the previous
     generation's checkpoint RDDs are freed eagerly via
-    ``free_local_checkpoint`` (ADVICE r2: plain unpersist is a no-op for
-    checkpoint RDDs). The driver transiently holds the O(N·d) packed
-    matrix during the broadcast — the same order of data the anneal ships
-    every iteration — never the O(N²) matrix.
+    ``free_local_checkpoint`` (plain unpersist is a no-op for checkpoint
+    RDDs). The driver transiently holds the O(N·d) packed matrix during the
+    broadcast — never the O(N²) matrix.
     """
 
     def __init__(self, spark: SparkSession, n_blocks_hint: int = 8):
@@ -709,123 +735,26 @@ class IncrementalDistanceBlocks:
         self.n_blk = 0
         self.last_mode: str | None = None
 
-    def _pack(self, ids_df: DataFrame, start: int, n_rows: int, n_sub: int) -> DataFrame:
-        """Pack (point_id, vec) rows with contiguous ids [start, start+n_rows)
-        into row-aligned (blk, start, nrows, mat) blocks, blk starting at
-        ``self.n_blk`` in row order."""
-        base_blk = self.n_blk
-        q, r = divmod(n_rows, n_sub)
-        boundary = r * (q + 1)
-        rel = F.col("point_id").cast("long") - F.lit(start)
-        sub = (
-            F.when(rel < boundary, (rel / (q + 1)).cast("int"))
-            .otherwise((F.lit(r) + (rel - boundary) / max(q, 1)).cast("int"))
-            if q > 0
-            else rel.cast("int")
-        )
-        pts = ids_df.select(
-            F.col("point_id").cast("long").alias("pid"),
-            F.col("vec").alias("vec"),
-            (sub + F.lit(base_blk)).alias("blk"),
-        )
-        starts = {
-            base_blk + b: (start + s, nr) for b, s, nr in split_rows(n_rows, n_sub)
-        }
-
-        def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("pid")
-            blk = int(pdf["blk"].iloc[0])
-            s, nr = starts[blk]
-            m = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-            assert len(m) == nr and int(pdf["pid"].iloc[0]) == s
-            return pd.DataFrame(
-                {"blk": [blk], "start": [s], "nrows": [nr], "mat": [m.ravel()]}
-            )
-
-        return pts.groupBy("blk").applyInPandas(pack, PACKED_POINTS_SCHEMA)
-
-    def _gather_pmat(self, extra: DataFrame | None) -> np.ndarray:
-        srcs = [s for s in (self.packed, extra) if s is not None]
-        rows = []
-        for s in srcs:
-            rows.extend(s.select("start", "nrows", "mat").collect())
-        rows.sort(key=lambda r: r["start"])
-        return np.vstack(
-            [np.asarray(r["mat"], dtype=np.float64).reshape(r["nrows"], -1) for r in rows]
-        )
-
-    @staticmethod
-    def _stripes(batches: Iterator[pd.DataFrame], pv: np.ndarray, sq: np.ndarray):
-        """(blk, start, nrows, float distance stripe) per packed block —
-        the identical arithmetic of damds_blocks_from_points.stripes."""
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                start, nrows = int(row.start), int(row.nrows)
-                ra = np.asarray(row.mat, dtype=np.float64).reshape(nrows, -1)
-                d2 = sq[start : start + nrows][:, None] - 2.0 * (ra @ pv.T) + sq[None, :]
-                yield int(row.blk), start, nrows, np.sqrt(np.maximum(d2, 0.0))
-
     def append(self, ids_df: DataFrame, b: int) -> None:
         """Absorb b new points (point_id = n .. n+b-1) into the state."""
-        spark = self.spark
         n_old, n_new = self.n, self.n + b
         n_sub = max(1, min(self.n_blocks_hint, b // 16))
-        new_packed = self._pack(ids_df, n_old, b, n_sub).persist(
+        n_blk = self.n_blk + n_sub
+        new_packed = _pack_points(ids_df, n_old, b, n_sub, self.n_blk).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        # the gather below is new_packed's first action → materializes the
-        # persist (no separate count() job needed)
-        pmat = self._gather_pmat(new_packed)  # O(N·d) transient gather
-        bc = spark.sparkContext.broadcast(pmat)
-        stripes = self._stripes
-
-        def new_stripe_max(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            pv = bc.value
-            sq = (pv * pv).sum(1)
-            for _b, _s, _n, d in stripes(batches, pv, sq):
-                yield pd.DataFrame({"cmax": [float(d.max()) if d.size else 0.0]})
-
+        packed = new_packed if self.packed is None else self.packed.unionByName(new_packed)
+        # the gather is new_packed's first action: it materializes the persist
+        bc = self.spark.sparkContext.broadcast(_gather_points(packed))
         # the new rows' stripes contain every new cell (new×all; old×new is
         # its transpose), so their max decides whether the scale grows
-        gmax_new = (
-            new_packed.mapInPandas(new_stripe_max, "cmax double")
-            .agg(F.max("cmax"))
-            .collect()[0][0]
-            or 0.0
-        )
-        scale = max(self.scale, float(gmax_new))
-
-        def quant_stripes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            pv = bc.value
-            sq = (pv * pv).sum(1)
-            for blk, start, nrows, d in stripes(batches, pv, sq):
-                q = (
-                    np.round(d / scale * 32767.0).astype(np.int16)
-                    if scale > 0
-                    else d.astype(np.int16)
-                )
-                yield pd.DataFrame(
-                    {
-                        "block_id": [blk],
-                        "start": [start],
-                        "block_rows": [nrows],
-                        "n_points": [n_new],
-                        "dist": [q.ravel()],
-                        "weight": [None],
-                    }
-                )
+        scale = max(self.scale, _stripe_max(new_packed, bc))
 
         # scale == 0 (all-identical corpus so far) also rebuilds: the append
         # quantizer divides by scale, and the degenerate state is all-zero
         # cells anyway
-        rebuild = self.blocks is None or scale > self.scale or scale <= 0.0
-        if rebuild:
-            packed_all = (
-                new_packed
-                if self.packed is None
-                else self.packed.unionByName(new_packed)
-            )
-            blocks_new = packed_all.mapInPandas(quant_stripes, DAMDS_BLOCK_SCHEMA)
+        if self.blocks is None or scale > self.scale or scale <= 0.0:
+            blocks = _quantized_blocks(packed, bc, scale, n_new)
             self.last_mode = "rebuild"
         else:
 
@@ -843,36 +772,20 @@ class IncrementalDistanceBlocks:
                             - 2.0 * (ra @ newv.T)
                             + new_sq[None, :]
                         )
-                        d = np.sqrt(np.maximum(d2, 0.0))
-                        q_app = np.round(d / scale * 32767.0).astype(np.int16)
+                        q_app = _quantize(np.sqrt(np.maximum(d2, 0.0)), scale)
                         old = np.asarray(row.dist, dtype=np.int16).reshape(nrows, n_old)
-                        yield pd.DataFrame(
-                            {
-                                "block_id": [int(row.block_id)],
-                                "start": [start],
-                                "block_rows": [nrows],
-                                "n_points": [n_new],
-                                "dist": [np.hstack([old, q_app]).ravel()],
-                                "weight": [None],
-                            }
+                        yield _block_row(
+                            int(row.block_id), start, nrows, n_new, np.hstack([old, q_app])
                         )
 
-            extended = self.blocks.mapInPandas(extend, DAMDS_BLOCK_SCHEMA)
-            fresh = new_packed.mapInPandas(quant_stripes, DAMDS_BLOCK_SCHEMA)
-            blocks_new = extended.unionByName(fresh)
+            fresh = _quantized_blocks(new_packed, bc, scale, n_new)
+            blocks = self.blocks.mapInPandas(extend, DAMDS_BLOCK_SCHEMA).unionByName(fresh)
             self.last_mode = "append"
 
-        # bound the partition count before checkpointing: each generation's
-        # union would otherwise ADD the new mapInPandas output partitions
-        # (mostly empty) and every later pass would pay a Python-worker task
-        # per empty partition — measured 3× slower appends by generation 3.
-        # coalesce is narrow: no shuffle ever touches the O(N²) arrays.
-        cap = max(1, spark.sparkContext.defaultParallelism)
-        blocks_ck = blocks_new.coalesce(cap).localCheckpoint(eager=True)
-        packed_new = (
-            new_packed if self.packed is None else self.packed.unionByName(new_packed)
-        )
-        packed_ck = packed_new.coalesce(cap).localCheckpoint(eager=True)
+        # a union holds the partitions of all its pieces; place_blocks merges
+        # them back to the rule's count without a shuffle
+        blocks_ck = place_blocks(blocks, n_blk, key=None).localCheckpoint(eager=True)
+        packed_ck = place_blocks(packed, n_blk, key=None).localCheckpoint(eager=True)
         # free the previous generation NOW (unpersist on a checkpointed
         # Dataset is a no-op — see free_local_checkpoint)
         if self.blocks is not None:
@@ -885,4 +798,4 @@ class IncrementalDistanceBlocks:
         self.packed = packed_ck
         self.scale = scale
         self.n = n_new
-        self.n_blk += n_sub
+        self.n_blk = n_blk

@@ -14,7 +14,10 @@ serves relational checks and SQL interop.
 
 Row-aligned splitting (the reference's createInputSplits,
 mm/MatrixInputFormat.java:32-57: q = rows/splits with the remainder spread
-one row each to the first r blocks) is reproduced in ``split_rows``.
+one row each to the first r blocks) is reproduced in ``split_rows``, and
+every block table is placed by one rule, ``place_blocks``: n blocks sit in
+min(n, defaultParallelism) partitions as contiguous block_id ranges, never
+in ``spark.sql.shuffle.partitions`` of them.
 
 Iterative drivers (k-means, the DA-MDS anneal) plan their step once, the way
 the reference's bulk iterations do: ``array_blocks`` turns a DataFrame into a
@@ -70,6 +73,25 @@ def split_rows(n_rows: int, n_blocks: int) -> list[tuple[int, int, int]]:
     return out
 
 
+def place_blocks(df: DataFrame, n_blocks: int, key: str | None = "block_id") -> DataFrame:
+    """The one block-placement rule: a table of ``n_blocks`` row blocks sits
+    in min(n_blocks, defaultParallelism) partitions — capped by cores, never
+    taken from ``spark.sql.shuffle.partitions`` — and placing it starts no
+    Spark job.
+
+    ``key`` names the column holding each row's block index in
+    0..n_blocks-1; rows move in one exchange (``repartitionById``) so that
+    partition t holds a contiguous index range, cut as evenly as
+    ``split_rows`` cuts rows. ``key=None`` is for a union of tables placed
+    this way: their partitions merge without a shuffle (``coalesce``), so no
+    exchange ever moves built blocks.
+    """
+    parts = max(1, min(n_blocks, df.sparkSession.sparkContext.defaultParallelism))
+    if key is None:
+        return df.coalesce(parts)
+    return df.repartitionById(parts, (F.col(key) * parts / n_blocks).cast("int"))
+
+
 def blocks_from_numpy(spark: SparkSession, arr: np.ndarray, n_blocks: int) -> DataFrame:
     """Partition a driver-side (rows, cols) array into a block DataFrame.
 
@@ -91,7 +113,7 @@ def blocks_from_numpy(spark: SparkSession, arr: np.ndarray, n_blocks: int) -> Da
             "data": [arr[s : s + r].ravel() for _, s, r in specs],
         }
     )
-    return spark.createDataFrame(pdf, BLOCK_SCHEMA).repartition(min(n_blocks, 64), "block_id")
+    return place_blocks(spark.createDataFrame(pdf, BLOCK_SCHEMA), len(specs))
 
 
 def blocks_to_numpy(blocks: DataFrame) -> np.ndarray:

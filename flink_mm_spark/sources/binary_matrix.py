@@ -8,10 +8,10 @@ io/SMatrixInputFormat.java:32-81). Negative int16 cells mean *missing* and
 decode as NaN; valid shorts dequantize by 1/32767 (damds/DAMDSUtils.java:8-9).
 
 Spark shape: the block manifest (block_id, start, block_rows) is a tiny
-DataFrame; each task opens the file and reads ONLY its byte range
-(offset = start·cols·itemsize) inside ``mapInPandas`` — the reference's
-"lazy self-loading row block" (io/RowBlock.java:81-105) expressed as a
-per-partition side-file read. No task ever touches another block's bytes,
+DataFrame placed by ``place_blocks``; each task opens the file and reads
+ONLY its byte range (offset = start·cols·itemsize) inside ``mapInPandas`` —
+the reference's "lazy self-loading row block" (io/RowBlock.java:81-105)
+expressed as a per-partition side-file read. No task ever touches another block's bytes,
 so the scan scales linearly with executors and never buffers the matrix
 whole. A synthetic mode mirrors ShortMatrixInputFormat.generateData
 (mm/ShortMatrixInputFormat.java:64-75).
@@ -26,7 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_mm_spark.linalg.block_matrix import BLOCK_SCHEMA, split_rows
+from flink_mm_spark.linalg.block_matrix import BLOCK_SCHEMA, place_blocks, split_rows
 
 INV_SHORT_MAX = 1.0 / 32767.0  # damds/DAMDSUtils.java:8-9
 
@@ -60,7 +60,7 @@ def read_matrix_blocks(
     """
     dt = _np_dtype(cell, byteorder)
     specs = pd.DataFrame(split_rows(n_rows, n_blocks), columns=["block_id", "start", "block_rows"])
-    spec_df = spark.createDataFrame(specs).repartition(len(specs), "block_id")
+    spec_df = place_blocks(spark.createDataFrame(specs), len(specs))
 
     def load(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -98,7 +98,7 @@ def generate_short_blocks(
     """Synthetic int16 matrix blocks without any file (S2 generateData mode),
     dequantized like the file path. Deterministic per (block, seed)."""
     specs = pd.DataFrame(split_rows(n_rows, n_blocks), columns=["block_id", "start", "block_rows"])
-    spec_df = spark.createDataFrame(specs).repartition(len(specs), "block_id")
+    spec_df = place_blocks(spark.createDataFrame(specs), len(specs))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -4,7 +4,9 @@ Creates a plain SparkSession (no engine defaults — like the driver would),
 runs entry() at sf0.001, then every queries() entry at sf0.01 side-by-side
 with oracle_sql() through DuckDB, comparing row count, column names, and an
 order-insensitive value hash (floats repr'd exactly — the strictest
-plausible driver compare).
+plausible driver compare). Rows-only entries print their hash too, and every
+entry its wall and the Spark tasks its jobs ran (jobs started from the
+entry's own thread, counted in a job group).
 """
 
 from __future__ import annotations
@@ -12,13 +14,15 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import pathlib
 import sys
 import time
+import uuid
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 import __spark_entry__ as entrymod
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -55,6 +59,24 @@ def norm_rows(rows):
     return [tuple(norm(v) for v in r) for r in rows]
 
 
+def run_counted(sc, fn):
+    """(fn(), tasks run by the Spark jobs fn starts in this thread)."""
+    group = f"driver-sim-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(s)
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    return out, sum(st.numCompletedTasks for st in stages if st is not None)
+
+
 def main():
     spark = SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -85,18 +107,21 @@ def main():
     n_match = n_rows_only = n_fail = 0
     for name, fn in sorted(qs.items()):
         t0 = time.time()
-        sdf = fn(spark, SF01)
-        srows = [tuple(r) for r in sdf.collect()]
-        scols = sdf.columns
+
+        def run():
+            sdf = fn(spark, SF01)
+            return sdf.columns, [tuple(r) for r in sdf.collect()]
+
+        (scols, srows), tasks = run_counted(spark.sparkContext, run)
         dt = time.time() - t0
+        sh = value_hash(scols, norm_rows(srows))
         if name not in oracles:
-            print(f"  {name}: rows-only, {len(srows)} rows, {dt:.1f}s")
+            print(f"  {name}: rows-only, {len(srows)} rows, hash {sh}, {dt:.1f}s, {tasks} tasks")
             n_rows_only += 1
             continue
         want = con.execute(oracles[name])
         wcols = [d[0] for d in want.description]
         wrows = want.fetchall()
-        sh = value_hash(scols, norm_rows(srows))
         wh = value_hash(wcols, norm_rows(wrows))
         ok = sorted(scols) == sorted(wcols) and len(srows) == len(wrows) and sh == wh
         status = "MATCH" if ok else "MISMATCH"
@@ -104,7 +129,7 @@ def main():
             n_match += 1
         else:
             n_fail += 1
-        print(f"  {name}: {status} ({len(srows)} rows, hash {sh} vs {wh}, {dt:.1f}s)")
+        print(f"  {name}: {status} ({len(srows)} rows, hash {sh} vs {wh}, {dt:.1f}s, {tasks} tasks)")
     print(json.dumps({"match": n_match, "rows_only": n_rows_only, "fail": n_fail}))
     if n_fail:
         sys.exit(1)

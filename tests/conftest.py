@@ -90,15 +90,34 @@ def spark_work(spark, fn) -> tuple[int, int]:
         n = store.executionsCount()
         return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
 
-    group = f"spark-work-{uuid.uuid4().hex}"
     before = last_execution()
+    jobs = _group_jobs(sc, fn)
+    return len(jobs), last_execution() - before
+
+
+def spark_tasks(spark, fn) -> int:
+    """Tasks run by the Spark jobs that ``fn()`` starts (a skipped stage,
+    whose shuffle output already exists, runs none)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    return sum(
+        tracker.getStageInfo(s).numCompletedTasks
+        for j in _group_jobs(sc, fn)
+        for s in tracker.getJobInfo(j).stageIds
+    )
+
+
+def _group_jobs(sc, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` starts, counted in a job group of
+    their own once the listener bus has drained."""
+    group = f"spark-work-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    executions = last_execution() - before
-    return len(sc.statusTracker().getJobIdsForGroup(group)), executions
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def persisted_rdds(spark) -> int:

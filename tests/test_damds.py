@@ -249,6 +249,18 @@ def test_blocks_from_points_distributed_construction(spark):
         fb.unpersist()
 
 
+def test_blocks_from_points_rejects_ids_that_are_not_row_indices(spark):
+    """Point ids must be exactly the row indices 0..N-1: a missing id with
+    a duplicate in its place fails the build instead of shifting rows."""
+    import pandas as pd
+
+    ids = np.array([0, 1, 2, 3, 4, 4], dtype=np.int64)  # 5 missing, 4 twice
+    pdf = pd.DataFrame({"point_id": ids, "vec": list(np.eye(6))})
+    pts_df = spark.createDataFrame(pdf, "point_id long, vec array<double>")
+    with pytest.raises(Exception, match="point ids of block 1 are not 3..5"):
+        D.damds_blocks_from_points(spark, pts_df, n_points=6, n_blocks=2)
+
+
 def test_degenerate_single_point(spark):
     """A 1x1 (or all-identical) distance matrix must return a finite
     embedding, not ZeroDivisionError (IncrementalMDS first micro-batch)."""

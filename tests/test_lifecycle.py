@@ -1,6 +1,7 @@
 """The engine's two lifecycle helpers: ``streaming/runner.py`` starts every
 stream, ``session.keep_latest`` holds every persisted intermediate. Plus the
-one measurement path: Spark's event log, never the UI's status REST API.
+one measurement path (Spark's event log, never the UI's status REST API) and
+the one block-placement rule (``block_matrix.place_blocks``).
 
 The guards are stdlib-only source scans, so a hand-rolled stream start,
 module cache or REST poll fails here before it can drift from the helpers.
@@ -94,6 +95,37 @@ def test_no_session_conf_writes_under_algos():
                 and node.func.value.attr == "conf"
             ):
                 found.append((path.relative_to(PKG).as_posix(), node.lineno))
+    assert found == [], found
+
+
+# the modules that build block tables, and the one function that places them
+BLOCK_MODULES = ("algos/damds.py", "linalg/block_matrix.py", "sources/binary_matrix.py")
+PLACEMENT_CALLS = {"repartition", "repartitionByRange", "repartitionById", "coalesce"}
+
+
+def test_block_tables_placed_only_by_place_blocks():
+    """Every block table takes its partitioning from ``place_blocks``: a
+    repartition or coalesce anywhere else in the block constructors is a
+    second placement rule. ``F.coalesce`` is SQL's null coalesce, not a
+    placement."""
+    found = []
+    for rel in BLOCK_MODULES:
+        tree = ast.parse((PKG / rel).read_text())
+        allowed = {
+            id(node)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "place_blocks"
+            for node in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in PLACEMENT_CALLS
+                and not (isinstance(node.func.value, ast.Name) and node.func.value.id == "F")
+                and id(node) not in allowed
+            ):
+                found.append((rel, node.lineno))
     assert found == [], found
 
 
