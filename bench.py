@@ -268,7 +268,7 @@ def bench_incremental_mds(spark, sf_dir: str) -> float:
     )
     n_base = e.count()  # 2000 at sf0.1, 500 at smaller SFs
     base = e.select(F.col("vec_id").alias("point_id"), "vec")
-    inc = IncrementalDistanceBlocks(spark, n_blocks_hint=32)
+    inc = IncrementalDistanceBlocks(n_blocks_hint=32)
     inc.append(base, n_base)
     a = e.filter(F.col("vec_id") < 300).select(F.col("vec_id").alias("ia"), F.col("vec").alias("va"))
     b = e.filter(F.col("vec_id") < 301).select(F.col("vec_id").alias("ib"), F.col("vec").alias("vb"))
@@ -284,10 +284,9 @@ def bench_incremental_mds(spark, sf_dir: str) -> float:
         inc.append(batch, 100)
         assert inc.last_mode == "append", inc.last_mode
     dt = time.perf_counter() - t0
-    from flink_mm_spark.algos.damds import free_local_checkpoint
+    from flink_mm_spark.session import release
 
-    free_local_checkpoint(inc.blocks)
-    free_local_checkpoint(inc.packed)
+    release(inc.blocks, inc.packed)
     return dt
 
 

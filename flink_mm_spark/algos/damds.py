@@ -49,6 +49,7 @@ from flink_mm_spark.linalg.block_matrix import (
     ship,
     split_rows,
 )
+from flink_mm_spark.session import release
 from flink_mm_spark.sources.binary_matrix import INV_SHORT_MAX  # single source
 
 # Read-time weight transformation hook: (weights, dequantized distances) →
@@ -474,22 +475,6 @@ def damds(
     return DamdsResult(points=x, stress=sig, temp_loops=temp_loops, stress_iters=total_stress_iters)
 
 
-def free_local_checkpoint(df: DataFrame) -> None:
-    """Release the RDD blocks behind a ``localCheckpoint``'ed DataFrame NOW.
-
-    ``Dataset.unpersist()`` is a no-op for checkpoint RDDs (they are not in
-    the CacheManager), so without this the blocks linger until the
-    ContextCleaner garbage-collects the old Dataset — unbounded growth for
-    per-micro-batch checkpoints (ADVICE r2). The analyzed plan of a
-    localCheckpoint'ed Dataset is a LogicalRDD wrapping the persisted RDD;
-    unpersisting THAT RDD frees the storage immediately.
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # not a checkpoint scan (plan shape changed): nothing to free
-
-
 def _quantize(d: np.ndarray, scale: float) -> np.ndarray:
     """d/scale·32767 rounded to int16 (damds/DAMDSUtils.java:8-9); a zero
     scale (every distance 0) keeps the zeros."""
@@ -571,11 +556,12 @@ def damds_blocks_from_files(
 # --- the points → distance-block builder ------------------------------------
 # One set of kernels serves both ``damds_blocks_from_points`` (a whole corpus)
 # and ``IncrementalDistanceBlocks`` (a corpus growing by micro-batches):
-# pack the points into row blocks (one O(N·d) exchange), gather and broadcast
-# the O(N·d) packed matrix, then per row block one GEMM stripe (block_rows × N)
-# born in its final home — a max pass for the quantization scale and a second
-# pass that re-runs the GEMM and quantizes. Recomputing the GEMM is deliberate:
-# at d ≤ a few hundred it is far cheaper than persisting N²×8 float bytes.
+# pack the points into row blocks (one O(N·d) exchange), gather the O(N·d)
+# packed matrix into the kernels' closures, then per row block one GEMM
+# stripe (block_rows × N) born in its final home — a max pass for the
+# quantization scale and a second pass that re-runs the GEMM and quantizes.
+# Recomputing the GEMM is deliberate: at d ≤ a few hundred it is far cheaper
+# than persisting N²×8 float bytes.
 
 PACKED_POINTS_SCHEMA = "blk int, start long, nrows int, mat array<double>"
 
@@ -639,22 +625,23 @@ def _stripes(batches: Iterator[pd.DataFrame], pv: np.ndarray):
             yield int(row.blk), start, nrows, np.sqrt(np.maximum(d2, 0.0))
 
 
-def _stripe_max(packed: DataFrame, bc) -> float:
-    """The largest distance in ``packed``'s stripes (one job)."""
+def _stripe_max(packed: DataFrame, pv: np.ndarray) -> float:
+    """The largest distance in ``packed``'s stripes against the gathered
+    points ``pv`` (one job)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for *_, d in _stripes(batches, bc.value):
+        for *_, d in _stripes(batches, pv):
             yield pd.DataFrame({"cmax": [float(d.max()) if d.size else 0.0]})
 
     return packed.mapInPandas(kernel, "cmax double").agg(F.max("cmax")).collect()[0][0] or 0.0
 
 
-def _quantized_blocks(packed: DataFrame, bc, scale: float, n_points: int) -> DataFrame:
-    """``packed``'s stripes quantized at ``scale`` into DAMDS_BLOCK_SCHEMA
-    rows, one per packed block, in place (narrow)."""
+def _quantized_blocks(packed: DataFrame, pv: np.ndarray, scale: float, n_points: int) -> DataFrame:
+    """``packed``'s stripes against ``pv`` quantized at ``scale`` into
+    DAMDS_BLOCK_SCHEMA rows, one per packed block, in place (narrow)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for blk, start, nrows, d in _stripes(batches, bc.value):
+        for blk, start, nrows, d in _stripes(batches, pv):
             yield _block_row(blk, start, nrows, n_points, _quantize(d, scale))
 
     return packed.mapInPandas(kernel, DAMDS_BLOCK_SCHEMA)
@@ -675,20 +662,22 @@ def damds_blocks_from_points(
     The builder's kernels above with the scale set to the global max
     (damds/DAMDSUtils.java:8-9 semantics, ``quantize_distances``): ONE
     O(N·d) exchange (the pack), then narrow passes over the persisted pack.
-    Driver memory: the N×d matrix and one scalar. ``points[id_col]`` must be
-    exactly 0..n_points-1 (row index). Returns the persisted blocks, which
-    ``unpersist()`` releases.
+    Driver memory: the N×d matrix, which rides in the kernels' closures, and
+    one scalar. ``points[id_col]`` must be exactly 0..n_points-1 (row
+    index); other ids fail the build. Returns the persisted blocks, which
+    ``unpersist()`` releases; the pack is released on return and on a raise.
     """
     pts = points.select(F.col(id_col).alias("point_id"), F.col(vec_col).alias("vec"))
     packed = _pack_points(pts, 0, n_points, n_blocks).persist(StorageLevel.MEMORY_AND_DISK)
-    # the gather is packed's first action: it materializes the persist
-    bc = spark.sparkContext.broadcast(_gather_points(packed))
-    blocks = _quantized_blocks(packed, bc, _stripe_max(packed, bc), n_points).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    blocks.count()  # materialize before releasing the packed points
-    packed.unpersist()
-    bc.unpersist()  # executors re-fetch from the driver copy if ever recomputed
+    try:
+        # the gather is packed's first action: it materializes the persist
+        pv = _gather_points(packed)
+        blocks = _quantized_blocks(packed, pv, _stripe_max(packed, pv), n_points).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        blocks.count()  # materialize before releasing the packed points
+    finally:
+        release(packed)
     return blocks
 
 
@@ -702,8 +691,9 @@ class IncrementalDistanceBlocks:
 
     - every EXISTING row block gains b new columns via a narrow
       ``mapInPandas`` over the checkpointed blocks (the block's own row
-      vectors come from the O(N·d) corpus broadcast that the append needs
-      anyway, so no join and no shuffle ever touches the O(N²) arrays);
+      vectors come from the O(N·d) gathered corpus that the append ships
+      in its kernels' closures anyway, so no join and no shuffle ever
+      touches the O(N²) arrays);
     - the new rows become fresh row blocks (ids append after all previous
       rows, so block_id order stays start order — the invariant every
       ordered gather relies on), quantized by the shared kernel.
@@ -718,15 +708,17 @@ class IncrementalDistanceBlocks:
     tests/test_damds.py).
 
     State (``packed`` vectors + ``blocks``) lives distributed and is
-    localCheckpoint'ed per batch to truncate lineage; the previous
-    generation's checkpoint RDDs are freed eagerly via
-    ``free_local_checkpoint`` (plain unpersist is a no-op for checkpoint
-    RDDs). The driver transiently holds the O(N·d) packed matrix during the
-    broadcast — never the O(N²) matrix.
+    localCheckpoint'ed per batch to truncate lineage; each append releases
+    the previous generation (``session.release``) once the new one is
+    materialized, and its own persisted pack on return and on a raise, so
+    an append whose points fail the build leaves the state and the cache
+    as they were. The owner frees the last generation with
+    ``release(inc.blocks, inc.packed)``. The driver transiently holds the
+    O(N·d) packed matrix, which the kernels carry in their closures — never
+    the O(N²) matrix.
     """
 
-    def __init__(self, spark: SparkSession, n_blocks_hint: int = 8):
-        self.spark = spark
+    def __init__(self, n_blocks_hint: int = 8):
         self.n_blocks_hint = n_blocks_hint
         self.packed: DataFrame | None = None
         self.blocks: DataFrame | None = None
@@ -743,59 +735,55 @@ class IncrementalDistanceBlocks:
         new_packed = _pack_points(ids_df, n_old, b, n_sub, self.n_blk).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        packed = new_packed if self.packed is None else self.packed.unionByName(new_packed)
-        # the gather is new_packed's first action: it materializes the persist
-        bc = self.spark.sparkContext.broadcast(_gather_points(packed))
-        # the new rows' stripes contain every new cell (new×all; old×new is
-        # its transpose), so their max decides whether the scale grows
-        scale = max(self.scale, _stripe_max(new_packed, bc))
+        try:
+            packed = new_packed if self.packed is None else self.packed.unionByName(new_packed)
+            # the gather is new_packed's first action: it materializes the persist
+            pv = _gather_points(packed)
+            # the new rows' stripes contain every new cell (new×all; old×new is
+            # its transpose), so their max decides whether the scale grows
+            scale = max(self.scale, _stripe_max(new_packed, pv))
 
-        # scale == 0 (all-identical corpus so far) also rebuilds: the append
-        # quantizer divides by scale, and the degenerate state is all-zero
-        # cells anyway
-        if self.blocks is None or scale > self.scale or scale <= 0.0:
-            blocks = _quantized_blocks(packed, bc, scale, n_new)
-            self.last_mode = "rebuild"
-        else:
+            # scale == 0 (all-identical corpus so far) also rebuilds: the append
+            # quantizer divides by scale, and the degenerate state is all-zero
+            # cells anyway
+            if self.blocks is None or scale > self.scale or scale <= 0.0:
+                blocks = _quantized_blocks(packed, pv, scale, n_new)
+                mode = "rebuild"
+            else:
 
-            def extend(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                pv = bc.value
-                newv = pv[n_old:]
-                new_sq = (newv * newv).sum(1)
-                sq = (pv * pv).sum(1)  # once per task, not per block row
-                for pdf in batches:
-                    for row in pdf.itertuples(index=False):
-                        start, nrows = int(row.start), int(row.block_rows)
-                        ra = pv[start : start + nrows]
-                        d2 = (
-                            sq[start : start + nrows][:, None]
-                            - 2.0 * (ra @ newv.T)
-                            + new_sq[None, :]
-                        )
-                        q_app = _quantize(np.sqrt(np.maximum(d2, 0.0)), scale)
-                        old = np.asarray(row.dist, dtype=np.int16).reshape(nrows, n_old)
-                        yield _block_row(
-                            int(row.block_id), start, nrows, n_new, np.hstack([old, q_app])
-                        )
+                def extend(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                    newv = pv[n_old:]
+                    new_sq = (newv * newv).sum(1)
+                    sq = (pv * pv).sum(1)  # once per task, not per block row
+                    for pdf in batches:
+                        for row in pdf.itertuples(index=False):
+                            start, nrows = int(row.start), int(row.block_rows)
+                            ra = pv[start : start + nrows]
+                            d2 = (
+                                sq[start : start + nrows][:, None]
+                                - 2.0 * (ra @ newv.T)
+                                + new_sq[None, :]
+                            )
+                            q_app = _quantize(np.sqrt(np.maximum(d2, 0.0)), scale)
+                            old = np.asarray(row.dist, dtype=np.int16).reshape(nrows, n_old)
+                            yield _block_row(
+                                int(row.block_id), start, nrows, n_new, np.hstack([old, q_app])
+                            )
 
-            fresh = _quantized_blocks(new_packed, bc, scale, n_new)
-            blocks = self.blocks.mapInPandas(extend, DAMDS_BLOCK_SCHEMA).unionByName(fresh)
-            self.last_mode = "append"
+                fresh = _quantized_blocks(new_packed, pv, scale, n_new)
+                blocks = self.blocks.mapInPandas(extend, DAMDS_BLOCK_SCHEMA).unionByName(fresh)
+                mode = "append"
 
-        # a union holds the partitions of all its pieces; place_blocks merges
-        # them back to the rule's count without a shuffle
-        blocks_ck = place_blocks(blocks, n_blk, key=None).localCheckpoint(eager=True)
-        packed_ck = place_blocks(packed, n_blk, key=None).localCheckpoint(eager=True)
-        # free the previous generation NOW (unpersist on a checkpointed
-        # Dataset is a no-op — see free_local_checkpoint)
-        if self.blocks is not None:
-            free_local_checkpoint(self.blocks)
-        if self.packed is not None:
-            free_local_checkpoint(self.packed)
-        new_packed.unpersist()
-        bc.destroy()  # both checkpoints are materialized; nothing recomputes
+            # a union holds the partitions of all its pieces; place_blocks merges
+            # them back to the rule's count without a shuffle
+            blocks_ck = place_blocks(blocks, n_blk, key=None).localCheckpoint(eager=True)
+            packed_ck = place_blocks(packed, n_blk, key=None).localCheckpoint(eager=True)
+        finally:
+            release(new_packed)
+        release(self.blocks, self.packed)  # the previous generation
         self.blocks = blocks_ck
         self.packed = packed_ck
         self.scale = scale
         self.n = n_new
         self.n_blk = n_blk
+        self.last_mode = mode

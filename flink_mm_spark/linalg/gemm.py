@@ -1,11 +1,12 @@
-"""Distributed GEMM: C = A × B with A row-block-partitioned, B broadcast.
+"""Distributed GEMM: C = A × B with A row-block-partitioned, B shipped whole.
 
 Reference semantics (mm/MatrixMultiply.java:107-160 + mm/Utils.java:16-35):
 each worker multiplies its row block of A by the full (broadcast) B and the
-results are gathered ordered by block index. Here: B ships as a Spark
-broadcast ndarray, the per-block product is one numpy ``@`` inside an
-Arrow-batched pandas UDF, and C stays distributed as a block DataFrame
-(gather to the driver only if the caller asks).
+results are gathered ordered by block index. Here: B rides in the pandas
+UDF's closure (PySpark broadcasts the pickled UDF itself once it passes
+``spark.broadcast.UDFCompressionThreshold``), the per-block product is one
+numpy ``@`` inside an Arrow-batched pandas UDF, and C stays distributed as
+a block DataFrame (gather to the driver only if the caller asks).
 
 Scale: A can be arbitrarily large (blocks are rows of a DataFrame spread
 over executors); the only constraint is B fits in executor memory — the
@@ -26,21 +27,18 @@ def gemm_broadcast(blocks: DataFrame, b_matrix: np.ndarray) -> DataFrame:
     """Multiply a block-partitioned A by a small dense B (driver ndarray)."""
     b_matrix = np.asarray(b_matrix, dtype=np.float64)
     n_out_cols = int(b_matrix.shape[1])
-    spark = blocks.sparkSession
-    b_bc = spark.sparkContext.broadcast(b_matrix)
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def gemm_udf(data: pd.Series, block_rows: pd.Series, matrix_cols: pd.Series) -> pd.Series:
-        b_local = b_bc.value
         out = []
         for flat, nrows, ncols in zip(data, block_rows, matrix_cols):
-            if int(ncols) != b_local.shape[0]:
+            if int(ncols) != b_matrix.shape[0]:
                 raise ValueError(
                     f"GEMM shape mismatch: A blocks have {int(ncols)} cols, "
-                    f"B has {b_local.shape[0]} rows"
+                    f"B has {b_matrix.shape[0]} rows"
                 )
             a = np.asarray(flat, dtype=np.float64).reshape(int(nrows), int(ncols))
-            out.append((a @ b_local).ravel())
+            out.append((a @ b_matrix).ravel())
         return pd.Series(out)
 
     return blocks.select(

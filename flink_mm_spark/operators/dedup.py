@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_mm_spark.registry import register
-from flink_mm_spark.session import keep_latest
+from flink_mm_spark.session import keep_latest, release
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 # Rows per packed block in the embedding_near_dup block-pair GEMM: bounds a
@@ -1698,9 +1698,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_CC_CACHE: list[DataFrame] = []  # last persisted labels (all component entries)
-
-
 def connected_components(edges: DataFrame, docs: DataFrame, max_rounds: int = 50):
     """(doc_id, label = component min) via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -1710,7 +1707,8 @@ def connected_components(edges: DataFrame, docs: DataFrame, max_rounds: int = 50
 
     ``edges``: (u, v) one row per undirected edge, any orientation;
     ``docs``: (doc_id) — singletons label themselves. Returns
-    (labels DataFrame, rounds used). Each half-round is one short-key
+    (labels DataFrame, rounds used); the labels are a local checkpoint held
+    by ``keep_latest`` until the next call. Each half-round is one short-key
     equi-join + min-aggregate over id pairs — never a corpus broadcast —
     and the edge set shrinks toward one star per component centered at the
     component minimum. Convergence is detected EXACTLY (count equality +
@@ -1721,25 +1719,6 @@ def connected_components(edges: DataFrame, docs: DataFrame, max_rounds: int = 50
     - small-star: every node links its smaller neighbors (and itself) to
       its minimum — collapses chains of smalls onto the center.
     """
-    from flink_mm_spark.algos.damds import free_local_checkpoint
-
-    # module-cache swap (ADVICE r8 #1): the labels table below is persisted
-    # because every caller consumes it at least twice (label join + size
-    # aggregate); without the swap each invocation leaked one persisted
-    # DataFrame into the block manager for the life of the session. The
-    # swap lives HERE rather than per-caller so all four component entry
-    # points (dedup_components[_exact], both corpus_prep funnels) share it.
-    #
-    # CONTRACT (ADVICE r9 #2, closed in code r11): a returned labels frame
-    # is SELF-CONTAINED — it is localCheckpoint'ed below BEFORE the edge
-    # checkpoint is freed, so its blocks never depend on freed lineage and
-    # a cached-partition loss cannot surface as a block-not-found crash.
-    # It remains consumable only until the NEXT components invocation
-    # (this swap frees the previous generation's blocks), which every
-    # caller in the repo honors (one entry runs to completion per grade).
-    while _CC_CACHE:
-        free_local_checkpoint(_CC_CACHE.pop())
-
     # each round references the previous edge set several times (sym view,
     # both stars, the fixpoint anti-join): without per-round lineage
     # truncation the LOGICAL plan doubles repeatedly and analysis blows the
@@ -1779,7 +1758,7 @@ def connected_components(edges: DataFrame, docs: DataFrame, max_rounds: int = 50
         )
         n_new, n_old = ss.count(), e.count()
         done = n_new == n_old and ss.exceptAll(e).isEmpty()
-        free_local_checkpoint(e)
+        release(e)
         e = ss
         if done:
             break
@@ -1795,10 +1774,11 @@ def connected_components(edges: DataFrame, docs: DataFrame, max_rounds: int = 50
     )
     # materialize labels into their OWN blocks before freeing the edge
     # checkpoint they derive from (VERDICT r10 #6): a persist() here would
-    # root the cached partitions' recompute path in e's soon-freed blocks
-    labels = labels.localCheckpoint(eager=True)
-    _CC_CACHE.append(labels)
-    free_local_checkpoint(e)
+    # root the cached partitions' recompute path in e's soon-freed blocks.
+    # Every caller reads them twice (label join + size aggregate), so all
+    # four component entry points share one held generation.
+    labels = keep_latest("cc_labels", labels.localCheckpoint(eager=True))
+    release(e)
     return labels, rounds
 
 

@@ -273,9 +273,9 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall at equal candidate budget (asserted in tests/test_similarity.py).
     The training collect is capped at ``IVF_TRAIN_MAX`` rows (deterministic:
     first rows by vec_id via TakeOrdered — never a full-corpus gather), the
-    (n_list × dim) centroids broadcast, and the cell id is the shuffle key
-    for both sides of the cogroup; n_list scales with corpus size to bound
-    cell width, n_probe buys recall.
+    (n_list × dim) centroids ride in the UDFs' closures, and the cell id is
+    the shuffle key for both sides of the cogroup; n_list scales with
+    corpus size to bound cell width, n_probe buys recall.
     """
     from pyspark.sql.window import Window
 
@@ -285,12 +285,10 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = np.vstack([r["emb"] for r in rows])
     mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-    cents = _train_coarse_centroids(mn, N_LIST)
-    c_bc = spark.sparkContext.broadcast(cents)
+    c = _train_coarse_centroids(mn, N_LIST)
 
     @F.pandas_udf(T.IntegerType())
     def cell_udf(emb: pd.Series) -> pd.Series:
-        c = c_bc.value
         x = np.vstack(emb.to_numpy())
         x = x / np.linalg.norm(x, axis=1, keepdims=True)
         d2 = (x * x).sum(1)[:, None] - 2.0 * (x @ c.T) + (c * c).sum(1)[None, :]
@@ -298,7 +296,6 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def probe_udf(emb: pd.Series) -> pd.Series:
-        c = c_bc.value
         x = np.vstack(emb.to_numpy())
         x = x / np.linalg.norm(x, axis=1, keepdims=True)
         d2 = (x * x).sum(1)[:, None] - 2.0 * (x @ c.T) + (c * c).sum(1)[None, :]
@@ -354,23 +351,21 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for s in range(PQ_S)
         ]
     )  # (S, K, PQ_D)
-    c_bc = spark.sparkContext.broadcast((coarse, books))
 
     def encode(batches):
-        cents, bks = c_bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             x = np.vstack(pdf["emb"].to_numpy()).astype(np.float64)
             x = x / np.linalg.norm(x, axis=1, keepdims=True)
-            dd = ((x * x).sum(1)[:, None] - 2.0 * (x @ cents.T)
-                  + (cents * cents).sum(1)[None, :])
+            dd = ((x * x).sum(1)[:, None] - 2.0 * (x @ coarse.T)
+                  + (coarse * coarse).sum(1)[None, :])
             cell = np.argmin(dd, axis=1)
-            r = x - cents[cell]
+            r = x - coarse[cell]
             codes = np.empty((len(x), PQ_S), dtype=np.int32)
             for s in range(PQ_S):
                 rs = r[:, s * PQ_D : (s + 1) * PQ_D]
-                b = bks[s]
+                b = books[s]
                 ds = ((rs * rs).sum(1)[:, None] - 2.0 * (rs @ b.T)
                       + (b * b).sum(1)[None, :])
                 codes[:, s] = np.argmin(ds, axis=1)
@@ -403,10 +398,8 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for s in range(PQ_S)
             ]
         )  # (S, K) float64
-    l_bc = spark.sparkContext.broadcast(luts)
 
     def score(batches):
-        tabs = l_bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -414,7 +407,7 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cells = pdf["cell"].to_numpy()
             codes = np.vstack(pdf["codes"].to_numpy())
             for i in range(len(pdf)):
-                lut = tabs[int(cells[i])]
+                lut = luts[int(cells[i])]
                 est[i] = lut[np.arange(PQ_S), codes[i]].sum()
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].to_numpy(), "est_dist": np.round(est, 6)}
@@ -465,6 +458,14 @@ def _pq_sqdist_int(cb: np.ndarray, x: np.ndarray, s: int, c: int) -> np.ndarray:
     for i in range(1, PQ_D):
         acc = acc + (x[..., base + i] - cb[c, base + i]) ** 2
     return np.floor(acc * 1e6 + 0.5).astype(np.int64)
+
+
+def _pq_lut(cb: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """The (S, K) integer ADC lookup table of query ``q``."""
+    return np.array(
+        [[_pq_sqdist_int(cb, q, s, c) for c in range(PQ_NCB)] for s in range(PQ_S)],
+        dtype=np.int64,
+    )
 
 
 def _pq_sqdist_sql(a: str, b: str) -> str:
@@ -546,11 +547,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sqdist_int(x: np.ndarray, s: int, c: int) -> np.ndarray:
         return _pq_sqdist_int(cb, x, s, c)
 
-    # (S, K) integer ADC lookup table for the query — driver-side, tiny
-    lut = np.array(
-        [[sqdist_int(q, s, c) for c in range(PQ_NCB)] for s in range(PQ_S)],
-        dtype=np.int64,
-    )
+    lut = _pq_lut(cb, q)  # driver-side, tiny
 
     def encode(batches):
         for pdf in batches:
@@ -712,8 +709,9 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs once (256 B → 8 B per vector) and amortizes across every query
     batch; per batch the scan touches codes only (8 B/vector), the
     exchange is the reduced local-top-k set (partitions × queries × k
-    rows), and the LUT broadcast is S×K×8 B per query. Composes with IVF
-    exactly like the batch tier (probe cells partition the code table).
+    rows), and the LUTs in the scoring kernel's closure are S×K×8 B per
+    query. Composes with IVF exactly like the batch tier (probe cells
+    partition the code table).
     """
     from pyspark.sql.window import Window
 
@@ -745,31 +743,17 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not qrows:
             return
         luts = {
-            int(r["vec_id"]): np.array(
-                [
-                    [
-                        _pq_sqdist_int(
-                            cb, np.asarray(r["emb"], dtype=np.float64), s, c
-                        )
-                        for c in range(PQ_NCB)
-                    ]
-                    for s in range(PQ_S)
-                ],
-                dtype=np.int64,
-            )
-            for r in qrows
+            int(r["vec_id"]): _pq_lut(cb, np.asarray(r["emb"], dtype=np.float64)) for r in qrows
         }
-        b = codes.sparkSession.sparkContext.broadcast(luts)
 
         def score(batches):
-            tabs = b.value
             srange = np.arange(PQ_S)
             for pdf in batches:
                 if not len(pdf):
                     continue
                 cds = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
                 vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                for qid, lut in tabs.items():
+                for qid, lut in luts.items():
                     est = lut[srange[None, :], cds].sum(axis=1)
                     # exact (est_micro, vec_id) partition-local top-k
                     idx = np.lexsort((vids, est))[:PQ_TOPK]
@@ -787,10 +771,6 @@ def pq_topk_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rnk") <= PQ_TOPK
         )
         topk.write.mode("overwrite").parquet(f"{spool}/ingest={bid}")
-        # the write above is this batch's only consumer: release the LUT
-        # broadcast instead of accumulating one per micro-batch (ADVICE
-        # r12 — harmless at PQS_NQ batches, a leak at a real query rate)
-        b.unpersist()
 
     qstream = (
         spark.readStream.schema("vec_id long, emb array<double>")

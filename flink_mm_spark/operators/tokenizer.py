@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from flink_mm_spark.operators.dedup import WORD_REGEX, tokens_expr
 from flink_mm_spark.registry import register
-from flink_mm_spark.session import keep_latest
+from flink_mm_spark.session import keep_latest, release
 from flink_mm_spark.sources.tables import parallelize_scan, table
 
 N_MERGES = 6
@@ -393,48 +393,54 @@ def _train_merges_from_words(
     )
     out: list[tuple] = []
     rounds_since_ckpt = 0
-    while len(out) < n_merges:
-        syms = seqs.select("freq", F.split("seq", " ").alias("l"))
-        pairs = syms.select(
-            "freq",
-            F.explode(
-                F.zip_with(
-                    F.slice("l", 1, F.size("l") - 1),
-                    F.slice("l", 2, F.size("l") - 1),
-                    lambda x, y: F.concat(x, F.lit(" "), y),
-                )
-            ).alias("p"),
-        )
-        rows = (
-            pairs.groupBy("p")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("p").asc())
-            .limit(BPE_TOPK)
-            .collect()
-        )
-        if not rows:
-            break
-        prov = _disjoint_prefix(rows, cap=min(BPE_MAX_BATCH, n_merges - len(out)))
-        if len(prov) > 1:
-            tstart, tend, coll = _batch_bound_stats(syms, pairs, prov)
-            batch = _select_merge_batch(prov, tstart, tend, coll)
-        else:
-            batch = [(prov[0][0], prov[0][1])]
-        padded = F.concat(F.lit(" "), F.col("seq"), F.lit(" "))
-        for pair, cnt in batch:
-            left, right = pair.split(" ")
-            merged = left + right
-            out.append((len(out) + 1, left, right, merged, cnt))
-            # symbol-disjoint within the batch, so chained padded replaces
-            # commute and equal the sequential per-round replace
-            padded = F.replace(
-                padded, F.lit(f" {pair} "), F.lit(f" {merged} ")
+    ckpt = None  # the live seqs checkpoint: released when superseded and on exit
+    try:
+        while len(out) < n_merges:
+            syms = seqs.select("freq", F.split("seq", " ").alias("l"))
+            pairs = syms.select(
+                "freq",
+                F.explode(
+                    F.zip_with(
+                        F.slice("l", 1, F.size("l") - 1),
+                        F.slice("l", 2, F.size("l") - 1),
+                        lambda x, y: F.concat(x, F.lit(" "), y),
+                    )
+                ).alias("p"),
             )
-        seqs = seqs.select("w", "freq", F.trim(padded).alias("seq"))
-        rounds_since_ckpt += 1
-        if rounds_since_ckpt >= BPE_CHECKPOINT_EVERY:
-            seqs = seqs.localCheckpoint(eager=True)
-            rounds_since_ckpt = 0
+            rows = (
+                pairs.groupBy("p")
+                .agg(F.sum("freq").alias("cnt"))
+                .orderBy(F.col("cnt").desc(), F.col("p").asc())
+                .limit(BPE_TOPK)
+                .collect()
+            )
+            if not rows:
+                break
+            prov = _disjoint_prefix(rows, cap=min(BPE_MAX_BATCH, n_merges - len(out)))
+            if len(prov) > 1:
+                tstart, tend, coll = _batch_bound_stats(syms, pairs, prov)
+                batch = _select_merge_batch(prov, tstart, tend, coll)
+            else:
+                batch = [(prov[0][0], prov[0][1])]
+            padded = F.concat(F.lit(" "), F.col("seq"), F.lit(" "))
+            for pair, cnt in batch:
+                left, right = pair.split(" ")
+                merged = left + right
+                out.append((len(out) + 1, left, right, merged, cnt))
+                # symbol-disjoint within the batch, so chained padded replaces
+                # commute and equal the sequential per-round replace
+                padded = F.replace(
+                    padded, F.lit(f" {pair} "), F.lit(f" {merged} ")
+                )
+            seqs = seqs.select("w", "freq", F.trim(padded).alias("seq"))
+            rounds_since_ckpt += 1
+            if rounds_since_ckpt >= BPE_CHECKPOINT_EVERY:
+                seqs = seqs.localCheckpoint(eager=True)
+                release(ckpt)
+                ckpt = seqs
+                rounds_since_ckpt = 0
+    finally:
+        release(ckpt)
     return out
 
 
@@ -1041,74 +1047,76 @@ def _train_wordpiece_from_words(words: DataFrame, n_merges: int) -> list[tuple]:
         ).alias("seq"),
     )
     out: list[tuple] = []
-    rounds_since_ckpt = 0
-    while len(out) < n_merges:
-        # syms feeds the pair aggregate AND the marginal aggregate (which
-        # itself broadcast-joins twice): persist per round or every
-        # consumer replays the growing replace-chain lineage over the
-        # corpus-vocab table (CLAUDE.md multi-consumer rule)
-        syms = seqs.select("freq", F.split("seq", " ").alias("l")).persist()
-        pairs = syms.select(
-            "freq",
-            F.explode(
-                F.zip_with(
-                    F.slice("l", 1, F.size("l") - 1),
-                    F.slice("l", 2, F.size("l") - 1),
-                    lambda x, y: F.concat(x, F.lit(" "), y),
-                )
-            ).alias("p"),
-        ).groupBy("p").agg(F.sum("freq").alias("cnt"))
-        marg = (
-            syms.select("freq", F.explode("l").alias("s"))
-            .groupBy("s")
-            .agg(F.sum("freq").alias("f"))
-        )
-        scored = (
-            pairs.withColumn("ls", F.split_part("p", F.lit(" "), F.lit(1)))
-            .withColumn("rs", F.split_part("p", F.lit(" "), F.lit(2)))
-            .join(F.broadcast(marg).withColumnRenamed("s", "ls").withColumnRenamed("f", "lf"), "ls")
-            .join(F.broadcast(marg).withColumnRenamed("s", "rs").withColumnRenamed("f", "rf"), "rs")
-            .withColumn(
-                "score",
-                F.col("cnt").cast("double")
-                / (F.col("lf").cast("double") * F.col("rf").cast("double")),
+    ckpt = None  # the live seqs checkpoint: released when superseded and on exit
+    try:
+        while len(out) < n_merges:
+            # syms feeds the pair aggregate AND the marginal aggregate (which
+            # itself broadcast-joins twice): persist per round or every
+            # consumer replays the growing replace-chain lineage over the
+            # corpus-vocab table (CLAUDE.md multi-consumer rule)
+            syms = seqs.select("freq", F.split("seq", " ").alias("l")).persist()
+            pairs = syms.select(
+                "freq",
+                F.explode(
+                    F.zip_with(
+                        F.slice("l", 1, F.size("l") - 1),
+                        F.slice("l", 2, F.size("l") - 1),
+                        lambda x, y: F.concat(x, F.lit(" "), y),
+                    )
+                ).alias("p"),
+            ).groupBy("p").agg(F.sum("freq").alias("cnt"))
+            marg = (
+                syms.select("freq", F.explode("l").alias("s"))
+                .groupBy("s")
+                .agg(F.sum("freq").alias("f"))
             )
-            .persist()
-        )
-        try:
-            mx_row = scored.agg(F.max("score").alias("m")).collect()[0]
-            if mx_row["m"] is None:
-                break
-            cands = scored.filter(
-                F.col("score") >= F.lit(float(mx_row["m"]) * (1.0 - 1e-9))
-            ).collect()
-        finally:
-            scored.unpersist()
-            syms.unpersist()
-        best: tuple[int, int, int, str] | None = None
-        for r in cands:
-            cand = (int(r["cnt"]), int(r["lf"]), int(r["rf"]), r["p"])
-            if best is None or _wp_better(cand, best):
-                best = cand
-        assert best is not None
-        left, right = best[3].split(" ")
-        merged = _wp_merged(left, right)
-        out.append((len(out) + 1, left, right, merged, best[0], best[1], best[2]))
-        seqs = seqs.select(
-            "w",
-            "freq",
-            F.trim(
-                F.replace(
-                    F.concat(F.lit(" "), F.col("seq"), F.lit(" ")),
-                    F.lit(f" {left} {right} "),
-                    F.lit(f" {merged} "),
+            scored = (
+                pairs.withColumn("ls", F.split_part("p", F.lit(" "), F.lit(1)))
+                .withColumn("rs", F.split_part("p", F.lit(" "), F.lit(2)))
+                .join(F.broadcast(marg).withColumnRenamed("s", "ls").withColumnRenamed("f", "lf"), "ls")
+                .join(F.broadcast(marg).withColumnRenamed("s", "rs").withColumnRenamed("f", "rf"), "rs")
+                .withColumn(
+                    "score",
+                    F.col("cnt").cast("double")
+                    / (F.col("lf").cast("double") * F.col("rf").cast("double")),
                 )
-            ).alias("seq"),
-        )
-        rounds_since_ckpt += 1
-        if rounds_since_ckpt >= BPE_CHECKPOINT_EVERY:
-            seqs = seqs.localCheckpoint(eager=True)
-            rounds_since_ckpt = 0
+                .persist()
+            )
+            try:
+                mx_row = scored.agg(F.max("score").alias("m")).collect()[0]
+                if mx_row["m"] is None:
+                    break
+                cands = scored.filter(
+                    F.col("score") >= F.lit(float(mx_row["m"]) * (1.0 - 1e-9))
+                ).collect()
+            finally:
+                release(scored, syms)
+            best: tuple[int, int, int, str] | None = None
+            for r in cands:
+                cand = (int(r["cnt"]), int(r["lf"]), int(r["rf"]), r["p"])
+                if best is None or _wp_better(cand, best):
+                    best = cand
+            assert best is not None
+            left, right = best[3].split(" ")
+            merged = _wp_merged(left, right)
+            out.append((len(out) + 1, left, right, merged, best[0], best[1], best[2]))
+            seqs = seqs.select(
+                "w",
+                "freq",
+                F.trim(
+                    F.replace(
+                        F.concat(F.lit(" "), F.col("seq"), F.lit(" ")),
+                        F.lit(f" {left} {right} "),
+                        F.lit(f" {merged} "),
+                    )
+                ).alias("seq"),
+            )
+            if len(out) % BPE_CHECKPOINT_EVERY == 0:  # one merge per round
+                seqs = seqs.localCheckpoint(eager=True)
+                release(ckpt)
+                ckpt = seqs
+    finally:
+        release(ckpt)
     return out
 
 
@@ -1603,8 +1611,8 @@ def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # refine piece probabilities by hard (Viterbi) EM, prune to a target size,
 # and encode documents against the learned pieces. Same two-tier scale story
 # as BPE: the CORPUS is touched once (the word-count shuffle feeding
-# ``_train_merges``'s words table); every EM round is one broadcast of the
-# O(vocab-size) piece table + one embarrassingly-parallel Viterbi pass over
+# ``_train_merges``'s words table); every EM round ships the O(vocab-size)
+# piece table in the kernel's closure + one embarrassingly-parallel Viterbi pass over
 # the distinct-word table + one piece-keyed count aggregate. Genuinely
 # iterative/float — graded rows-only, with the algorithmic contracts pinned
 # by tests/test_unigram.py (segmentation validity, hard-EM loss monotonicity,
@@ -1646,20 +1654,17 @@ def _viterbi(w: str, logp: dict, max_len: int) -> tuple[list[str], float]:
 def _unigram_em_round(
     words: DataFrame, logp: dict, max_len: int
 ) -> tuple[dict, float]:
-    """One distributed hard-EM round: broadcast the piece table, Viterbi
+    """One distributed hard-EM round: ship the piece table in the kernel's closure, Viterbi
     every distinct word in parallel (freq-weighted), aggregate piece counts
     by key. Returns (piece → count, total negative log-likelihood)."""
     import pandas as pd
-
-    sc = words.sparkSession.sparkContext
-    bl = sc.broadcast(logp)
 
     def estep(batches):
         for pdf in batches:
             agg: dict[str, int] = {}
             loss = 0.0
             for w, f in zip(pdf["w"], pdf["freq"]):
-                pieces, score = _viterbi(w, bl.value, max_len)
+                pieces, score = _viterbi(w, logp, max_len)
                 loss += -score * int(f)
                 for p in pieces:
                     agg[p] = agg.get(p, 0) + int(f)

@@ -31,11 +31,23 @@ the same code runs unchanged on a multi-executor cluster:
   commits summed 336-923 ms a batch in the same stream, vs 73-198 ms for
   the default provider under this manager).
 
-Beside the factory sit two process-lifetime helpers: ``scratch_dir`` (temp
-dirs removed at interpreter exit) and ``keep_latest`` (the one live
-persisted generation of a builder's intermediate, released on the next
-call). Streams are started only through ``streaming/runner.py``, which
-owns sinks, checkpoints, state partitions and drains.
+Beside the factory sit the driver-side lifetime helpers. One rule places
+every piece of driver-side state:
+
+- a SQL kernel's state (centroids, codebooks, LUTs, B) rides in the
+  kernel's closure; PySpark pickles it with the UDF and, above
+  ``spark.broadcast.UDFCompressionThreshold``, broadcasts the command
+  itself with the lifetime of the plan that runs it;
+- an RDD pass's state goes through ``linalg.block_matrix.ship``, freed
+  when the pass's job ends;
+- a frame that the returned plan reads is held by ``keep_latest`` (the
+  one live generation under a key, released on the next call);
+- a frame used only inside the call is freed in ``finally`` by
+  ``release``, which frees persisted frames and local checkpoints alike.
+
+``scratch_dir`` gives temp dirs removed at interpreter exit. Streams are
+started only through ``streaming/runner.py``, which owns sinks,
+checkpoints, state partitions and drains.
 """
 
 from __future__ import annotations
@@ -64,25 +76,48 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_TMP_ROOT)
 
 
+def _checkpoint_rdd(df: DataFrame):
+    """The checkpointed RDD a ``localCheckpoint``'ed frame scans, or None
+    when ``df`` is not such a frame (its analyzed plan is then not a
+    LogicalRDD over a checkpointed RDD)."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD" and plan.rdd().isCheckpointed():
+        return plan.rdd()
+    return None
+
+
+def release(*dfs: DataFrame | None) -> None:
+    """Free each frame's blocks now: a persisted frame through
+    ``unpersist``; a local checkpoint, which is not in the CacheManager
+    (its ``unpersist()`` is a no-op, so its blocks would linger until the
+    ContextCleaner collects the Dataset), through the checkpointed RDD its
+    plan scans. ``None`` is skipped, so a ``finally`` can release what a
+    failed step never built."""
+    for df in dfs:
+        if df is not None:
+            rdd = _checkpoint_rdd(df)
+            (df if rdd is None else rdd).unpersist(False)
+
+
 _KEPT: dict[str, tuple[DataFrame, ...]] = {}
 
 
 def keep_latest(key: str, *dfs: DataFrame):
-    """Persist ``dfs`` as the one live generation under ``key``, releasing
-    the previous generation first. For a DataFrame consumed by 2+
-    downstream branches of one builder (Spark re-executes the whole
-    subtree per consumer otherwise): the builder's returned plan executes
-    after it returns, so it cannot unpersist its own cache; the next call
-    does, which bounds the leak to one generation per key.
+    """Hold ``dfs`` as the one live generation under ``key``, releasing
+    the previous generation first. For a frame that the builder's returned
+    plan reads (a DataFrame consumed by 2+ downstream branches, which Spark
+    re-executes per consumer otherwise): that plan executes after the
+    builder returns, so the builder cannot free it; the next call does,
+    which bounds the leak to one generation per key. A local checkpoint is
+    held as it is; any other frame is persisted.
 
     Release comes BEFORE persist: a repeat call with the same ``sf_dir``
     builds a plan equal to the cached one, so Spark's CacheManager treats
     the new ``persist()`` as a no-op ("already cached"), and unpersisting
     the old handle afterwards would uncache the new one with it. Returns
-    the persisted DataFrame, or the tuple of them."""
-    for df in _KEPT.pop(key, ()):
-        df.unpersist()
-    _KEPT[key] = tuple(df.persist() for df in dfs)
+    the held DataFrame, or the tuple of them."""
+    release(*_KEPT.pop(key, ()))
+    _KEPT[key] = tuple(df.persist() if _checkpoint_rdd(df) is None else df for df in dfs)
     return _KEPT[key][0] if len(dfs) == 1 else _KEPT[key]
 
 

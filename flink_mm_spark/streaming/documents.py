@@ -1094,7 +1094,7 @@ def _corpus_to_shards(spark: SparkSession, sf_dir: str, strict: bool) -> DataFra
         idempotent_shard_append,
         read_back_shards,
     )
-    from flink_mm_spark.session import scratch_dir
+    from flink_mm_spark.session import release, scratch_dir
 
     src = deterministic_arrival_split(spark, sf_dir, n_batches=CTS_SHARDS)
     # PASS 1 — online decisions over the arriving corpus
@@ -1131,14 +1131,17 @@ def _corpus_to_shards(spark: SparkSession, sf_dir: str, strict: bool) -> DataFra
         .withColumn("shard_id", F.pmod("doc_id", F.lit(CTS_SHARDS)).cast("bigint"))
         .select("doc_id", "n_tok", "shard_id")
     )
-    run_stream(
-        doc_stream,
-        "cts2",
-        foreach=lambda df, bid: idempotent_shard_append(
-            df.join(F.broadcast(drops), "doc_id", "left_anti"), bid, dst
-        ),
-        state_parts=None,
-    )
+    try:
+        run_stream(
+            doc_stream,
+            "cts2",
+            foreach=lambda df, bid: idempotent_shard_append(
+                df.join(F.broadcast(drops), "doc_id", "left_anti"), bid, dst
+            ),
+            state_parts=None,
+        )
+    finally:
+        release(drops)  # pass 2 is its only reader
     back = read_back_shards(spark, dst)
     h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10).cast(
         "bigint"

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from flink_mm_spark.operators.similarity import COV_ORACLE, cov_assemble
 from flink_mm_spark.registry import register
+from flink_mm_spark.session import keep_latest
 from flink_mm_spark.sources.tables import table
 from flink_mm_spark.streaming.runner import run_stream, staged
 
@@ -118,8 +119,9 @@ def embedding_covariance_streamed(spark: SparkSession, sf_dir: str) -> DataFrame
     # localCheckpoint: the assembly joins three branches of this table and
     # Spark cannot re-instance MemoryPlan attributes for self-joins
     # (INTERNAL_ERROR "conflicting references", observed r11); checkpointing
-    # rewrites the d(d+1)/2 + d + 1 rows as a LogicalRDD, which can.
-    t = spark.table(name).localCheckpoint(eager=True)
+    # rewrites the d(d+1)/2 + d + 1 rows as a LogicalRDD, which can. The
+    # returned plan reads it, so it is held until the next call.
+    t = keep_latest("cov_stream_terms", spark.table(name).localCheckpoint(eager=True))
     prods_ut = t.filter((F.col("i") >= 0) & (F.col("j") >= 0)).select(
         "i", "j", F.col("sp").alias("sxy")
     )

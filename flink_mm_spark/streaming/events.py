@@ -265,7 +265,7 @@ class IncrementalMDS:
     within the batch) via the same two-pass prefix count that
     ``pack_sequences`` uses — a per-batch global row_number window would
     serialize the batch through one partition. Old checkpoint generations
-    are freed eagerly (``damds.free_local_checkpoint``).
+    are freed eagerly (``session.release``).
     """
 
     def __init__(self, dim: int = 2, stress_loops: int = 2, n_blocks: int = 8):
@@ -282,7 +282,7 @@ class IncrementalMDS:
         """(vec_id, vec) → ((point_id, vec), batch size, persisted parts)
         with ids self.n .. self.n+b-1 in vec_id order: two-pass distributed
         prefix count (range partition → per-partition counts →
-        partition-local offset add). Caller unpersists ``parts`` after
+        partition-local offset add). Caller releases ``parts`` after
         materializing the result."""
         import pandas as pd
 
@@ -318,24 +318,25 @@ class IncrementalMDS:
                 )
 
         out = parts.mapInPandas(assign, "point_id long, vec array<double>")
-        # materialized by the caller's localCheckpoint before parts unpersists
+        # materialized by the caller's localCheckpoint before parts is released
         return out, base - self.n, parts
 
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
         from flink_mm_spark.algos.damds import IncrementalDistanceBlocks, damds
+        from flink_mm_spark.session import release
 
-        spark = batch_df.sparkSession
         new_vecs = batch_df.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("vec")
         )
         ids, b, parts = self._assign_ids(new_vecs)
-        if b == 0:
-            parts.unpersist()
-            return
-        if self.inc is None:
-            self.inc = IncrementalDistanceBlocks(spark, n_blocks_hint=self.n_blocks)
-        self.inc.append(ids, b)  # eager: blocks/packed checkpoints materialize
-        parts.unpersist()
+        try:
+            if b == 0:
+                return
+            if self.inc is None:
+                self.inc = IncrementalDistanceBlocks(n_blocks_hint=self.n_blocks)
+            self.inc.append(ids, b)  # eager: blocks/packed checkpoints materialize
+        finally:
+            release(parts)
         self.n += b
 
         res = damds(

@@ -210,7 +210,6 @@ def cc_rounds_experiment(spark, sizes=(10_000, 100_000, 1_000_000)) -> None:
         labels, rounds = connected_components(edges, docs)
         ok = labels.filter(F.col("label") != 0).count() == 0  # one chain → all 0
         dt = round(time.perf_counter() - t0, 2)
-        labels.unpersist()  # connected_components persists; don't pin 3 gens
         print(
             json.dumps(
                 {"op": "cc_chain_rounds", "n_nodes": n, "rounds": rounds,

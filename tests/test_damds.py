@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 
 from flink_mm_spark.algos import damds as D
+from flink_mm_spark.session import release
 from tests.conftest import persisted_rdds, spark_work
 
 N = 60
@@ -249,16 +250,43 @@ def test_blocks_from_points_distributed_construction(spark):
         fb.unpersist()
 
 
-def test_blocks_from_points_rejects_ids_that_are_not_row_indices(spark):
-    """Point ids must be exactly the row indices 0..N-1: a missing id with
-    a duplicate in its place fails the build instead of shifting rows."""
+@pytest.mark.parametrize("path", ["damds_blocks_from_points", "IncrementalDistanceBlocks.append"])
+def test_blocks_from_points_rejects_ids_that_are_not_row_indices(spark, path):
+    """Point ids must be exactly the row indices: a missing id with a
+    duplicate in its place fails the build instead of shifting rows, and
+    the failed build leaves the persisted RDDs and the CacheManager as it
+    found them (an append over existing state also keeps that state)."""
     import pandas as pd
 
-    ids = np.array([0, 1, 2, 3, 4, 4], dtype=np.int64)  # 5 missing, 4 twice
-    pdf = pd.DataFrame({"point_id": ids, "vec": list(np.eye(6))})
-    pts_df = spark.createDataFrame(pdf, "point_id long, vec array<double>")
-    with pytest.raises(Exception, match="point ids of block 1 are not 3..5"):
-        D.damds_blocks_from_points(spark, pts_df, n_points=6, n_blocks=2)
+    def points(ids):
+        pdf = pd.DataFrame({"point_id": np.asarray(ids, dtype=np.int64), "vec": list(np.eye(6))})
+        return spark.createDataFrame(pdf, "point_id long, vec array<double>")
+
+    bad = [0, 1, 2, 3, 4, 4]  # 5 missing, 4 twice
+    inc = None
+    if path == "damds_blocks_from_points":
+        match = "point ids of block 1 are not 3..5"
+
+        def build():
+            D.damds_blocks_from_points(spark, points(bad), n_points=6, n_blocks=2)
+    else:
+        inc = D.IncrementalDistanceBlocks(n_blocks_hint=2)
+        inc.append(points(range(6)), 6)  # state of one block; the bad batch is block 1
+        match = "point ids of block 1 are not 6..11"
+
+        def build():
+            inc.append(points([6 + i for i in bad]), 6)
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    start = (persisted_rdds(spark), cache.numCachedEntries())
+    try:
+        with pytest.raises(Exception, match=match):
+            build()
+        assert (persisted_rdds(spark), cache.numCachedEntries()) == start
+        assert inc is None or (inc.n, inc.n_blk) == (6, 1)
+    finally:
+        if inc is not None:
+            release(inc.blocks, inc.packed)
 
 
 def test_degenerate_single_point(spark):
@@ -344,7 +372,7 @@ def test_incremental_blocks_bitwise_match_from_scratch(spark):
     pts = rng.standard_normal((n, 4))
     pts[0, :] = 8.0
     pts[1, :] = -8.0  # the global max pair lands in batch 1 → appends later
-    inc = D.IncrementalDistanceBlocks(spark, n_blocks_hint=4)
+    inc = D.IncrementalDistanceBlocks(n_blocks_hint=4)
     modes = []
     for s, e in [(0, 24), (24, 40), (40, 60)]:
         ids = spark.createDataFrame(
@@ -395,7 +423,7 @@ def test_incremental_blocks_free_old_generations(spark):
     pts = rng.standard_normal((48, 3))
     pts[0, :] = 9.0
     pts[1, :] = -9.0
-    inc = D.IncrementalDistanceBlocks(spark, n_blocks_hint=2)
+    inc = D.IncrementalDistanceBlocks(n_blocks_hint=2)
 
     def rdd_id(df):
         return df._jdf.queryExecution().analyzed().rdd().id()

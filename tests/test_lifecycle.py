@@ -1,7 +1,10 @@
-"""The engine's two lifecycle helpers: ``streaming/runner.py`` starts every
-stream, ``session.keep_latest`` holds every persisted intermediate. Plus the
-one measurement path (Spark's event log, never the UI's status REST API) and
-the one block-placement rule (``block_matrix.place_blocks``).
+"""The engine's lifecycle helpers: ``streaming/runner.py`` starts every
+stream, ``session.keep_latest`` holds every intermediate the returned plan
+reads, ``session.release`` frees every other one, and ``block_matrix.ship``
+is the one explicit broadcast (other kernel state rides in the kernel's
+closure). Plus the one measurement path (Spark's event log, never the UI's
+status REST API) and the one block-placement rule
+(``block_matrix.place_blocks``).
 
 The guards are stdlib-only source scans, so a hand-rolled stream start,
 module cache or REST poll fails here before it can drift from the helpers.
@@ -18,9 +21,9 @@ PKG = ROOT / "flink_mm_spark"
 
 # the one stream outside the runner: default trigger, polled by row count
 STREAM_SCAN_ENTRY = ("sources/datasource.py", "binmatrix_stream_scan")
-# _CC_CACHE frees local checkpoints (not persists); _ONL_CKPT_CACHE maps an
-# sf dir to a finished run's checkpoint for the compaction entry
-ALLOWED_CACHES = {"_CC_CACHE", "_ONL_CKPT_CACHE"}
+# _ONL_CKPT_CACHE maps an sf dir to a finished run's checkpoint (a path, not
+# a Spark resource) for the compaction entry
+ALLOWED_CACHES = {"_ONL_CKPT_CACHE"}
 
 
 def _modules():
@@ -51,6 +54,41 @@ def test_streams_and_caches_only_through_the_helpers():
             caches.append((rel, ".pop().unpersist() swap"))
     assert {s for s in starts if s[0] != "streaming/runner.py"} == {STREAM_SCAN_ENTRY}, starts
     assert caches == [], caches
+
+
+def test_one_explicit_broadcast_and_one_release():
+    """Kernel state ships one way: a SQL kernel's in its closure, an RDD
+    pass's through ``block_matrix.ship``, the only SparkContext broadcast
+    in the package (``F.broadcast`` is a join hint). Frames are freed one
+    way, ``session.release``; the checkpoint-only helper it replaced is gone."""
+    found = []
+    for rel, src in _modules():
+        tree = ast.parse(src)
+        allowed = {
+            id(node)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and (rel, fn.name) == ("linalg/block_matrix.py", "ship")
+            for node in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "broadcast"
+                and not (isinstance(node.func.value, ast.Name) and node.func.value.id == "F")
+                and id(node) not in allowed
+            ):
+                found.append((rel, node.lineno))
+    assert found == [], found
+    this = pathlib.Path(__file__).resolve()
+    named = [
+        path.relative_to(ROOT).as_posix()
+        for path in sorted(ROOT.rglob("*.py"))
+        if path != this
+        and not path.relative_to(ROOT).parts[0].startswith(".")
+        and "free_local_checkpoint" in path.read_text()
+    ]
+    assert named == [], named
 
 
 def test_no_ui_or_status_rest_api_outside_perfbench():

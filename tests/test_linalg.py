@@ -13,6 +13,7 @@ from flink_mm_spark.linalg.block_matrix import (
     split_rows,
 )
 from flink_mm_spark.linalg.gemm import gemm_broadcast
+from flink_mm_spark.session import release
 from flink_mm_spark.sources.binary_matrix import (
     generate_short_blocks,
     read_matrix_blocks,
@@ -98,7 +99,7 @@ def _placed_tables(spark, name, n_blocks, tmp_path):
     else:  # IncrementalDistanceBlocks.append: a rebuild (2 blocks), then an append (+1)
         pts = rng.standard_normal((48, 3))
         pts[0], pts[1] = 9.0, -9.0  # the max pair comes first: the append keeps the scale
-        inc = D.IncrementalDistanceBlocks(spark, n_blocks_hint=2)
+        inc = D.IncrementalDistanceBlocks(n_blocks_hint=2)
         modes = []
         for s, e in [(0, 32), (32, 48)]:
             inc.append(_points(spark, range(s, e), pts[s:e]), e - s)
@@ -106,8 +107,7 @@ def _placed_tables(spark, name, n_blocks, tmp_path):
             yield inc.blocks, inc.n_blk
             yield inc.packed, inc.n_blk
         assert modes == ["rebuild", "append"]
-        D.free_local_checkpoint(inc.blocks)
-        D.free_local_checkpoint(inc.packed)
+        release(inc.blocks, inc.packed)
 
 
 @pytest.mark.parametrize(

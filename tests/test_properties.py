@@ -8,6 +8,7 @@ from hypothesis import strategies as st
 
 from flink_mm_spark.algos.damds import quantize_distances
 from flink_mm_spark.linalg.block_matrix import split_rows
+from flink_mm_spark.session import release
 
 INV_SHORT_MAX = 1.0 / 32767.0
 
@@ -152,7 +153,7 @@ def test_connected_components_chain_converges_logarithmically(spark):
     docs = spark.range(n).selectExpr("id AS doc_id")
     labels, rounds = connected_components(edges, docs)
     got = {r["doc_id"]: r["label"] for r in labels.collect()}
-    labels.unpersist()
+    release(labels)
     assert got == {i: 0 for i in range(n)}
     assert rounds <= 14, rounds  # O(log n), nowhere near diameter/25-cap land
 
@@ -173,7 +174,7 @@ def test_connected_components_random_graph_matches_union_find(spark):
     docs = spark.range(n).selectExpr("id AS doc_id")
     labels, rounds = connected_components(edf, docs)
     got = {r["doc_id"]: r["label"] for r in labels.collect()}
-    labels.unpersist()
+    release(labels)
     assert got == want
     assert 1 <= rounds <= 14
 
@@ -199,7 +200,9 @@ def test_module_caches_swap_not_accumulate(spark):
         "dedup_keep_best",
         "cross_source_overlap",
         "ngram_novelty",  # _NOV_CACHE (ADVICE r8 #2: was unguarded)
-        "dedup_components_exact",  # _CC_CACHE in connected_components (ADVICE r8 #1)
+        "dedup_components_exact",  # connected_components' labels (ADVICE r8 #1)
+        "embedding_covariance_streamed",  # the drained sink's local checkpoint
+        "corpus_to_shards_streamed",  # the frozen drop set
     ):
         fn = registry.QUERIES[name].fn
         fn(spark, SF_DIR).count()

@@ -1581,15 +1581,21 @@ def test_drain_with_timers_expected_batches_skips_empty_wait(spark, tmp_path):
 def test_drain_with_timers_counts_batches_past_progress_window():
     """The expected-batches fast path counts consumed batchIds across polls:
     ``recentProgress`` keeps only the last numRecentProgressUpdates entries,
-    so a count over it alone never reaches a total larger than that window."""
+    so a count over it alone never reaches a total larger than that window.
+    Once drained, the stop waits for the next batch's offset phase: the
+    trigger stays active across back-to-back timer batches, and a stop
+    inside a batch interrupts its jobs."""
     from flink_mm_spark.streaming.runner import drain_with_timers
 
     class WindowedQuery:
-        """One more file-consuming batch per poll; progress window of 2."""
+        """One more file-consuming batch per poll; progress window of 2.
+        Status: a batch running for two polls, then the offset phase."""
 
         def __init__(self):
             self.isActive = True
             self.batches = []
+            self.status_polls = 0
+            self.stopped_in = None
 
         @property
         def recentProgress(self):
@@ -1599,8 +1605,16 @@ def test_drain_with_timers_counts_batches_past_progress_window():
             )
             return self.batches[-2:]
 
+        @property
+        def status(self):
+            self.status_polls += 1
+            running = self.status_polls <= 2
+            self.message = "Processing new data" if running else "Writing offsets to log"
+            return {"isTriggerActive": True, "message": self.message}
+
         def stop(self):
             self.isActive = False
+            self.stopped_in = self.message
 
         def awaitTermination(self):
             pass
@@ -1609,6 +1623,7 @@ def test_drain_with_timers_counts_batches_past_progress_window():
     drain_with_timers(q, poll_s=0.0, max_wall_s=5.0, expected_batches=5)
     assert not q.isActive
     assert len(q.batches) == 5
+    assert q.stopped_in == "Writing offsets to log"
 
 
 def test_spread_batches_guard_sizes_batch_by_trigger_granularity(spark, tmp_path):
