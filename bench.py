@@ -237,19 +237,16 @@ def bench_damds(spark, sf_dir: str, n: int = 500) -> None:
         )
     )
     # block sizing: ~31 rows/block at N=500. The anneal pays one barrier of
-    # min(n_blocks, cores) tasks per kernel pass (place_blocks; 22 jobs per
+    # min(n_blocks, cores) tasks per kernel pass (place_blocks; 18 jobs per
     # run, construction included): 32 one-row-heavy tasks measured
     # 14.4-16.8 s vs 12.7 s at 16 — schedule cost, not compute.
     # At cluster N the same rule (rows/block >> 1, blocks ≈ a few per core)
     # holds; block count is a constructor knob, not a semantic change.
     blocks = damds_blocks_from_points(spark, pts, n_points=n, n_blocks=16)
-    try:
-        damds(
-            blocks, n, dim=3, max_temp_loops=4, max_stress_loops=2, cg_iters=8,
-            uniform_weights=True,  # from-points blocks: closed-form CG multiply
-        )
-    finally:
-        blocks.unpersist()
+    damds(
+        blocks, n, dim=3, max_temp_loops=4, max_stress_loops=2, cg_iters=8,
+        uniform_weights=True,  # from-points blocks: closed-form CG multiply
+    )
 
 
 def bench_incremental_mds(spark, sf_dir: str) -> float:
@@ -286,7 +283,7 @@ def bench_incremental_mds(spark, sf_dir: str) -> float:
     dt = time.perf_counter() - t0
     from flink_mm_spark.session import release
 
-    release(inc.blocks, inc.packed)
+    release(inc.blocks)
     return dt
 
 

@@ -86,10 +86,7 @@ def cmd_damds(args: argparse.Namespace) -> int:
             weight_path=cfg.get("WeightMatrixFile") or None,
             n_blocks=args.blocks,
         )
-    try:
-        res = damds_from_config(blocks, cfg)
-    finally:
-        blocks.unpersist()
+    res = damds_from_config(blocks, cfg)
     print(f"final stress {res.stress:.10f} after {res.stress_iters} stress iters")
     out_dir = cfg.get("OutputFolder")
     if out_dir:

@@ -10,11 +10,14 @@ Spark shape:
   weight ARRAY<SHORT>), built from driver arrays (``damds_blocks``), int16
   side files (``damds_blocks_from_files``) or points (one builder: whole
   corpora through ``damds_blocks_from_points``, growing ones through
-  ``IncrementalDistanceBlocks``) and placed by ``place_blocks``.
-- ``damds`` decodes the table once into a loop-lifetime RDD of (block_id,
+  ``IncrementalDistanceBlocks``) and placed by ``place_blocks``. The file
+  and points builders run over one placed table of ``split_rows`` specs.
+- Every constructor returns a lazy plan that caches nothing (the
+  incremental state alone is a checkpoint, since it outlives each anneal).
+  ``damds`` decodes the table once into a loop-lifetime RDD of (block_id,
   start, int16 dist, int16 weight | None) numpy blocks (``decoded_blocks``)
-  — the loop-invariant caching the reference lacks (it re-reads files
-  every Flink job, SURVEY §4.1).
+  — the one copy of the bytes, as the reference's blocks are (it re-reads
+  files every Flink job, SURVEY §4.1).
 - The embedding X is (N, 3)-tiny and lives on the driver; each distributed
   kernel is one ``map_blocks`` job with X in its closure, emitting per-block
   partials (stress scalars or block slices of B(Z)X / VX) that the driver
@@ -40,7 +43,6 @@ from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.storagelevel import StorageLevel
 
 from flink_mm_spark.linalg.block_matrix import (
     array_blocks,
@@ -91,8 +93,7 @@ def damds_blocks(
     for b, start, nrows in split_rows(n, n_blocks):
         w = None if weights is None else weights[start : start + nrows].ravel().tolist()
         rows.append((b, start, nrows, n, dist[start : start + nrows].ravel().tolist(), w))
-    df = spark.createDataFrame(rows, DAMDS_BLOCK_SCHEMA)
-    return place_blocks(df, len(rows)).persist(StorageLevel.MEMORY_AND_DISK)
+    return place_blocks(spark.createDataFrame(rows, DAMDS_BLOCK_SCHEMA), len(rows))
 
 
 def decoded_blocks(blocks: DataFrame) -> AbstractContextManager[RDD]:
@@ -402,10 +403,9 @@ def damds(
     (BC then CG) until relative stress change < threshold.
 
     ``blocks`` is decoded once into the anneal's RDD (``decoded_blocks``),
-    so the int16 bytes are held twice while it runs: in the caller's
-    DataFrame and in that RDD. ``matrix_stats`` is the pass that
-    materializes the RDD; it and any shipped v are released when the anneal
-    returns or raises.
+    the one cache of the int16 bytes: the constructors return lazy plans.
+    ``matrix_stats`` is the pass that materializes the RDD; it and any
+    shipped v are released when the anneal returns or raises.
     """
     with ExitStack() as release:
         rb = release.enter_context(decoded_blocks(blocks))
@@ -504,6 +504,16 @@ def _block_row(block_id, start, nrows, n_points, dist, weight=None) -> pd.DataFr
     )
 
 
+def _placed_specs(spark: SparkSession, specs: list[tuple[int, int, int]]) -> DataFrame:
+    """The (block_id, start, block_rows) row-block ``specs`` as a table
+    placed by ``place_blocks`` — every file and points builder's input and
+    its one exchange. The ids may start past 0 (an append's fresh blocks):
+    placement keys on the spec's position ``i``."""
+    cols = ["i", "block_id", "start", "block_rows"]
+    pdf = pd.DataFrame([(i, *spec) for i, spec in enumerate(specs)], columns=cols)
+    return place_blocks(spark.createDataFrame(pdf), len(specs), key="i")
+
+
 def damds_blocks_from_files(
     spark: SparkSession,
     dist_path: str,
@@ -519,7 +529,8 @@ def damds_blocks_from_files(
     when given, the matching range of the weight file — the shuffle-free
     distance/weight pairing the reference does by re-reading side files per
     block (damds/Distances.java:71-106, SURVEY S8/J3). The driver holds
-    just the block manifest.
+    just the block manifest. The table is a lazy plan: ``damds`` reads the
+    files once into its decoded blocks.
     """
     import os
 
@@ -531,15 +542,11 @@ def damds_blocks_from_files(
         actual = os.path.getsize(pth)
         if actual < expect:
             raise ValueError(f"{pth}: {actual} bytes < expected {expect}")
-    specs = pd.DataFrame(
-        split_rows(n_points, n_blocks), columns=["block_id", "start", "block_rows"]
-    )
-    spec_df = place_blocks(spark.createDataFrame(specs), len(specs))
 
     def load(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for _, r in pdf.iterrows():
-                start, nrows = int(r["start"]), int(r["block_rows"])
+            for r in pdf.itertuples(index=False):
+                start, nrows = int(r.start), int(r.block_rows)
                 count = nrows * n_points
                 offset = start * n_points * dt.itemsize
                 d = np.fromfile(dist_path, dtype=dt, count=count, offset=offset).astype(np.int16)
@@ -548,103 +555,74 @@ def damds_blocks_from_files(
                     if weight_path is not None
                     else None
                 )
-                yield _block_row(int(r["block_id"]), start, nrows, n_points, d, w)
+                yield _block_row(int(r.block_id), start, nrows, n_points, d, w)
 
-    return spec_df.mapInPandas(load, DAMDS_BLOCK_SCHEMA).persist(StorageLevel.MEMORY_AND_DISK)
+    specs = _placed_specs(spark, split_rows(n_points, n_blocks))
+    return specs.mapInPandas(load, DAMDS_BLOCK_SCHEMA)
 
 
 # --- the points → distance-block builder ------------------------------------
 # One set of kernels serves both ``damds_blocks_from_points`` (a whole corpus)
 # and ``IncrementalDistanceBlocks`` (a corpus growing by micro-batches):
-# pack the points into row blocks (one O(N·d) exchange), gather the O(N·d)
-# packed matrix into the kernels' closures, then per row block one GEMM
-# stripe (block_rows × N) born in its final home — a max pass for the
-# quantization scale and a second pass that re-runs the GEMM and quantizes.
-# Recomputing the GEMM is deliberate: at d ≤ a few hundred it is far cheaper
-# than persisting N²×8 float bytes.
-
-PACKED_POINTS_SCHEMA = "blk int, start long, nrows int, mat array<double>"
+# gather the O(N·d) points to the driver (they ride in the kernels' closures,
+# so block b's rows are pv[start:start+rows]), then per row block of a placed
+# spec table one GEMM stripe (block_rows × N) born in its final home — a max
+# pass for the quantization scale and a second pass that re-runs the GEMM and
+# quantizes. Recomputing the GEMM is deliberate: at d ≤ a few hundred it is
+# far cheaper than persisting N²×8 float bytes.
 
 
-def _pack_points(
+def _gather_points(
     points: DataFrame, start: int, n_rows: int, n_blocks: int, first_blk: int = 0
-) -> DataFrame:
-    """(point_id, vec) rows with ids start..start+n_rows-1 → row blocks
-    (blk, start, nrows, mat) over the ``split_rows`` ranges of those rows,
-    numbered from ``first_blk`` in row order. ``place_blocks`` moves the
-    points (the build's one exchange); each block packs inside its task."""
-    specs = split_rows(n_rows, n_blocks)
-    q, r = divmod(n_rows, n_blocks)
-    boundary = r * (q + 1)
-    rel = F.col("point_id").cast("long") - F.lit(start)
-    sub = (
-        F.when(rel < boundary, (rel / (q + 1)).cast("int"))
-        .otherwise((F.lit(r) + (rel - boundary) / max(q, 1)).cast("int"))
-        if q > 0
-        else rel.cast("int")
-    )
-    pts = points.select(rel.alias("rel"), F.col("vec"), sub.alias("sub"))
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = list(batches)
-        if not frames:
-            return
-        for b, g in pd.concat(frames).groupby("sub"):
-            g = g.sort_values("rel")  # block rows ordered by global row index
-            _, s, nr = specs[b]
-            if not np.array_equal(g["rel"].to_numpy(), np.arange(s, s + nr)):
-                raise ValueError(
-                    f"point ids of block {first_blk + b} are not {start + s}..{start + s + nr - 1}"
-                )
-            m = np.vstack(g["vec"].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {"blk": [first_blk + b], "start": [start + s], "nrows": [nr], "mat": [m.ravel()]}
+) -> np.ndarray:
+    """(point_id, vec) rows with ids start..start+n_rows-1 → the (n_rows, d)
+    matrix in id order on the driver. Any other id set fails, naming the
+    first of the ``split_rows`` blocks (numbered from ``first_blk``) whose
+    ids are wrong."""
+    pdf = points.select("point_id", "vec").toPandas()
+    order = np.argsort(pdf["point_id"].to_numpy())
+    rel = pdf["point_id"].to_numpy()[order] - start
+    for b, s, nr in split_rows(n_rows, n_blocks):
+        got = rel[s:] if s + nr == n_rows else rel[s : s + nr]  # the last block owns extras
+        if not np.array_equal(got, np.arange(s, s + nr)):
+            raise ValueError(
+                f"point ids of block {first_blk + b} are not {start + s}..{start + s + nr - 1}"
             )
-
-    return place_blocks(pts, len(specs), key="sub").mapInPandas(pack, PACKED_POINTS_SCHEMA)
-
-
-def _gather_points(packed: DataFrame) -> np.ndarray:
-    """The packed points as one (N, d) matrix in row order: an O(N·d)
-    gather, the same order of data the anneal ships every pass as X."""
-    rows = sorted(packed.select("start", "nrows", "mat").collect(), key=lambda r: r["start"])
-    return np.vstack(
-        [np.asarray(r["mat"], dtype=np.float64).reshape(r["nrows"], -1) for r in rows]
-    )
+    return np.vstack(pdf["vec"].to_numpy()[order]).astype(np.float64)
 
 
 def _stripes(batches: Iterator[pd.DataFrame], pv: np.ndarray):
-    """(blk, start, nrows, float distance stripe) per packed block: the
-    block's rows against all of ``pv`` in one GEMM."""
+    """(block_id, start, block_rows, float distance stripe) per spec row:
+    the block's rows of ``pv`` against all of ``pv`` in one GEMM."""
     sq = (pv * pv).sum(1)
     for pdf in batches:
         for row in pdf.itertuples(index=False):
-            start, nrows = int(row.start), int(row.nrows)
-            ra = np.asarray(row.mat, dtype=np.float64).reshape(nrows, -1)
+            start, nrows = int(row.start), int(row.block_rows)
+            ra = pv[start : start + nrows]
             d2 = sq[start : start + nrows][:, None] - 2.0 * (ra @ pv.T) + sq[None, :]
-            yield int(row.blk), start, nrows, np.sqrt(np.maximum(d2, 0.0))
+            yield int(row.block_id), start, nrows, np.sqrt(np.maximum(d2, 0.0))
 
 
-def _stripe_max(packed: DataFrame, pv: np.ndarray) -> float:
-    """The largest distance in ``packed``'s stripes against the gathered
-    points ``pv`` (one job)."""
+def _stripe_max(specs: DataFrame, pv: np.ndarray) -> float:
+    """The largest distance in the stripes of the placed ``specs`` against
+    the gathered points ``pv`` (one job)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for *_, d in _stripes(batches, pv):
             yield pd.DataFrame({"cmax": [float(d.max()) if d.size else 0.0]})
 
-    return packed.mapInPandas(kernel, "cmax double").agg(F.max("cmax")).collect()[0][0] or 0.0
+    return specs.mapInPandas(kernel, "cmax double").agg(F.max("cmax")).collect()[0][0] or 0.0
 
 
-def _quantized_blocks(packed: DataFrame, pv: np.ndarray, scale: float, n_points: int) -> DataFrame:
-    """``packed``'s stripes against ``pv`` quantized at ``scale`` into
-    DAMDS_BLOCK_SCHEMA rows, one per packed block, in place (narrow)."""
+def _quantized_blocks(specs: DataFrame, pv: np.ndarray, scale: float, n_points: int) -> DataFrame:
+    """The stripes of the placed ``specs`` against ``pv`` quantized at
+    ``scale`` into DAMDS_BLOCK_SCHEMA rows, one per spec, in place (narrow)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for blk, start, nrows, d in _stripes(batches, pv):
             yield _block_row(blk, start, nrows, n_points, _quantize(d, scale))
 
-    return packed.mapInPandas(kernel, DAMDS_BLOCK_SCHEMA)
+    return specs.mapInPandas(kernel, DAMDS_BLOCK_SCHEMA)
 
 
 def damds_blocks_from_points(
@@ -660,25 +638,17 @@ def damds_blocks_from_points(
     (contrast ``damds_blocks``).
 
     The builder's kernels above with the scale set to the global max
-    (damds/DAMDSUtils.java:8-9 semantics, ``quantize_distances``): ONE
-    O(N·d) exchange (the pack), then narrow passes over the persisted pack.
-    Driver memory: the N×d matrix, which rides in the kernels' closures, and
-    one scalar. ``points[id_col]`` must be exactly 0..n_points-1 (row
-    index); other ids fail the build. Returns the persisted blocks, which
-    ``unpersist()`` releases; the pack is released on return and on a raise.
+    (damds/DAMDSUtils.java:8-9 semantics, ``quantize_distances``): one
+    gather of the points, one max pass over the placed spec table (its one
+    exchange), and a lazy quantize pass that ``damds`` runs once into its
+    decoded blocks. Driver memory: the N×d matrix, which rides in the
+    kernels' closures, and one scalar. ``points[id_col]`` must be exactly
+    0..n_points-1 (row index); other ids fail the build.
     """
     pts = points.select(F.col(id_col).alias("point_id"), F.col(vec_col).alias("vec"))
-    packed = _pack_points(pts, 0, n_points, n_blocks).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # the gather is packed's first action: it materializes the persist
-        pv = _gather_points(packed)
-        blocks = _quantized_blocks(packed, pv, _stripe_max(packed, pv), n_points).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        blocks.count()  # materialize before releasing the packed points
-    finally:
-        release(packed)
-    return blocks
+    pv = _gather_points(pts, 0, n_points, n_blocks)
+    specs = _placed_specs(spark, split_rows(n_points, n_blocks))
+    return _quantized_blocks(specs, pv, _stripe_max(specs, pv), n_points)
 
 
 class IncrementalDistanceBlocks:
@@ -691,99 +661,98 @@ class IncrementalDistanceBlocks:
 
     - every EXISTING row block gains b new columns via a narrow
       ``mapInPandas`` over the checkpointed blocks (the block's own row
-      vectors come from the O(N·d) gathered corpus that the append ships
-      in its kernels' closures anyway, so no join and no shuffle ever
-      touches the O(N²) arrays);
+      vectors come from the driver's points, which the append ships in its
+      kernels' closures anyway, so no join and no shuffle ever touches the
+      O(N²) arrays);
     - the new rows become fresh row blocks (ids append after all previous
       rows, so block_id order stays start order — the invariant every
       ordered gather relies on), quantized by the shared kernel.
 
     Quantization-scale changes (cells store d/max·32767): the new cells'
     max is measured first; if it exceeds the current scale every stored
-    cell is stale, so the state REBUILDS from the packed vectors — bitwise
+    cell is stale, so the state REBUILDS over every block's spec — bitwise
     identical to a from-scratch construction because scale = global max
     either way. On real corpora the max stabilizes after the first batches,
     so steady state takes the O(N·b) append path (``last_mode`` exposes
     which path ran; the equality-vs-from-scratch property is pinned in
     tests/test_damds.py).
 
-    State (``packed`` vectors + ``blocks``) lives distributed and is
-    localCheckpoint'ed per batch to truncate lineage; each append releases
-    the previous generation (``session.release``) once the new one is
-    materialized, and its own persisted pack on return and on a raise, so
-    an append whose points fail the build leaves the state and the cache
-    as they were. The owner frees the last generation with
-    ``release(inc.blocks, inc.packed)``. The driver transiently holds the
-    O(N·d) packed matrix, which the kernels carry in their closures — never
-    the O(N²) matrix.
+    State: ``points``, the (N, d) corpus on the driver, each block's
+    (block_id, start, block_rows) spec, and ``blocks``, localCheckpoint'ed
+    per batch to truncate lineage and outlive each anneal. An append
+    gathers only its b new rows; it releases the previous generation of
+    ``blocks`` (``session.release``) once the new one is materialized, and
+    one whose points fail the build leaves the state as it was. The owner
+    frees the last generation with ``release(inc.blocks)``. The trade: the
+    driver holds N·d·8 bytes between appends (never the O(N²) matrix); its
+    peak is the same N·d matrix, which the kernels carry in their closures.
     """
 
     def __init__(self, n_blocks_hint: int = 8):
         self.n_blocks_hint = n_blocks_hint
-        self.packed: DataFrame | None = None
+        self.points: np.ndarray | None = None
+        self.specs: list[tuple[int, int, int]] = []
         self.blocks: DataFrame | None = None
         self.scale = 0.0
         self.n = 0
-        self.n_blk = 0
         self.last_mode: str | None = None
+
+    @property
+    def n_blk(self) -> int:
+        return len(self.specs)
 
     def append(self, ids_df: DataFrame, b: int) -> None:
         """Absorb b new points (point_id = n .. n+b-1) into the state."""
+        spark = ids_df.sparkSession
         n_old, n_new = self.n, self.n + b
         n_sub = max(1, min(self.n_blocks_hint, b // 16))
-        n_blk = self.n_blk + n_sub
-        new_packed = _pack_points(ids_df, n_old, b, n_sub, self.n_blk).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        try:
-            packed = new_packed if self.packed is None else self.packed.unionByName(new_packed)
-            # the gather is new_packed's first action: it materializes the persist
-            pv = _gather_points(packed)
-            # the new rows' stripes contain every new cell (new×all; old×new is
-            # its transpose), so their max decides whether the scale grows
-            scale = max(self.scale, _stripe_max(new_packed, pv))
+        new_pts = _gather_points(ids_df, n_old, b, n_sub, self.n_blk)
+        pv = new_pts if self.points is None else np.vstack([self.points, new_pts])
+        new_specs = [(self.n_blk + i, n_old + s, nr) for i, s, nr in split_rows(b, n_sub)]
+        specs = self.specs + new_specs
+        fresh = _placed_specs(spark, new_specs)
+        # the new rows' stripes contain every new cell (new×all; old×new is
+        # its transpose), so their max decides whether the scale grows
+        scale = max(self.scale, _stripe_max(fresh, pv))
 
-            # scale == 0 (all-identical corpus so far) also rebuilds: the append
-            # quantizer divides by scale, and the degenerate state is all-zero
-            # cells anyway
-            if self.blocks is None or scale > self.scale or scale <= 0.0:
-                blocks = _quantized_blocks(packed, pv, scale, n_new)
-                mode = "rebuild"
-            else:
+        # scale == 0 (all-identical corpus so far) also rebuilds: the append
+        # quantizer divides by scale, and the degenerate state is all-zero
+        # cells anyway
+        if self.blocks is None or scale > self.scale or scale <= 0.0:
+            blocks = _quantized_blocks(_placed_specs(spark, specs), pv, scale, n_new)
+            mode = "rebuild"
+        else:
 
-                def extend(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    newv = pv[n_old:]
-                    new_sq = (newv * newv).sum(1)
-                    sq = (pv * pv).sum(1)  # once per task, not per block row
-                    for pdf in batches:
-                        for row in pdf.itertuples(index=False):
-                            start, nrows = int(row.start), int(row.block_rows)
-                            ra = pv[start : start + nrows]
-                            d2 = (
-                                sq[start : start + nrows][:, None]
-                                - 2.0 * (ra @ newv.T)
-                                + new_sq[None, :]
-                            )
-                            q_app = _quantize(np.sqrt(np.maximum(d2, 0.0)), scale)
-                            old = np.asarray(row.dist, dtype=np.int16).reshape(nrows, n_old)
-                            yield _block_row(
-                                int(row.block_id), start, nrows, n_new, np.hstack([old, q_app])
-                            )
+            def extend(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                newv = pv[n_old:]
+                new_sq = (newv * newv).sum(1)
+                sq = (pv * pv).sum(1)  # once per task, not per block row
+                for pdf in batches:
+                    for row in pdf.itertuples(index=False):
+                        start, nrows = int(row.start), int(row.block_rows)
+                        ra = pv[start : start + nrows]
+                        d2 = (
+                            sq[start : start + nrows][:, None]
+                            - 2.0 * (ra @ newv.T)
+                            + new_sq[None, :]
+                        )
+                        q_app = _quantize(np.sqrt(np.maximum(d2, 0.0)), scale)
+                        old = np.asarray(row.dist, dtype=np.int16).reshape(nrows, n_old)
+                        yield _block_row(
+                            int(row.block_id), start, nrows, n_new, np.hstack([old, q_app])
+                        )
 
-                fresh = _quantized_blocks(new_packed, pv, scale, n_new)
-                blocks = self.blocks.mapInPandas(extend, DAMDS_BLOCK_SCHEMA).unionByName(fresh)
-                mode = "append"
+            fresh_blocks = _quantized_blocks(fresh, pv, scale, n_new)
+            blocks = self.blocks.mapInPandas(extend, DAMDS_BLOCK_SCHEMA).unionByName(fresh_blocks)
+            mode = "append"
 
-            # a union holds the partitions of all its pieces; place_blocks merges
-            # them back to the rule's count without a shuffle
-            blocks_ck = place_blocks(blocks, n_blk, key=None).localCheckpoint(eager=True)
-            packed_ck = place_blocks(packed, n_blk, key=None).localCheckpoint(eager=True)
-        finally:
-            release(new_packed)
-        release(self.blocks, self.packed)  # the previous generation
+        # a union holds the partitions of all its pieces; place_blocks merges
+        # them back to the rule's count without a shuffle
+        blocks_ck = place_blocks(blocks, len(specs), key=None).localCheckpoint(eager=True)
+        release(self.blocks)  # the previous generation
         self.blocks = blocks_ck
-        self.packed = packed_ck
+        self.points = pv
+        self.specs = specs
         self.scale = scale
         self.n = n_new
-        self.n_blk = n_blk
         self.last_mode = mode

@@ -482,19 +482,16 @@ def damds_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     i = np.arange(_SF_N)
     x0 = np.column_stack([i % 16, (i % 3) - 1, (i % 7) - 3]).astype(np.float64)
-    try:
-        res = damds_mod.damds(
-            blocks,
-            n_points=_SF_N,
-            dim=3,
-            max_temp_loops=1,
-            max_stress_loops=1,
-            cg_iters=2,
-            cg_threshold=0.0,
-            x0=x0,
-        )
-    finally:
-        blocks.unpersist()
+    res = damds_mod.damds(
+        blocks,
+        n_points=_SF_N,
+        dim=3,
+        max_temp_loops=1,
+        max_stress_loops=1,
+        cg_iters=2,
+        cg_threshold=0.0,
+        x0=x0,
+    )
     # determinism guard: both engines must take exactly this loop shape
     assert res.temp_loops == 1 and res.stress_iters == 1
     rows = [
@@ -534,13 +531,10 @@ def damds_embed_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     blocks = damds_mod.damds_blocks_from_points(spark, pts_df, n_points=n, n_blocks=8)
-    try:
-        res = damds_mod.damds(
-            blocks, n_points=n, max_temp_loops=2, max_stress_loops=4, cg_iters=8,
-            uniform_weights=True,
-        )
-    finally:
-        blocks.unpersist()
+    res = damds_mod.damds(
+        blocks, n_points=n, max_temp_loops=2, max_stress_loops=4, cg_iters=8,
+        uniform_weights=True,
+    )
     out = [
         (int(i), float(np.round(res.points[i, 0], 5)), float(np.round(res.points[i, 1], 5)),
          float(np.round(res.points[i, 2], 5)))
@@ -622,15 +616,11 @@ def damds_sidefile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     }
                 )
 
-    out = blocks.mapInPandas(
+    return blocks.mapInPandas(
         rollup,
         "block_id long, dist_sum_q long, dist_missing long, "
         "weight_sum_q long, weight_missing long",
     ).orderBy("block_id")
-    # materialize before unpersisting the source blocks is unnecessary: the
-    # rollup is narrow over the persisted scan and re-runnable from files
-    blocks.unpersist()
-    return out
 
 
 # --- DA-MDS kernel families graded exactly (F2/F6/F8/F9/F10/F11, I4) ------
@@ -657,8 +647,8 @@ _CELLS_CTE = f"""
 
 @contextmanager
 def _fixture_blocks(spark: SparkSession, with_weights: bool = True) -> Iterator[RDD]:
-    """The side-file fixture as the kernels' decoded block RDD; both it and
-    the block DataFrame it decodes are released on exit."""
+    """The side-file fixture as the kernels' decoded block RDD, released on
+    exit."""
     dist_path, weight_path = _ensure_sidefile_fixture()
     df = damds_mod.damds_blocks_from_files(
         spark,
@@ -667,11 +657,8 @@ def _fixture_blocks(spark: SparkSession, with_weights: bool = True) -> Iterator[
         weight_path=weight_path if with_weights else None,
         n_blocks=_SF_BLOCKS,
     )
-    try:
-        with damds_mod.decoded_blocks(df) as blocks:
-            yield blocks
-    finally:
-        df.unpersist()
+    with damds_mod.decoded_blocks(df) as blocks:
+        yield blocks
 
 
 def _p_vectors() -> np.ndarray:

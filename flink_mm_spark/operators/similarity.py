@@ -998,39 +998,16 @@ def _onl_wave_dfs(e: DataFrame) -> list[DataFrame]:
 
 def _write_wave_files(waves: list[DataFrame], src: str, start_k: int = 0) -> None:
     """Write each wave as one mtime-ordered parquet file under ``src``
-    (file k gets mtime t0 + 10k, anchored safely in the past), so the
-    file source delivers them one per micro-batch in wave order."""
-    import glob
-    import os
-    import shutil
+    (file k = start_k, start_k + 1, … gets mtime t0 + 10k, anchored safely
+    in the past), so the file source delivers them one per micro-batch in
+    wave order.
 
-    from flink_mm_spark.session import scratch_dir
-
-    os.makedirs(src, exist_ok=True)
-    t0 = int(os.path.getmtime(src)) - 3600
-    for i, df in enumerate(waves):
-        k = start_k + i
-        tmp = scratch_dir("onl_tmp_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        parts = glob.glob(f"{tmp}/part-*.parquet")
-        dst = f"{src}/arrival{k}.parquet"
-        shutil.move(parts[0], dst)
-        os.utime(dst, (t0 + 10 * k, t0 + 10 * k))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _write_wave_files_onepass(
-    spark: SparkSession, waves: list[DataFrame], src: str
-) -> None:
-    """One-job variant of ``_write_wave_files`` for the full-sequence
-    staging path (VERDICT r12 #4: the 6 sequential coalesce(1) jobs were
-    first-call driver-wall, not semantics): union the waves under a
-    ``wave`` column, repartition BY that column (each wave collapses into
-    exactly one task → exactly one file per ``wave=k`` dir), write once
-    with partitionBy, then move each file into place with its staged
-    mtime. Row order inside a wave file is not preserved — irrelevant by
-    construction: the stateful operator sorts corpus rows by id and query
-    results are qid-windowed."""
+    One job: union the waves under a ``wave`` column, repartition BY that
+    column (each wave collapses into exactly one task → exactly one file per
+    ``wave=k`` dir), write once with partitionBy, then move each file into
+    place with its staged mtime. Row order inside a wave file is not
+    preserved — irrelevant by construction: the stateful operator sorts
+    corpus rows by id and query results are qid-windowed."""
     import functools
     import glob
     import os
@@ -1040,11 +1017,11 @@ def _write_wave_files_onepass(
 
     os.makedirs(src, exist_ok=True)
     t0 = int(os.path.getmtime(src)) - 3600
-    tagged = [df.withColumn("wave", F.lit(k)) for k, df in enumerate(waves)]
+    tagged = [df.withColumn("wave", F.lit(k)) for k, df in enumerate(waves, start_k)]
     u = functools.reduce(DataFrame.unionByName, tagged).repartition("wave")
     tmp = scratch_dir("onl_tmp_")
     u.write.partitionBy("wave").mode("overwrite").parquet(tmp)
-    for k in range(len(waves)):
+    for k in range(start_k, start_k + len(waves)):
         parts = glob.glob(f"{tmp}/wave={k}/part-*.parquet")
         assert len(parts) == 1, parts  # repartition("wave") → 1 task per wave
         dst = f"{src}/arrival{k}.parquet"
@@ -1090,7 +1067,7 @@ def _onl_arrival_split(spark: SparkSession, sf_dir: str) -> str:
 
     def write(src: str) -> None:
         waves = _onl_wave_dfs(embeddings64(spark, sf_dir))
-        _write_wave_files_onepass(spark, _merge_waves(waves, [[0, 1, 2], [3, 4, 5]]), src)
+        _write_wave_files(_merge_waves(waves, [[0, 1, 2], [3, 4, 5]]), src)
 
     return staged(sf_dir, "onl_src_", write)
 
@@ -1104,9 +1081,7 @@ def _onl_arrival_split_sequential(spark: SparkSession, sf_dir: str) -> str:
     return staged(
         sf_dir,
         "onls_src_",
-        lambda d: _write_wave_files_onepass(
-            spark, _onl_wave_dfs(embeddings64(spark, sf_dir)), d
-        ),
+        lambda d: _write_wave_files(_onl_wave_dfs(embeddings64(spark, sf_dir)), d),
     )
 
 
@@ -1440,7 +1415,7 @@ def _onl_del_arrival_split(spark: SparkSession, sf_dir: str) -> str:
 
     def write(src: str) -> None:
         waves = _onl_del_wave_dfs(embeddings64(spark, sf_dir))
-        _write_wave_files_onepass(spark, _merge_waves(waves, [[0, 1, 2], [3, 4, 5, 6]]), src)
+        _write_wave_files(_merge_waves(waves, [[0, 1, 2], [3, 4, 5, 6]]), src)
 
     return staged(sf_dir, "onld_src_", write)
 

@@ -247,12 +247,12 @@ class IncrementalMDS:
     The streaming analogue of the reference's outer driver loop (SURVEY I3)
     for the MDS workload: each micro-batch appends its vectors to the
     DISTRIBUTED incremental distance state
-    (``damds.IncrementalDistanceBlocks`` — packed corpus + quantized
-    blocks, both checkpointed DataFrames), and the embedding refines with a
-    short anneal **warm-started from the previous embedding** — new points
-    start random, old points keep their positions, so per-batch work is a
-    refinement, not a re-solve. Driver state is O(N·out_dim): just the
-    embedding.
+    (``damds.IncrementalDistanceBlocks`` — quantized blocks in a
+    checkpointed DataFrame), and the embedding refines with a short anneal
+    **warm-started from the previous embedding** — new points start random,
+    old points keep their positions, so per-batch work is a refinement, not
+    a re-solve. Driver state is O(N·d): the embedding and the state's
+    corpus, never the O(N²) matrix.
 
     Steady-state per-batch distance work is O(N·b) — only the new rows'
     stripes and the b appended columns are computed; the O(N²) cells are
@@ -334,7 +334,7 @@ class IncrementalMDS:
                 return
             if self.inc is None:
                 self.inc = IncrementalDistanceBlocks(n_blocks_hint=self.n_blocks)
-            self.inc.append(ids, b)  # eager: blocks/packed checkpoints materialize
+            self.inc.append(ids, b)  # eager: gathers the new rows, checkpoints the blocks
         finally:
             release(parts)
         self.n += b

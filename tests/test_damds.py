@@ -40,9 +40,7 @@ def problem():
 @pytest.fixture(scope="module")
 def blocks_df(spark, problem):
     q, w, _ = problem
-    df = D.damds_blocks(spark, q, w, n_blocks=5)
-    yield df
-    df.unpersist()
+    return D.damds_blocks(spark, q, w, n_blocks=5)
 
 
 @pytest.fixture(scope="module")
@@ -161,18 +159,15 @@ def test_cg_solves_system(blocks, problem):
 def test_damds_full_deterministic_and_converges(spark, problem):
     q, w, _ = problem
     blocks = D.damds_blocks(spark, q, w, n_blocks=5)
-    try:
-        r1 = D.damds(blocks, N, max_temp_loops=2, max_stress_loops=3, cg_iters=6)
-        r2 = D.damds(blocks, N, max_temp_loops=2, max_stress_loops=3, cg_iters=6)
-        np.testing.assert_array_equal(r1.points, r2.points)  # deterministic
-        # stress at the solution is far below the random-layout stress
-        with D.decoded_blocks(blocks) as rb:
-            stats = D.matrix_stats(rb)
-            rng_stress = D.stress(rb, np.random.RandomState(0).uniform(-0.5, 0.5, (N, DIM)),
-                                  0.0, 1.0 / stats.sum_sq)
-        assert r1.stress < rng_stress * 0.8
-    finally:
-        blocks.unpersist()
+    r1 = D.damds(blocks, N, max_temp_loops=2, max_stress_loops=3, cg_iters=6)
+    r2 = D.damds(blocks, N, max_temp_loops=2, max_stress_loops=3, cg_iters=6)
+    np.testing.assert_array_equal(r1.points, r2.points)  # deterministic
+    # stress at the solution is far below the random-layout stress
+    with D.decoded_blocks(blocks) as rb:
+        stats = D.matrix_stats(rb)
+        rng_stress = D.stress(rb, np.random.RandomState(0).uniform(-0.5, 0.5, (N, DIM)),
+                              0.0, 1.0 / stats.sum_sq)
+    assert r1.stress < rng_stress * 0.8
 
 
 def test_sammon_weight_transform(spark, problem, blocks, blocks_df):
@@ -207,14 +202,11 @@ def test_blocks_from_files_match_driver_blocks(spark, problem, blocks, tmp_path)
     write_matrix_file(dp, q, "int16", "big")
     write_matrix_file(wp, w, "int16", "big")
     fb = D.damds_blocks_from_files(spark, dp, len(q), wp, n_blocks=7)
-    try:
-        with D.decoded_blocks(fb) as fbr:
-            np.testing.assert_allclose(D.v_array(fbr), D.v_array(blocks), rtol=1e-12)
-            s1 = D.stress(fbr, x, 0.05, 1.0)
-        s2 = D.stress(blocks, x, 0.05, 1.0)
-        assert s1 == pytest.approx(s2, rel=1e-12)
-    finally:
-        fb.unpersist()
+    with D.decoded_blocks(fb) as fbr:
+        np.testing.assert_allclose(D.v_array(fbr), D.v_array(blocks), rtol=1e-12)
+        s1 = D.stress(fbr, x, 0.05, 1.0)
+    s2 = D.stress(blocks, x, 0.05, 1.0)
+    assert s1 == pytest.approx(s2, rel=1e-12)
 
 
 def test_blocks_from_points_distributed_construction(spark):
@@ -229,25 +221,22 @@ def test_blocks_from_points_distributed_construction(spark):
     pdf = pd.DataFrame({"point_id": np.arange(n, dtype=np.int64), "vec": list(pts)})
     pts_df = spark.createDataFrame(pdf, "point_id long, vec array<double>")
     fb = D.damds_blocks_from_points(spark, pts_df, n_points=n, n_blocks=5)
-    try:
-        rows = fb.select("block_id", "start", "block_rows", "n_points", "dist").collect()
-        assert sorted(r["block_id"] for r in rows) == [0, 1, 2, 3, 4]
-        got = np.vstack(
-            [
-                np.asarray(r["dist"], dtype=np.int16).reshape(r["block_rows"], n)
-                for r in sorted(rows, key=lambda r: r["block_id"])
-            ]
-        )
-        # numpy mirror with the SAME contraction (GEMM form), then quantize
-        d2 = (pts * pts).sum(1)[:, None] - 2.0 * (pts @ pts.T) + (pts * pts).sum(1)[None, :]
-        dist = np.sqrt(np.maximum(d2, 0.0))
-        want, _ = D.quantize_distances(dist)
-        np.testing.assert_array_equal(got, want)
-        # and the anneal runs end-to-end on these blocks
-        res = D.damds(fb, n, dim=2, max_temp_loops=1, max_stress_loops=1)
-        assert np.isfinite(res.stress)
-    finally:
-        fb.unpersist()
+    rows = fb.select("block_id", "start", "block_rows", "n_points", "dist").collect()
+    assert sorted(r["block_id"] for r in rows) == [0, 1, 2, 3, 4]
+    got = np.vstack(
+        [
+            np.asarray(r["dist"], dtype=np.int16).reshape(r["block_rows"], n)
+            for r in sorted(rows, key=lambda r: r["block_id"])
+        ]
+    )
+    # numpy mirror with the SAME contraction (GEMM form), then quantize
+    d2 = (pts * pts).sum(1)[:, None] - 2.0 * (pts @ pts.T) + (pts * pts).sum(1)[None, :]
+    dist = np.sqrt(np.maximum(d2, 0.0))
+    want, _ = D.quantize_distances(dist)
+    np.testing.assert_array_equal(got, want)
+    # and the anneal runs end-to-end on these blocks
+    res = D.damds(fb, n, dim=2, max_temp_loops=1, max_stress_loops=1)
+    assert np.isfinite(res.stress)
 
 
 @pytest.mark.parametrize("path", ["damds_blocks_from_points", "IncrementalDistanceBlocks.append"])
@@ -286,19 +275,44 @@ def test_blocks_from_points_rejects_ids_that_are_not_row_indices(spark, path):
         assert inc is None or (inc.n, inc.n_blk) == (6, 1)
     finally:
         if inc is not None:
-            release(inc.blocks, inc.packed)
+            release(inc.blocks)
+
+
+@pytest.mark.parametrize(
+    "name", ["damds_blocks", "damds_blocks_from_files", "damds_blocks_from_points"]
+)
+def test_constructors_cache_nothing(spark, tmp_path, name):
+    """A constructor returns a lazy plan: the anneal's decode
+    (``decoded_blocks``) is the one cache of the int16 bytes, so building a
+    table leaves the persisted RDDs and the CacheManager as it found them."""
+    import pandas as pd
+
+    from flink_mm_spark.sources.binary_matrix import write_matrix_file
+
+    n = 12
+    rng = np.random.RandomState(2)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    start = (persisted_rdds(spark), cache.numCachedEntries())
+    if name == "damds_blocks":
+        D.damds_blocks(spark, rng.randint(0, 99, (n, n)), n_blocks=3)
+    elif name == "damds_blocks_from_files":
+        path = str(tmp_path / "d.bin")
+        write_matrix_file(path, rng.randint(0, 99, (n, n)), "int16")
+        D.damds_blocks_from_files(spark, path, n, n_blocks=3)
+    else:
+        pdf = pd.DataFrame({"point_id": np.arange(n), "vec": list(rng.standard_normal((n, 3)))})
+        pts = spark.createDataFrame(pdf, "point_id long, vec array<double>")
+        D.damds_blocks_from_points(spark, pts, n, n_blocks=3)
+    assert (persisted_rdds(spark), cache.numCachedEntries()) == start
 
 
 def test_degenerate_single_point(spark):
     """A 1x1 (or all-identical) distance matrix must return a finite
     embedding, not ZeroDivisionError (IncrementalMDS first micro-batch)."""
     blocks = D.damds_blocks(spark, np.zeros((1, 1), dtype=np.int16), n_blocks=1)
-    try:
-        res = D.damds(blocks, 1, dim=2)
-        assert res.points.shape == (1, 2) and np.isfinite(res.points).all()
-        assert res.stress == 0.0 and res.stress_iters == 0
-    finally:
-        blocks.unpersist()
+    res = D.damds(blocks, 1, dim=2)
+    assert res.points.shape == (1, 2) and np.isfinite(res.points).all()
+    assert res.stress == 0.0 and res.stress_iters == 0
 
 
 def test_config_properties_parity(spark, problem, blocks_df, tmp_path):
@@ -389,10 +403,7 @@ def test_incremental_blocks_bitwise_match_from_scratch(spark):
         "point_id long, vec array<double>",
     )
     ref = D.damds_blocks_from_points(spark, full, n_points=n, n_blocks=4)
-    try:
-        assert np.array_equal(_assemble(inc.blocks, n), _assemble(ref, n))
-    finally:
-        ref.unpersist()
+    assert np.array_equal(_assemble(inc.blocks, n), _assemble(ref, n))
     # a batch that GROWS the max must force the exact rebuild path
     far = np.full((1, 4), 20.0)
     ids = spark.createDataFrame(
@@ -407,10 +418,7 @@ def test_incremental_blocks_bitwise_match_from_scratch(spark):
         "point_id long, vec array<double>",
     )
     ref2 = D.damds_blocks_from_points(spark, full2, n_points=n + 1, n_blocks=4)
-    try:
-        assert np.array_equal(_assemble(inc.blocks, n + 1), _assemble(ref2, n + 1))
-    finally:
-        ref2.unpersist()
+    assert np.array_equal(_assemble(inc.blocks, n + 1), _assemble(ref2, n + 1))
 
 
 def test_incremental_blocks_free_old_generations(spark):
@@ -437,7 +445,7 @@ def test_incremental_blocks_free_old_generations(spark):
         inc.append(ids, e - s)
         live = {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
         assert not (prev_ids & live), "old checkpoint generation still cached"
-        prev_ids = {rdd_id(inc.blocks), rdd_id(inc.packed)}
+        prev_ids = {rdd_id(inc.blocks)}
         assert prev_ids <= live  # the current generation IS materialized
 
 
@@ -453,23 +461,20 @@ def test_v_multiply_uniform_matches_distributed(spark):
     pdf = pd.DataFrame({"point_id": np.arange(n, dtype=np.int64), "vec": list(pts)})
     pts_df = spark.createDataFrame(pdf, "point_id long, vec array<double>")
     fb = D.damds_blocks_from_points(spark, pts_df, n_points=n, n_blocks=3)
-    try:
-        with D.decoded_blocks(fb) as fbr:
-            v = D.v_array(fbr)
-            np.testing.assert_allclose(v, np.full(n, float(n)), rtol=0, atol=0)
-            p = rng.standard_normal((n, 2))
-            got = D.v_multiply_uniform(n, p)
-            want = D.v_multiply(fbr, v, p)
-        np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-12)
-        # the full anneal on the uniform fast path agrees with the
-        # distributed-multiply anneal to float-reordering precision
-        r_fast = D.damds(fb, n, dim=2, max_temp_loops=1, max_stress_loops=2,
-                         uniform_weights=True)
-        r_dist = D.damds(fb, n, dim=2, max_temp_loops=1, max_stress_loops=2)
-        np.testing.assert_allclose(r_fast.stress, r_dist.stress, rtol=1e-8)
-        np.testing.assert_allclose(r_fast.points, r_dist.points, atol=1e-6)
-    finally:
-        fb.unpersist()
+    with D.decoded_blocks(fb) as fbr:
+        v = D.v_array(fbr)
+        np.testing.assert_allclose(v, np.full(n, float(n)), rtol=0, atol=0)
+        p = rng.standard_normal((n, 2))
+        got = D.v_multiply_uniform(n, p)
+        want = D.v_multiply(fbr, v, p)
+    np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-12)
+    # the full anneal on the uniform fast path agrees with the
+    # distributed-multiply anneal to float-reordering precision
+    r_fast = D.damds(fb, n, dim=2, max_temp_loops=1, max_stress_loops=2,
+                     uniform_weights=True)
+    r_dist = D.damds(fb, n, dim=2, max_temp_loops=1, max_stress_loops=2)
+    np.testing.assert_allclose(r_fast.stress, r_dist.stress, rtol=1e-8)
+    np.testing.assert_allclose(r_fast.points, r_dist.points, atol=1e-6)
 
 
 def test_temperature_loop_plans_once(spark):
@@ -487,17 +492,13 @@ def test_temperature_loop_plans_once(spark):
     def run(loops):
         res[loops] = D.damds(fb, n, max_temp_loops=loops, max_stress_loops=1, uniform_weights=True)
 
-    try:
-        jobs2, sql2 = spark_work(spark, lambda: run(2))
-        jobs3, sql3 = spark_work(spark, lambda: run(3))
-    finally:
-        fb.unpersist()
+    jobs2, sql2 = spark_work(spark, lambda: run(2))
+    jobs3, sql3 = spark_work(spark, lambda: run(3))
     assert (res[2].temp_loops, res[3].temp_loops) == (2, 3)
     assert (jobs3 - jobs2, sql3 - sql2) == (2, 0)
 
 
 def test_anneal_blocks_released_on_return_and_raise(spark, blocks_df):
-    blocks_df.count()  # the caller's own cache is not the anneal's to release
     start = persisted_rdds(spark)
     D.damds(blocks_df, N, dim=DIM, max_temp_loops=1, max_stress_loops=1)
     assert persisted_rdds(spark) == start

@@ -167,6 +167,19 @@ def test_block_tables_placed_only_by_place_blocks():
     assert found == [], found
 
 
+def test_damds_holds_its_bytes_once():
+    """The DA-MDS constructors return lazy plans, so the anneal's decode is
+    the one cache of the distance bytes: ``algos/damds.py`` persists
+    nothing, and its one checkpoint is the incremental state, which outlives
+    each anneal."""
+    calls = [
+        node.func.attr
+        for node in ast.walk(ast.parse((PKG / "algos/damds.py").read_text()))
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+    ]
+    assert (calls.count("persist"), calls.count("localCheckpoint")) == (0, 1)
+
+
 def test_keep_latest_releases_before_persist(spark):
     """Identical plans: the second generation must stay cached (releasing
     after persisting would uncache it, since Spark's CacheManager treats a

@@ -105,9 +105,8 @@ def _placed_tables(spark, name, n_blocks, tmp_path):
             inc.append(_points(spark, range(s, e), pts[s:e]), e - s)
             modes.append(inc.last_mode)
             yield inc.blocks, inc.n_blk
-            yield inc.packed, inc.n_blk
         assert modes == ["rebuild", "append"]
-        release(inc.blocks, inc.packed)
+        release(inc.blocks)
 
 
 @pytest.mark.parametrize(

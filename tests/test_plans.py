@@ -102,9 +102,12 @@ def test_embedding_near_dup_lsh_joins_on_bucket(spark):
 
 
 def test_damds_point_construction_single_shuffle(spark):
-    """damds_blocks_from_points must move O(N·d) data exactly once (the pack
-    groupBy); the O(N²) stripes are born in place — no join, no second
+    """damds_blocks_from_points' table has one exchange, the placement of
+    its row-block specs (the points reach the stripes in the kernel's
+    closure); the O(N²) stripes are born in place — no join, no second
     exchange, no N² shuffle (VERDICT r1 'What's wrong' #3 done-criteria)."""
+    import re
+
     import numpy as np
     import pandas as pd
 
@@ -115,17 +118,12 @@ def test_damds_point_construction_single_shuffle(spark):
     pdf = pd.DataFrame({"point_id": np.arange(n, dtype=np.int64), "vec": list(pts)})
     pts_df = spark.createDataFrame(pdf, "point_id long, vec array<double>")
     blocks = D.damds_blocks_from_points(spark, pts_df, n_points=n, n_blocks=4)
-    try:
-        import re
-
-        plan = blocks._jdf.queryExecution().executedPlan().toString()
-        # AQE prints each exchange in both Initial and Final sections —
-        # count distinct exchange nodes by plan_id
-        exchanges = set(re.findall(r"Exchange \w+\(.*?\[plan_id=(\d+)\]", plan))
-        assert len(exchanges) == 1, plan
-        assert "Join" not in plan, plan
-    finally:
-        blocks.unpersist()
+    plan = blocks._jdf.queryExecution().executedPlan().toString()
+    # AQE prints each exchange in both Initial and Final sections —
+    # count distinct exchange nodes by plan_id
+    exchanges = set(re.findall(r"Exchange \w+\(.*?\[plan_id=(\d+)\]", plan))
+    assert len(exchanges) == 1, plan
+    assert "Join" not in plan, plan
 
 
 def test_contamination_broadcasts_eval_side(spark):
