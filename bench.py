@@ -313,56 +313,6 @@ def bench_streaming(spark, sf_dir: str) -> None:
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def _collective_vectors(spark, size: int, n_part: int):
-    import pandas as pd
-
-    def partials(batches):
-        for pdf in batches:
-            yield pd.DataFrame({"v": [np.ones(size).tolist()] * len(pdf)})
-
-    vecs = spark.range(0, n_part, 1, n_part).mapInPandas(partials, "v array<double>").persist()
-    vecs.count()
-    return vecs
-
-
-def bench_reduce(spark, vecs, n_iters: int = 10) -> list[float]:
-    """Reduce latency (collectives/Reduce.java: per-partition partial vector
-    sums → driver combine; size=1000, itr=10 from Program.java:13-26).
-
-    Returns per-round wall times; the suite records median×n_iters. Each
-    round is 1-2 driver-coordinated jobs, so a single scheduler stall under
-    concurrent box load used to multiply into the whole entry (BENCH_r02
-    allreduce: 13.7 s vs the 4-6 s clean band — VERDICT r2 ask #2); the
-    median absorbs outlier rounds while preserving the entry's meaning
-    (estimated 10-round total) and comparability with earlier rounds."""
-    times = []
-    for _ in range(n_iters):
-        t0 = time.perf_counter()
-        rows = vecs.toPandas()
-        np.sum(np.vstack(rows["v"].to_numpy()), axis=0)
-        times.append(time.perf_counter() - t0)
-    return times
-
-
-def bench_allreduce(spark, vecs, n_iters: int = 10, n_part: int = 32) -> list[float]:
-    """AllReduce latency (collectives/AllReduce.java): Reduce plus the
-    broadcast of the combined vector back to EVERY executor each round
-    (a per-partition job reads the broadcast so the fetch actually
-    happens; without it only the driver would touch bc.value).
-    Returns per-round wall times — see bench_reduce on the median report."""
-    sc = spark.sparkContext
-    times = []
-    for _ in range(n_iters):
-        t0 = time.perf_counter()
-        rows = vecs.toPandas()
-        reduced = np.sum(np.vstack(rows["v"].to_numpy()), axis=0)
-        bc = sc.broadcast(reduced)
-        sc.parallelize(range(n_part), n_part).map(lambda i: float(bc.value[0])).count()
-        bc.destroy()
-        times.append(time.perf_counter() - t0)
-    return times
-
-
 @contextlib.contextmanager
 def shuffle_fact_join(spark, sf_dir: str):
     """With broadcast joins off, yield orders and lineitem cut to the fact
@@ -451,16 +401,27 @@ def main() -> None:
 
     bench_bucketed_join(spark, SF_DIR, timings)
 
-    # collectives were per-round medians already (×10 per entry, r2) —
-    # unchanged, they satisfy the median contract as-is
-    vecs = _collective_vectors(spark, size=1000, n_part=32)
+    # Reduce and AllReduce latency (collectives/Reduce.java, AllReduce.java;
+    # size=1000, itr=10 from Program.java:13-26) of the engine's own
+    # primitives over one instance RDD. Each round is 1-2 driver-coordinated
+    # jobs, so the entries record median×10 of per-round walls: one
+    # scheduler stall under box load would otherwise multiply into the
+    # whole entry (VERDICT r2 ask #2), and the median keeps the entry's
+    # meaning (estimated 10-round total).
+    from flink_mm_spark.operators.collectives import allreduce, instances, reduce_vector
 
-    bench_allreduce(spark, vecs, n_iters=2)  # warm both collective paths
-    timings["collectives_reduce_i10"] = round(statistics.median(bench_reduce(spark, vecs)) * 10, 3)
-    timings["collectives_allreduce_i10"] = round(
-        statistics.median(bench_allreduce(spark, vecs)) * 10, 3
-    )
-    vecs.unpersist()
+    with instances(spark) as inst:
+        allreduce(inst)  # warms both: an AllReduce round starts with a Reduce
+        for key, fn in (
+            ("collectives_reduce_i10", reduce_vector),
+            ("collectives_allreduce_i10", allreduce),
+        ):
+            rounds = []
+            for _ in range(10):
+                t0 = time.perf_counter()
+                fn(inst)
+                rounds.append(time.perf_counter() - t0)
+            timings[key] = round(statistics.median(rounds) * 10, 3)
 
     total = round(sum(timings.values()), 2)
     m = __import__("re").search(r"sf([0-9.]+)/?$", SF_DIR)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_mm_spark.linalg.block_matrix import array_blocks, map_blocks
+from flink_mm_spark.sources.tables import parallelize_scan
 
 # Assignment distances are computed in float32, chunked so the (chunk, k)
 # distance matrix stays cache-resident: the argmin pass is memory-bandwidth
@@ -83,16 +84,7 @@ def _point_blocks(points: DataFrame, features_col: str, d: int) -> AbstractConte
     cols = points.select(
         *[F.col(features_col)[i].cast("double").alias(f"f{i}") for i in range(d)]
     )
-    # Parallelism floor: a handful of fat parquet splits would serialize the
-    # per-pass kernel (3 partitions on a 32-core box = 10% utilization).
-    # One partition per core keeps the compute-bound regime (large k·d) at
-    # full utilization; the overhead-bound small-k case loses only a few
-    # percent vs fewer partitions. On a real cluster the input partitioning
-    # already exceeds this and is kept.
-    floor = max(1, points.sparkSession.sparkContext.defaultParallelism)
-    if cols.rdd.getNumPartitions() < floor:
-        cols = cols.repartition(floor)
-    return array_blocks(cols, encode)
+    return array_blocks(parallelize_scan(cols), encode)
 
 
 def _partials(m: np.ndarray, cents: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

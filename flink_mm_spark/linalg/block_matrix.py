@@ -19,12 +19,13 @@ every block table is placed by one rule, ``place_blocks``: n blocks sit in
 min(n, defaultParallelism) partitions as contiguous block_id ranges, never
 in ``spark.sql.shuffle.partitions`` of them.
 
-Iterative drivers (k-means, the DA-MDS anneal) plan their step once, the way
-the reference's bulk iterations do: ``array_blocks`` turns a DataFrame into a
-loop-lifetime RDD of decoded numpy blocks in one Arrow pass, and every pass
-is one ``map_blocks`` job over it, with the per-pass driver state (centroids,
-X, p) in the kernel's closure. No pass builds a DataFrame plan or an Arrow
-gather.
+Iterative drivers (k-means, the DA-MDS anneal, the unigram hard EM) and the
+Reduce/AllReduce collectives plan their step once, the way the reference's
+bulk iterations do: ``array_blocks`` turns a DataFrame into a loop-lifetime
+RDD of decoded numpy blocks in one Arrow pass, and every pass is one
+``map_blocks`` job over it, with the per-pass driver state (centroids, X, p,
+the piece table, the reduced vector) in the kernel's closure or shipped with
+``ship``. No pass builds a DataFrame plan or an Arrow gather.
 """
 
 from __future__ import annotations

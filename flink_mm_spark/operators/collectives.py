@@ -1,55 +1,67 @@
-"""Collective communication patterns as DataFrame plans (SURVEY A7).
+"""Collective communication patterns on the loop runtime (SURVEY A7).
 
 The reference ships Reduce and AllReduce micro-benchmarks
 (collectives/Reduce.java:47-66, collectives/AllReduce.java:43-79: every
 parallel instance contributes a size-1000 vector of ones; Reduce combines
-them; AllReduce redistributes the combined vector to every instance). On
-Spark these are not custom operators at all:
+them; AllReduce redistributes the combined vector to every instance). Here
+they run on the runtime every driver loop uses (``linalg.block_matrix``):
+the ``N_PART`` logical instances are one loop-lifetime RDD of
+(part_id, vector) records (``instances``), and
 
-- Reduce   = map-side partials + a hash-shuffle combine (posexplode +
-  groupBy(pos) — Catalyst plans partial/final HashAggregate, i.e. the
-  combine tree the reference hand-codes).
-- AllReduce = Reduce followed by a broadcast join back to every partition
-  (BroadcastExchange IS the all-to-all redistribution).
+- Reduce    = a tree reduce over the instance RDD: one ``map_blocks`` job
+  whose ``reduce=np.add`` combines the vectors in a ``treeReduce``, the
+  combine tree the reference hand-codes.
+- AllReduce = that reduce plus the shipped vector: one more ``map_blocks``
+  pass takes the reduced vector as state (``ship``, the analogue of the
+  reference's ``withBroadcastSet``), and every instance proves receipt by
+  its checksum.
 
-``bench.py`` times the latency variants; these registered queries pin the
+``bench.py`` times these same primitives; the registered queries pin the
 *semantics* with exact oracles — ones-vectors make the combined values
-analytically known (total per element = N_PART; per-partition checksum =
+analytically known (total per element = N_PART; per-instance checksum =
 VEC_SIZE · N_PART).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from collections.abc import Iterator
+from contextlib import contextmanager
 
+import numpy as np
+from pyspark import RDD
+from pyspark.sql import DataFrame, SparkSession
+
+from flink_mm_spark.linalg.block_matrix import array_blocks, map_blocks, place_blocks
 from flink_mm_spark.registry import register
 
 VEC_SIZE = 1000  # Program.java:13-26 (size=1000, itr defaults elsewhere)
 N_PART = 32
 
 
-def _partial_vectors(spark: SparkSession) -> DataFrame:
-    """One ones-vector per parallel instance (the reference's data source)."""
+@contextmanager
+def instances(spark: SparkSession) -> Iterator[RDD]:
+    """The N_PART parallel instances as a loop-lifetime RDD, released on
+    exit: one (part_id, ones-vector) record each (the reference's data
+    source), placed in min(N_PART, defaultParallelism) partitions."""
 
-    def partials(batches):
-        for pdf in batches:
-            yield pd.DataFrame({"part_id": pdf["id"], "v": [np.ones(VEC_SIZE).tolist()] * len(pdf)})
+    def encode(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield i, np.ones(VEC_SIZE)
 
-    return spark.range(0, N_PART, 1, N_PART).mapInPandas(partials, "part_id long, v array<double>")
+    with array_blocks(place_blocks(spark.range(N_PART), N_PART, key="id"), encode) as inst:
+        yield inst
 
 
-def reduced_vector(spark: SparkSession) -> DataFrame:
-    """(pos, total): element-wise sum across all partial vectors."""
-    return (
-        _partial_vectors(spark)
-        .select(F.posexplode("v").alias("pos", "x"))
-        .groupBy("pos")
-        .agg(F.round(F.sum("x"), 6).alias("total"))
-        .select(F.col("pos").cast("int").alias("pos"), "total")
-    )
+def reduce_vector(inst: RDD) -> np.ndarray:
+    """Reduce: the element-wise sum of every instance's vector, one job."""
+    return map_blocks(inst, lambda rec: rec[1], reduce=np.add)
+
+
+def allreduce(inst: RDD) -> list[tuple[int, float]]:
+    """AllReduce: the reduced vector shipped back to every instance, which
+    returns (part_id, sum of the vector it received); two jobs."""
+    return map_blocks(inst, lambda rec, v: (rec[0], float(v.sum())), reduce_vector(inst))
 
 
 @register(
@@ -61,11 +73,12 @@ def reduced_vector(spark: SparkSession) -> DataFrame:
     """,
 )
 def collectives_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vector Reduce: partial per-instance vectors combined element-wise
-    (collectives/Reduce.java:47-66). Partial aggregation is Catalyst's:
-    map-side HashAggregate sums each instance's contribution before the
-    one shuffle on `pos`."""
-    return reduced_vector(spark).orderBy("pos")
+    """Vector Reduce: per-instance vectors combined element-wise
+    (collectives/Reduce.java:47-66)."""
+    with instances(spark) as inst:
+        total = reduce_vector(inst)
+    rows = [(pos, round(float(x), 6)) for pos, x in enumerate(total)]
+    return spark.createDataFrame(rows, "pos INT, total DOUBLE").orderBy("pos")
 
 
 @register(
@@ -80,13 +93,8 @@ def collectives_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def collectives_allreduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector AllReduce: the reduced vector redistributes to every parallel
     instance, which proves receipt via its checksum
-    (collectives/AllReduce.java:43-79). The redistribution is a broadcast
-    join — BroadcastExchange ships the combined vector to all partitions."""
-    reduced = reduced_vector(spark)
-    parts = spark.range(0, N_PART, 1, N_PART).select(F.col("id").alias("part_id"))
-    return (
-        parts.join(F.broadcast(reduced))
-        .groupBy("part_id")
-        .agg(F.round(F.sum("total"), 6).alias("checksum"))
-        .orderBy("part_id")
-    )
+    (collectives/AllReduce.java:43-79)."""
+    with instances(spark) as inst:
+        sums = allreduce(inst)
+    rows = [(i, round(s, 6)) for i, s in sums]
+    return spark.createDataFrame(rows, "part_id BIGINT, checksum DOUBLE").orderBy("part_id")

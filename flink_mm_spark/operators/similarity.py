@@ -544,27 +544,19 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = _pq_codebook(e)
     q = cb[0]  # query = vec_id 0 (always a codebook row by construction)
 
-    def sqdist_int(x: np.ndarray, s: int, c: int) -> np.ndarray:
-        return _pq_sqdist_int(cb, x, s, c)
-
     lut = _pq_lut(cb, q)  # driver-side, tiny
 
     def encode(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.vstack(pdf["emb"].to_numpy()).astype(np.float64)
-            codes = np.empty((len(x), PQ_S), dtype=np.int64)
-            est = np.zeros(len(x), dtype=np.int64)
-            for s in range(PQ_S):
-                d = np.stack([sqdist_int(x, s, c) for c in range(PQ_NCB)], axis=1)
-                codes[:, s] = np.argmin(d, axis=1)  # first min = smallest c
-                est += lut[s, codes[:, s]]
+            codes = _pq_encode_block(cb, pdf)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
                     "pq_code": ["_".join(map(str, row)) for row in codes],
-                    "est_micro": est,
+                    # int64 LUT: the sum is exact in any order
+                    "est_micro": lut[np.arange(PQ_S), codes].sum(1),
                 }
             )
 
@@ -584,8 +576,8 @@ def _pq_encode_block(cb: np.ndarray, pdf: pd.DataFrame) -> np.ndarray:
     """(n, PQ_S) int64 code matrix for one Arrow batch of (vec_id, emb)
     rows: per subspace, the argmin-distance codebook row (first min =
     smallest c, matching the oracle's ROW_NUMBER(ORDER BY d_int, c)).
-    ONE kernel behind the streamed retrieval scan and the streamed
-    index-build encoder."""
+    ONE kernel behind ``pq_adc_topk``, the streamed retrieval scan and the
+    streamed index-build encoder."""
     x = np.vstack(pdf["emb"].to_numpy()).astype(np.float64)
     cds = np.empty((len(x), PQ_S), dtype=np.int64)
     for s in range(PQ_S):

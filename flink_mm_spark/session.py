@@ -9,6 +9,8 @@ the same code runs unchanged on a multi-executor cluster:
 - Arrow on for all pandas-UDF exchange (the linalg kernels are
   Arrow-batched; row-at-a-time Python UDFs are never used).
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- Driver memory sized to the machine (``default_driver_memory``) unless
+  ``SPARK_GRAFT_DRIVER_MEM`` sets it.
 - Stream checkpoints (WAL, offset and commit logs, state-store deltas and
   snapshots) written through Spark's ``FileSystemBasedCheckpointFileManager``
   instead of the default FileContext-based manager. The default renames
@@ -131,6 +133,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """A third of this machine's memory in whole GiB, 1g to 16g: the JVM
+    heap is not pressed to collect below its cap, so it grows toward it,
+    and the cap must leave room for the Python workers and the OS beside
+    it (16g on the 128 GiB harness; 5g on a 15.7 GiB box)."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, total // (3 << 30)))}g"
+
+
 def get_spark(
     app_name: str = "flink-mm-spark",
     shuffle_partitions: int | None = None,
@@ -149,7 +160,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # PySpark's own worker daemon minus its per-task zip-archive
         # re-read (~200 ms a Python task on CPython < 3.12; pydaemon.py)

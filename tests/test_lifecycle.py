@@ -56,13 +56,20 @@ def test_streams_and_caches_only_through_the_helpers():
     assert caches == [], caches
 
 
+def _package_bench_and_scripts():
+    yield from _modules()
+    for path in [ROOT / "bench.py", *sorted((ROOT / "scripts").rglob("*.py"))]:
+        yield path.relative_to(ROOT).as_posix(), path.read_text()
+
+
 def test_one_explicit_broadcast_and_one_release():
     """Kernel state ships one way: a SQL kernel's in its closure, an RDD
     pass's through ``block_matrix.ship``, the only SparkContext broadcast
-    in the package (``F.broadcast`` is a join hint). Frames are freed one
-    way, ``session.release``; the checkpoint-only helper it replaced is gone."""
+    in the package, bench.py and scripts/ (``F.broadcast`` is a join hint).
+    Frames are freed one way, ``session.release``; the checkpoint-only
+    helper it replaced is gone."""
     found = []
-    for rel, src in _modules():
+    for rel, src in _package_bench_and_scripts():
         tree = ast.parse(src)
         allowed = {
             id(node)
