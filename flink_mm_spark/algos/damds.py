@@ -202,12 +202,12 @@ def _smacof_block(
     d: np.ndarray,
     wblk: np.ndarray | None,
     xv: np.ndarray,
-    diff: float,
     wt: WeightTransform | None,
-    want_stress: bool,
-    want_bz: bool,
+    stress_diff: float | None,
+    bz_diff: float | None,
 ) -> tuple[float | None, np.ndarray | None]:
-    """One block's stress partial and/or its (block_rows, dim) slice of B(Z)·Z,
+    """One block's stress partial at ``stress_diff`` and/or its
+    (block_rows, dim) slice of B(Z)·Z at ``bz_diff`` (None skips either),
     both from the same (block_rows × N) distance pass."""
     dq = d.astype(np.float64) * INV_SHORT_MAX
     w = _weights_of(d, wblk, wt)
@@ -219,24 +219,29 @@ def _smacof_block(
         )
     )
     sp = bz = None
-    if want_stress:  # Stress.java:45-93 semantics
-        heated = np.where(dq >= diff, dq - diff, 0.0)
+    if stress_diff is not None:  # Stress.java:45-93 semantics
+        heated = np.where(dq >= stress_diff, dq - stress_diff, 0.0)
         tmp = heated - dist_x
         sp = float((w * tmp * tmp * (d >= 0)).sum())
-    if want_bz:  # BC.java:86-134 semantics
-        ok = (dist_x >= 1e-10) & (dq > diff) & (d >= 0)
+    if bz_diff is not None:  # BC.java:86-134 semantics
+        ok = (dist_x >= 1e-10) & (dq > bz_diff) & (d >= 0)
         with np.errstate(divide="ignore", invalid="ignore"):
-            b = np.where(ok, -w * (dq - diff) / np.where(ok, dist_x, 1.0), 0.0)
+            b = np.where(ok, -w * (dq - bz_diff) / np.where(ok, dist_x, 1.0), 0.0)
         b = np.where(_diag_mask(start, d), 0.0, b)
         diag = -b.sum(axis=1)
         bz = b @ xv + diag[:, None] * xb
     return sp, bz
 
 
-def _smacof(blocks: RDD, x: np.ndarray, t_cur: float, wt, want_stress: bool, want_bz: bool) -> list:
-    dim = x.shape[1]
-    diff = float(np.sqrt(2.0 * dim) * t_cur) if t_cur > 1e-10 else 0.0
-    kernel = partial(_smacof_block, diff=diff, wt=wt, want_stress=want_stress, want_bz=want_bz)
+def _smacof(blocks: RDD, x: np.ndarray, wt, t_stress: float | None, t_bz: float | None) -> list:
+    """Per-block (stress partial at ``t_stress``, B(Z)·Z slice at ``t_bz``)
+    in one job; diff = √(2·dim)·t when t > 1e-10, else 0."""
+    sqrt2d = np.sqrt(2.0 * x.shape[1])
+
+    def diff(t):
+        return None if t is None else float(sqrt2d * t) if t > 1e-10 else 0.0
+
+    kernel = partial(_smacof_block, wt=wt, stress_diff=diff(t_stress), bz_diff=diff(t_bz))
     return _by_block(blocks, kernel, np.asarray(x, dtype=np.float64))
 
 
@@ -246,24 +251,33 @@ def stress(blocks: RDD, x: np.ndarray, t_cur: float, inv_sum_dsq: float, wt=None
     tmpD = (δ ≥ diff ? δ − diff : 0) − d_ij(X); σ = Σ w·tmpD² × invΣδ²;
     diff = √(2·dim)·tCur when tCur > 1e-10.
     """
-    return float(sum(sp for sp, _ in _smacof(blocks, x, t_cur, wt, True, False))) * inv_sum_dsq
+    return float(sum(sp for sp, _ in _smacof(blocks, x, wt, t_cur, None))) * inv_sum_dsq
 
 
 def stress_bofz(
-    blocks: RDD, x: np.ndarray, t_cur: float, inv_sum_dsq: float, wt=None
+    blocks: RDD,
+    x: np.ndarray,
+    t_cur: float,
+    inv_sum_dsq: float,
+    wt=None,
+    t_bz: float | None = None,
 ) -> tuple[float, np.ndarray]:
-    """Fused σ(X) + B(Z)·Z in ONE distributed job (one barrier, one pass).
+    """Fused σ(X) at ``t_cur`` + B(Z)·Z at ``t_bz`` (default ``t_cur``) in
+    ONE distributed job (one barrier, one pass).
 
     The SMACOF loop evaluates stress(X_i) at the end of iteration i and
-    BofZ(X_i) at the start of iteration i+1 — same X, same t, same blocks,
-    and both kernels are dominated by the identical (block_rows × N)
-    distance computation. Fusing halves that work and removes one
-    synchronization barrier per iteration (at 1000 executors, barriers are
-    the anneal's critical path). Results are bitwise equal to running
-    ``stress`` then ``bofz_bc``: all three run ``_smacof_block`` and sum in
+    BofZ(X_i) at the start of iteration i+1 — same X, same blocks, and both
+    kernels are dominated by the identical (block_rows × N) distance
+    computation, which does not depend on t. Fusing halves that work and
+    removes one synchronization barrier per iteration (at 1000 executors,
+    barriers are the anneal's critical path); the anneal passes the next
+    temperature as ``t_bz`` when iteration i+1 starts a new temperature
+    loop. Results are bitwise equal to running ``stress`` at ``t_cur`` then
+    ``bofz_bc`` at ``t_bz``: all three run ``_smacof_block`` and sum in
     block_id order, so the numpy test oracles are unchanged.
     """
-    parts = _smacof(blocks, x, t_cur, wt, True, True)
+    t_bz = t_cur if t_bz is None else t_bz
+    parts = _smacof(blocks, x, wt, t_cur, t_bz)
     return float(sum(sp for sp, _ in parts)) * inv_sum_dsq, np.vstack([bz for _, bz in parts])
 
 
@@ -284,7 +298,7 @@ def bofz_bc(blocks: RDD, x: np.ndarray, t_cur: float, wt=None) -> np.ndarray:
     diff < δ_ij, else 0; diagonal B_ii = −Σ_{j≠i} B_ij. Each block emits
     its (block_rows, dim) slice of B·Z; gathered ordered by block.
     """
-    return np.vstack([bz for _, bz in _smacof(blocks, x, t_cur, wt, False, True)])
+    return np.vstack([bz for _, bz in _smacof(blocks, x, wt, None, t_cur)])
 
 
 def _vp_block(start: int, d: np.ndarray, wblk, pv: np.ndarray, vv: np.ndarray, wt) -> np.ndarray:
@@ -402,6 +416,14 @@ def damds(
     (damds/DAMDS.java:121-152, 234-238). Inner loop iterates SMACOF updates
     (BC then CG) until relative stress change < threshold.
 
+    Each iteration is one fused pass (``stress_bofz``): its stress plus
+    the next iteration's B(Z)·Z from one distance computation. When an
+    iteration exhausts ``max_stress_loops`` in a temperature loop that is
+    not the last, that B(Z)·Z is taken at the next temperature, so each
+    further temperature loop of k iterations costs k passes, not k + 1; a
+    loop that breaks early on convergence starts the next one with a fresh
+    ``bofz_bc``. Values are bitwise those of the unfused schedule.
+
     ``blocks`` is decoded once into the anneal's RDD (``decoded_blocks``),
     the one cache of the int16 bytes: the constructors return lazy plans.
     ``matrix_stats`` is the pass that materializes the RDD; it and any
@@ -449,29 +471,39 @@ def damds(
         temp_loops = 0
         # Fused kernel: the initial stress evaluation shares its distance pass
         # with the first iteration's BofZ (same X, same t); within a temp loop
-        # each end-of-iteration stress is fused with the NEXT iteration's BofZ.
-        # One barrier per SMACOF iteration instead of two, and the dominant
+        # each end-of-iteration stress is fused with the NEXT iteration's BofZ,
+        # and the iteration that exhausts max_stress_loops in a temp loop that
+        # is not the last fuses the NEXT temperature's BofZ (same X, t_next),
+        # so a new temperature starts without a BofZ pass of its own. One
+        # barrier per SMACOF iteration instead of two, and the dominant
         # O(rows·N) distance computation runs once instead of twice — float
         # semantics identical to the unfused kernels (see stress_bofz).
+        # ``bc_t`` is the temperature ``pending_bc`` holds: after an early
+        # break on convergence it is the old t, and the next loop computes a
+        # fresh BofZ.
         sig, pending_bc = stress_bofz(rb, x, t_cur, inv_sum_dsq, wt)
+        bc_t = t_cur
         while True:
-            for _ in range(max_stress_loops):
-                bc = pending_bc if pending_bc is not None else bofz_bc(rb, x, t_cur, wt)
-                pending_bc = None
+            last = t_cur == 0.0 or temp_loops + 1 >= max_temp_loops
+            t_next = t_cur
+            if not last:  # cooled by α, floored to 0 below tMin
+                t_next = t_cur * alpha
+                if t_next < t_min:
+                    t_next = 0.0
+            for i in range(max_stress_loops):
+                bc = pending_bc if bc_t == t_cur else bofz_bc(rb, x, t_cur, wt)
                 x, _ = cg_solve(rb, v_h, bc, x, cg_iters, cg_threshold, wt, uniform_n=uniform_n)
-                new_sig, pending_bc = stress_bofz(rb, x, t_cur, inv_sum_dsq, wt)
+                bc_t = t_next if i + 1 == max_stress_loops else t_cur
+                new_sig, pending_bc = stress_bofz(rb, x, t_cur, inv_sum_dsq, wt, bc_t)
                 total_stress_iters += 1
                 if sig > 0 and abs(sig - new_sig) / max(new_sig, 1e-30) < stress_threshold:
                     sig = new_sig
                     break
                 sig = new_sig
             temp_loops += 1
-            if t_cur == 0.0 or temp_loops >= max_temp_loops:
+            if last:
                 break
-            t_cur *= alpha
-            if t_cur < t_min:
-                t_cur = 0.0
-            pending_bc = None  # t changed → the speculative BofZ is stale
+            t_cur = t_next
     return DamdsResult(points=x, stress=sig, temp_loops=temp_loops, stress_iters=total_stress_iters)
 
 
@@ -605,13 +637,14 @@ def _stripes(batches: Iterator[pd.DataFrame], pv: np.ndarray):
 
 def _stripe_max(specs: DataFrame, pv: np.ndarray) -> float:
     """The largest distance in the stripes of the placed ``specs`` against
-    the gathered points ``pv`` (one job)."""
+    the gathered points ``pv``: the per-block maxima are collected and
+    reduced on the driver (no aggregate exchange for a handful of rows)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for *_, d in _stripes(batches, pv):
             yield pd.DataFrame({"cmax": [float(d.max()) if d.size else 0.0]})
 
-    return specs.mapInPandas(kernel, "cmax double").agg(F.max("cmax")).collect()[0][0] or 0.0
+    return max((r[0] for r in specs.mapInPandas(kernel, "cmax double").collect()), default=0.0)
 
 
 def _quantized_blocks(specs: DataFrame, pv: np.ndarray, scale: float, n_points: int) -> DataFrame:

@@ -31,6 +31,7 @@ the piece table, the reduced vector) in the kernel's closure or shipped with
 from __future__ import annotations
 
 import pickle
+import weakref
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
@@ -186,14 +187,24 @@ class _Inline:
         pass
 
 
+# SparkContext -> its command-broadcast threshold (a static conf, so one
+# Py4J round trip per context instead of one per shipped array)
+_BROADCAST_THRESHOLD_CACHE: weakref.WeakKeyDictionary[SparkContext, int] = (
+    weakref.WeakKeyDictionary()
+)
+
+
 def ship(sc: SparkContext, arr: np.ndarray):
     """Driver state for block kernels, read as ``.value``, freed by ``.destroy()``.
 
     Below PySpark's own command-broadcast threshold
-    (``spark.broadcast.UDFCompressionThreshold``, 1 MiB) the array rides in
-    the kernel's closure; above it, one explicit broadcast.
+    (``spark.broadcast.UDFCompressionThreshold``, 1 MiB, read once per
+    SparkContext) the array rides in the kernel's closure; above it, one
+    explicit broadcast.
     """
-    if arr.nbytes < sc._jvm.PythonUtils.getBroadcastThreshold(sc._jsc):
+    if sc not in _BROADCAST_THRESHOLD_CACHE:
+        _BROADCAST_THRESHOLD_CACHE[sc] = sc._jvm.PythonUtils.getBroadcastThreshold(sc._jsc)
+    if arr.nbytes < _BROADCAST_THRESHOLD_CACHE[sc]:
         return _Inline(arr)
     return sc.broadcast(arr)
 

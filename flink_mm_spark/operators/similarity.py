@@ -443,10 +443,11 @@ def _pq_codebook(e: DataFrame) -> np.ndarray:
     """The deterministic (PQ_NCB, 64) float64 codebook: the sub-vectors of
     vec_id 0..PQ_NCB-1 (production trains them with the bounded-sample
     k-means ``ivf_topk`` uses). Shared by the batch ADC entry and the
-    streamed retrieval tier so their codes/LUTs come from one definition."""
-    cb_rows = (
-        e.filter(F.col("vec_id") < PQ_NCB).select("vec_id", "emb").orderBy("vec_id").collect()
-    )
+    streamed retrieval tier so their codes/LUTs come from one definition.
+    The 16 rows are sorted on the driver: one scan job, where an AQE
+    ``orderBy`` costs three."""
+    cb_rows = e.filter(F.col("vec_id") < PQ_NCB).select("vec_id", "emb").collect()
+    cb_rows.sort(key=lambda r: r["vec_id"])
     return np.array([r["emb"] for r in cb_rows], dtype=np.float64)
 
 

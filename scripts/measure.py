@@ -20,11 +20,12 @@ starts, then runs bench.py's warm-up.
   ``<out_dir>/<name>_<tag>.txt``.
 - ``shuffle``: the bytes each ``AUDITED`` entry (default: all of them) and
   the broadcast-free fact-join baseline write to shuffles at
-  $SPARK_GRAFT_SF_DIR. Each runs once, forced with the noop sink, under its
-  own job group; the bytes come from Spark's event log, summed per group by
-  ``perfbench.eventlog.attribute``. Bytes are a function of the plan, not
-  of machine load. Prints one JSON line per row and a markdown table on
-  stderr.
+  $SPARK_GRAFT_SF_DIR, and the Spark jobs and tasks each runs. Each runs
+  once, forced with the noop sink, under its own job group; the counts come
+  from Spark's event log, summed per group by
+  ``perfbench.eventlog.attribute``. Bytes and jobs are a function of the
+  plan, not of machine load. Prints one JSON line per row and a markdown
+  table on stderr.
 """
 
 from __future__ import annotations
@@ -42,7 +43,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench
 from flink_mm_spark import registry
 from flink_mm_spark.session import get_spark
-from perfbench.eventlog import Span, attribute, read_events
+from perfbench.eventlog import Span, Usage, attribute, read_events
 
 # bench.py's iterative workloads, timed by the names bench.py gives them
 BENCH_LOOPS = {
@@ -235,12 +236,17 @@ def shuffle_audit(sf_dir, names):
             usage = attribute(read_events(f), spans)
     rows = []
     for s in spans:
-        written = usage[s.sid].shuffle_write_b if s.sid in usage else 0
-        rows.append({"query": s.name, "shuffle_mb": round(written / 1e6, 2)})
+        u = usage.get(s.sid, Usage())
+        rows.append({
+            "query": s.name,
+            "shuffle_mb": round(u.shuffle_write_b / 1e6, 2),
+            "jobs": u.jobs,
+            "tasks": u.tasks,
+        })
         print(json.dumps(rows[-1]), flush=True)
-    print("\n| query | shuffle MB |\n|---|---|", file=sys.stderr)
+    print("\n| query | shuffle MB | jobs | tasks |\n|---|---|---|---|", file=sys.stderr)
     for r in rows:
-        print(f"| {r['query']} | {r['shuffle_mb']} |", file=sys.stderr)
+        print(f"| {r['query']} | {r['shuffle_mb']} | {r['jobs']} | {r['tasks']} |", file=sys.stderr)
     return rows
 
 

@@ -127,6 +127,19 @@ def test_stress_bofz_fusion_bitwise_equals_unfused(blocks, problem, t_cur):
     assert sig == D.stress(blocks, x, t_cur, 1.0 / sumsq)
 
 
+@pytest.mark.parametrize("t_next", [0.0475, 0.0])
+def test_next_temperature_fusion_bitwise_equals_unfused(blocks, problem, t_next):
+    """The pass that ends a temperature loop (stress at t_cur, B(Z)·Z at the
+    next temperature, one distance computation) equals ``stress_bofz`` at
+    t_cur followed by ``bofz_bc`` at t_next."""
+    q, _, x = problem
+    inv = 1.0 / (_dq(q)[q >= 0] ** 2).sum()
+    sig, bc = D.stress_bofz(blocks, x, 0.05, inv, t_bz=t_next)
+    want_sig, _ = D.stress_bofz(blocks, x, 0.05, inv)
+    assert np.array_equal(sig, want_sig)
+    assert np.array_equal(bc, D.bofz_bc(blocks, x, t_next))
+
+
 def _numpy_v(q, w):
     wm = _wm(q, w)
     np.fill_diagonal(wm, 0.0)
@@ -478,9 +491,9 @@ def test_v_multiply_uniform_matches_distributed(spark):
 
 
 def test_temperature_loop_plans_once(spark):
-    """One more temperature loop of the uniform anneal is one BofZ pass and
-    one fused stress pass over the loop-lifetime blocks: two jobs, no SQL
-    execution."""
+    """One more temperature loop of the uniform anneal is one fused pass
+    over the loop-lifetime blocks (its B(Z)·Z came with the previous loop's
+    last stress pass): one job, no SQL execution."""
     import pandas as pd
 
     rng = np.random.RandomState(4)
@@ -495,7 +508,58 @@ def test_temperature_loop_plans_once(spark):
     jobs2, sql2 = spark_work(spark, lambda: run(2))
     jobs3, sql3 = spark_work(spark, lambda: run(3))
     assert (res[2].temp_loops, res[3].temp_loops) == (2, 3)
-    assert (jobs3 - jobs2, sql3 - sql2) == (2, 0)
+    assert (jobs3 - jobs2, sql3 - sql2) == (1, 0)
+
+
+def _unfused_anneal(blocks_df, n, dim, max_temp_loops, max_stress_loops, threshold, x0):
+    """The uniform anneal with a fresh ``bofz_bc`` at every new temperature:
+    the schedule ``damds`` ran before the next-temperature fusion."""
+    with D.decoded_blocks(blocks_df) as rb:
+        st = D.matrix_stats(rb)
+        inv, sqrt2d = 1.0 / st.sum_sq, np.sqrt(2.0 * dim)
+        t, t_min = 0.95 * (st.max / sqrt2d), 0.5 * st.positive_min / sqrt2d
+        x = np.asarray(x0, dtype=np.float64).copy()
+        sig, bc = D.stress_bofz(rb, x, t, inv)
+        loops = 0
+        while True:
+            for _ in range(max_stress_loops):
+                bc = bc if bc is not None else D.bofz_bc(rb, x, t)
+                x, _ = D.cg_solve(rb, None, bc, x, 8, 1e-5, uniform_n=n)
+                new_sig, bc = D.stress_bofz(rb, x, t, inv)
+                done = sig > 0 and abs(sig - new_sig) / max(new_sig, 1e-30) < threshold
+                sig = new_sig
+                if done:
+                    break
+            loops += 1
+            if t == 0.0 or loops >= max_temp_loops:
+                return x, sig
+            t *= 0.95
+            if t < t_min:
+                t = 0.0
+            bc = None
+
+
+@pytest.mark.parametrize("stress_loops,threshold", [(1, 1e-4), (3, 1e-4), (4, 5e-2)])
+def test_fused_anneal_equals_unfused_schedule(spark, stress_loops, threshold):
+    """Fusing the next temperature's B(Z)·Z into a loop's last pass changes
+    no value, whether a loop exhausts its stress loops or breaks early on
+    convergence (the 5e-2 threshold breaks early)."""
+    import pandas as pd
+
+    rng = np.random.RandomState(11)
+    n = 40
+    pts = rng.standard_normal((n, 5))
+    pdf = pd.DataFrame({"point_id": np.arange(n, dtype=np.int64), "vec": list(pts)})
+    pts_df = spark.createDataFrame(pdf, "point_id long, vec array<double>")
+    fb = D.damds_blocks_from_points(spark, pts_df, n_points=n, n_blocks=4)
+    x0 = rng.uniform(-0.5, 0.5, (n, 3))
+    got = D.damds(fb, n, max_temp_loops=4, max_stress_loops=stress_loops,
+                  stress_threshold=threshold, uniform_weights=True, x0=x0)
+    want_x, want_sig = _unfused_anneal(fb, n, 3, 4, stress_loops, threshold, x0)
+    assert np.array_equal(got.points, want_x)
+    assert got.stress == want_sig
+    if threshold > 1e-3:  # a temperature loop broke early on convergence
+        assert got.stress_iters < 4 * stress_loops
 
 
 def test_anneal_blocks_released_on_return_and_raise(spark, blocks_df):

@@ -22,8 +22,10 @@ PKG = ROOT / "flink_mm_spark"
 # the one stream outside the runner: default trigger, polled by row count
 STREAM_SCAN_ENTRY = ("sources/datasource.py", "binmatrix_stream_scan")
 # _ONL_CKPT_CACHE maps an sf dir to a finished run's checkpoint (a path, not
-# a Spark resource) for the compaction entry
-ALLOWED_CACHES = {"_ONL_CKPT_CACHE"}
+# a Spark resource) for the compaction entry; _SCAN_CACHE holds the live
+# session's resolved (unpersisted) table scans, dropped when another session
+# reads; _BROADCAST_THRESHOLD_CACHE holds one int per live SparkContext
+ALLOWED_CACHES = {"_ONL_CKPT_CACHE", "_SCAN_CACHE", "_BROADCAST_THRESHOLD_CACHE"}
 
 
 def _modules():

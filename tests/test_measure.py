@@ -98,5 +98,6 @@ def test_shuffle_reads_bytes_from_the_event_log():
     rows = [json.loads(ln) for ln in proc.stdout.splitlines() if ln.startswith("{")]
     assert [r["query"] for r in rows] == ["pricing_summary", "fact_join_shuffle_baseline"]
     assert all(isinstance(r["shuffle_mb"], float) for r in rows)
+    assert all(0 < r["jobs"] <= r["tasks"] for r in rows)
     # the broadcast-free fact join shuffles both tables
     assert rows[1]["shuffle_mb"] > 0
