@@ -635,16 +635,24 @@ def _stripes(batches: Iterator[pd.DataFrame], pv: np.ndarray):
             yield int(row.block_id), start, nrows, np.sqrt(np.maximum(d2, 0.0))
 
 
-def _stripe_max(specs: DataFrame, pv: np.ndarray) -> float:
-    """The largest distance in the stripes of the placed ``specs`` against
-    the gathered points ``pv``: the per-block maxima are collected and
-    reduced on the driver (no aggregate exchange for a handful of rows)."""
+def _stripe_max(
+    spark: SparkSession, specs: list[tuple[int, int, int]], pv: np.ndarray
+) -> float:
+    """The largest distance in the stripes of the row-block ``specs``
+    against the gathered points ``pv``, in one narrow job: a max needs no
+    placement, so the specs are looked up by index over ``spark.range``
+    (no exchange, no AQE re-plan), and the per-block maxima are collected
+    and reduced on the driver (no aggregate exchange for a handful of rows)."""
+    cols = ["block_id", "start", "block_rows"]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for *_, d in _stripes(batches, pv):
+        rows = (pd.DataFrame([specs[i] for i in b["id"]], columns=cols) for b in batches)
+        for *_, d in _stripes(rows, pv):
             yield pd.DataFrame({"cmax": [float(d.max()) if d.size else 0.0]})
 
-    return max((r[0] for r in specs.mapInPandas(kernel, "cmax double").collect()), default=0.0)
+    parts = max(1, min(len(specs), spark.sparkContext.defaultParallelism))
+    ids = spark.range(0, len(specs), 1, parts)
+    return max((r[0] for r in ids.mapInPandas(kernel, "cmax double").collect()), default=0.0)
 
 
 def _quantized_blocks(specs: DataFrame, pv: np.ndarray, scale: float, n_points: int) -> DataFrame:
@@ -672,16 +680,16 @@ def damds_blocks_from_points(
 
     The builder's kernels above with the scale set to the global max
     (damds/DAMDSUtils.java:8-9 semantics, ``quantize_distances``): one
-    gather of the points, one max pass over the placed spec table (its one
-    exchange), and a lazy quantize pass that ``damds`` runs once into its
-    decoded blocks. Driver memory: the N×d matrix, which rides in the
+    gather of the points, one narrow max pass (``_stripe_max``), and a lazy
+    quantize pass over the placed spec table (its one exchange) that
+    ``damds`` runs once into its decoded blocks. Driver memory: the N×d matrix, which rides in the
     kernels' closures, and one scalar. ``points[id_col]`` must be exactly
     0..n_points-1 (row index); other ids fail the build.
     """
     pts = points.select(F.col(id_col).alias("point_id"), F.col(vec_col).alias("vec"))
     pv = _gather_points(pts, 0, n_points, n_blocks)
-    specs = _placed_specs(spark, split_rows(n_points, n_blocks))
-    return _quantized_blocks(specs, pv, _stripe_max(specs, pv), n_points)
+    specs = split_rows(n_points, n_blocks)
+    return _quantized_blocks(_placed_specs(spark, specs), pv, _stripe_max(spark, specs, pv), n_points)
 
 
 class IncrementalDistanceBlocks:
@@ -743,10 +751,9 @@ class IncrementalDistanceBlocks:
         pv = new_pts if self.points is None else np.vstack([self.points, new_pts])
         new_specs = [(self.n_blk + i, n_old + s, nr) for i, s, nr in split_rows(b, n_sub)]
         specs = self.specs + new_specs
-        fresh = _placed_specs(spark, new_specs)
         # the new rows' stripes contain every new cell (new×all; old×new is
         # its transpose), so their max decides whether the scale grows
-        scale = max(self.scale, _stripe_max(fresh, pv))
+        scale = max(self.scale, _stripe_max(spark, new_specs, pv))
 
         # scale == 0 (all-identical corpus so far) also rebuilds: the append
         # quantizer divides by scale, and the degenerate state is all-zero
@@ -775,7 +782,7 @@ class IncrementalDistanceBlocks:
                             int(row.block_id), start, nrows, n_new, np.hstack([old, q_app])
                         )
 
-            fresh_blocks = _quantized_blocks(fresh, pv, scale, n_new)
+            fresh_blocks = _quantized_blocks(_placed_specs(spark, new_specs), pv, scale, n_new)
             blocks = self.blocks.mapInPandas(extend, DAMDS_BLOCK_SCHEMA).unionByName(fresh_blocks)
             mode = "append"
 
